@@ -29,7 +29,7 @@ object Tables {
     * than adding one. */
   private def splitCompensated(s: SparkSession, raw: DataFrame,
                                key: String): DataFrame = {
-    val target = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val target = graft.functions.Fns.shufflePartitions(s)
     if (raw.rdd.getNumPartitions < target) raw.repartition(target, col(key))
     else raw
   }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scalar feature-store functions, all pure `functions._` compositions
@@ -22,9 +22,14 @@ object Fns {
     * already scales with its cluster — so this is not a local-mode
     * constant. */
   def pinnedRepartition(df: DataFrame, cols: Column*): DataFrame =
-    df.repartition(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt,
-      cols: _*)
+    df.repartition(shufflePartitions(df.sparkSession), cols: _*)
+
+  /** The session's `spark.sql.shuffle.partitions` as a count. A value
+    * that is not a number (`auto` on some platforms) falls back to the
+    * cluster's default parallelism instead of throwing. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions", "200").toIntOption
+      .getOrElse(spark.sparkContext.defaultParallelism)
 
   /** Deterministic 31-bit hash of an md5 hex prefix — the reference's
     * schema/categorical hash: `int(md5(key)[:8], 16) % 2^31`.

@@ -882,20 +882,41 @@ object VersionedStore {
         case _: NumericType | _: TimestampType => true
         case _ => false
       })).map(_.name).toSeq
-    val updBounds: Map[String, (Double, Double)] =
-      if (prunableKeys.isEmpty) Map.empty
-      else {
-        val aggs = prunableKeys.flatMap(k => Seq(
-          min(col(k).cast("double")).as(s"mn_$k"),
-          max(col(k).cast("double")).as(s"mx_$k")))
-        val r = updates.agg(aggs.head, aggs.tail: _*).head()
-        prunableKeys.zipWithIndex.collect {
-          case (k, i) if !r.isNullAt(2 * i) =>
-            // widened one ulp each way, mirroring the footer stats
-            k -> (Math.nextDown(r.getDouble(2 * i)),
-                  Math.nextUp(r.getDouble(2 * i + 1)))
-        }.toMap
-      }
+    // String merge keys prune too, against the manifest's strStats:
+    // parquet STRING footer stats and Spark's min/max on strings both
+    // order by unsigned UTF-8 byte comparison, so file [min, max]
+    // ranges and update bounds live in one total order. Bounds are
+    // exact update values (no ulp widening needed — the comparison is
+    // exact).
+    val strKeys = updates.schema.fields
+      .filter(f => keys.contains(f.name) &&
+        f.dataType == org.apache.spark.sql.types.StringType)
+      .map(_.name).toSeq
+    // every key's bounds in ONE aggregate: numeric pairs first, then
+    // string pairs
+    val aggs = prunableKeys.flatMap(k =>
+        Seq(min(col(k).cast("double")), max(col(k).cast("double")))) ++
+      strKeys.flatMap(k => Seq(min(col(k)), max(col(k))))
+    val bounds =
+      if (aggs.isEmpty) None
+      else Some(updates.agg(aggs.head, aggs.tail: _*).head())
+    val updBounds: Map[String, (Double, Double)] = bounds.map { r =>
+      prunableKeys.zipWithIndex.collect {
+        case (k, i) if !r.isNullAt(2 * i) =>
+          // widened one ulp each way, mirroring the footer stats
+          k -> (Math.nextDown(r.getDouble(2 * i)),
+                Math.nextUp(r.getDouble(2 * i + 1)))
+      }.toMap
+    }.getOrElse(Map.empty)
+    def utf8(s: String): Array[Byte] =
+      s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val strBounds: Map[String, (Array[Byte], Array[Byte])] = bounds.map { r =>
+      val at = 2 * prunableKeys.size
+      strKeys.zipWithIndex.collect {
+        case (k, i) if !r.isNullAt(at + 2 * i) =>
+          k -> (utf8(r.getString(at + 2 * i)), utf8(r.getString(at + 2 * i + 1)))
+      }.toMap
+    }.getOrElse(Map.empty)
     // EXACT value sets for low-cardinality prunable keys: a batch
     // touching buckets {0, 31} has range [0, 31] — which intersects
     // every file — but its value SET misses every file strictly
@@ -910,32 +931,10 @@ object VersionedStore {
           .collect().map(_.getDouble(0))
         if (vs.length > setCap) None else Some(k -> vs.sorted)
       }.toMap
-    // String merge keys prune too, against the manifest's strStats:
-    // parquet STRING footer stats and Spark's min/max on strings both
-    // order by unsigned UTF-8 byte comparison, so file [min, max]
-    // ranges and update bounds live in one total order. Bounds are
-    // exact update values (no ulp widening needed — the comparison is
-    // exact); the capped exact value set carries scattered-key
-    // batches past files strictly between their values.
+    // the capped exact value set of a string key carries
+    // scattered-key batches past files strictly between their values
     def bCmp(a: Array[Byte], b: Array[Byte]): Int =
       java.util.Arrays.compareUnsigned(a, b)
-    def utf8(s: String): Array[Byte] =
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val strKeys = updates.schema.fields
-      .filter(f => keys.contains(f.name) &&
-        f.dataType == org.apache.spark.sql.types.StringType)
-      .map(_.name).toSeq
-    val strBounds: Map[String, (Array[Byte], Array[Byte])] =
-      if (strKeys.isEmpty) Map.empty
-      else {
-        val aggs = strKeys.flatMap(k => Seq(
-          min(col(k)).as(s"mn_$k"), max(col(k)).as(s"mx_$k")))
-        val r = updates.agg(aggs.head, aggs.tail: _*).head()
-        strKeys.zipWithIndex.collect {
-          case (k, i) if !r.isNullAt(2 * i) =>
-            k -> (utf8(r.getString(2 * i)), utf8(r.getString(2 * i + 1)))
-        }.toMap
-      }
     val strValueSets: Map[String, Array[Array[Byte]]] =
       strBounds.keys.flatMap { k =>
         val vs = updates.select(col(k).as("v"))

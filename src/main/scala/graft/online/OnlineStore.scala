@@ -125,26 +125,51 @@ object OnlineStore {
     VersionedStore.compact(spark, root, numFiles, sortBy = Seq(kb))
   }
 
-  /** Point-read batch multi-get from a [[publishSnapshot]] table: the
-    * requested keys' buckets (computed with the snapshot's own hash
-    * config) prune the snapshot read at the FILE level via
-    * VersionedStore.readValues, then the usual broadcast semi-join
-    * keeps exactly the requested entities. Result contract matches
-    * [[batchLookup]] over the published frame.
+  /** Point-read batch multi-get from a [[publishSnapshot]] table.
+    *
+    * The keys are resolved on the driver: one collect of (key, bucket)
+    * pairs, with the bucket hashed by the snapshot's own config. Over
+    * a local key batch Catalyst folds that projection into the local
+    * relation and the collect runs no Spark job; over a distributed
+    * key frame it runs that frame's jobs once. The distinct bucket set
+    * prunes the snapshot read at the FILE level
+    * (VersionedStore.readValues), and a left-semi join against a
+    * broadcast local relation of the collected keys keeps exactly the
+    * requested entities — duplicate keys match once, null keys never.
+    * A local batch therefore costs two jobs: the broadcast and the
+    * pruned scan. The key set is what is broadcast, never the snapshot
+    * (README "Scale design"); collecting it first adds no driver
+    * memory, since the broadcast pulls every key to the driver anyway.
+    *
+    * The hash config and the pruned read are pinned to ONE version: a
+    * republish with another bucket count landing between them would
+    * otherwise hash with one config and prune another's files.
+    *
+    * Result contract matches [[batchLookup]] over the published frame:
+    * the key column first, the bucket column dropped.
     */
   def pointLookup(spark: SparkSession, root: String, keys: DataFrame)
   : DataFrame = {
     import graft.offline.VersionedStore
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val version = VersionedStore.latestVersion(spark, root)
+    require(version >= 0, s"no committed version under $root")
     val (kb, keyCol, nBuckets) =
-      parseBucketCol(VersionedStore.schemaOf(spark, root))
-    val wanted = keys.select(col(keyCol)).distinct().localCheckpoint()
-    val buckets = wanted.select(
-        pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong))
-          .as("b"))
-      .distinct().collect().map(_.getLong(0).toDouble).toSeq
-    VersionedStore.readValues(spark, root, kb, buckets)
-      .join(broadcast(wanted), Seq(keyCol))
-      .drop(kb)
+      parseBucketCol(VersionedStore.schemaOf(spark, root, version))
+    val resolved = keys.select(col(keyCol),
+        pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong)))
+    val keyField = resolved.schema.head.copy(name = keyCol)
+    val pairs = resolved.collect().filterNot(_.isNullAt(0))
+    val buckets = pairs.map(_.getLong(1).toDouble).distinct.toSeq
+    val wanted = spark.createDataFrame(
+      java.util.Arrays.asList(pairs.map(r => Row(r.get(0))): _*),
+      StructType(Seq(keyField)))
+    val hits = VersionedStore.readValues(spark, root, kb, buckets,
+        versionAsOf = version)
+      .join(broadcast(wanted), Seq(keyCol), "left_semi")
+    hits.select(col(keyCol) +:
+      hits.columns.filterNot(c => c == keyCol || c == kb).map(col): _*)
   }
 
   /** Batch multi-get with the reference's staleness warnings

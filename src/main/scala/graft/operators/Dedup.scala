@@ -2020,6 +2020,27 @@ object Dedup {
         greatest(col("id_a"), col("id_b")).as("doc_b"), col("cosine"))
   }
 
+  /** `cosine = round(raw, 6); keep cosine >= threshold` with a cheap
+    * conservative prefilter, so the per-pair BigDecimal `round`
+    * (Spark's double round builds a BigDecimal from Double.toString
+    * PER ROW) runs only on pairs that can possibly survive:
+    * round(x, 6) moves x by at most 5e-7 plus a half-ulp, so any
+    * pair with raw < threshold − 1e-6 cannot round to ≥ threshold.
+    * The final filter is the UNCHANGED exact predicate (Catalyst
+    * combines the two filters keeping the cheap one first, and And
+    * short-circuits), so the kept pairs and their cosine values are
+    * identical — the prefilter only skips the rounding work on the
+    * ~all pairs nowhere near the threshold (the pair scan is
+    * quadratic; survivors are not). */
+  private[operators] def roundedCosineAtLeast(pairs: DataFrame,
+                                              raw: Column,
+                                              threshold: Double)
+  : DataFrame =
+    pairs
+      .filter(raw >= threshold - 1e-6)
+      .withColumn("cosine", round(raw, 6))
+      .filter(col("cosine") >= threshold)
+
   /** THE triangular-blocked SELF-pairing — one code path for every
     * all-pairs vector scan (embeddingCosine, embeddingSemdedup and
     * its incremental batch, Kmeans.semdedupPairs — four former
@@ -2042,27 +2063,6 @@ object Dedup {
     * inputs pass nBlocks = 1 to opt out (the measured default-regime
     * overhead at probe scale is the scheduling floor, ~0.5 s).
     */
-  /** `cosine = round(raw, 6); keep cosine >= threshold` with a cheap
-    * conservative prefilter, so the per-pair BigDecimal `round`
-    * (Spark's double round builds a BigDecimal from Double.toString
-    * PER ROW) runs only on pairs that can possibly survive:
-    * round(x, 6) moves x by at most 5e-7 plus a half-ulp, so any
-    * pair with raw < threshold − 1e-6 cannot round to ≥ threshold.
-    * The final filter is the UNCHANGED exact predicate (Catalyst
-    * combines the two filters keeping the cheap one first, and And
-    * short-circuits), so the kept pairs and their cosine values are
-    * identical — the prefilter only skips the rounding work on the
-    * ~all pairs nowhere near the threshold (the pair scan is
-    * quadratic; survivors are not). */
-  private[operators] def roundedCosineAtLeast(pairs: DataFrame,
-                                              raw: Column,
-                                              threshold: Double)
-  : DataFrame =
-    pairs
-      .filter(raw >= threshold - 1e-6)
-      .withColumn("cosine", round(raw, 6))
-      .filter(col("cosine") >= threshold)
-
   private[graft] def blockedSelfPairs(df: DataFrame, keyCols: Seq[String],
                                       nBlocks: Int): DataFrame = {
     require(nBlocks >= 1)

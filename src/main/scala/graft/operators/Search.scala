@@ -55,7 +55,7 @@ object Search {
     * aggregates (round-15 RetrievalProbe2 variant C).
     *
     * Fast path: `floor(x·1e6 + 0.5)` in pure codegen double/long
-    * arithmetic. It is taken only when BOTH (a) x·1e6 < 1e10 and
+    * arithmetic. It is taken only when (a) 0 ≤ x·1e6 < 1e10 and
     * (b) the fractional part of x·1e6 is at least 1e-3 away from the
     * 0.5 half-up tie; otherwise the exact BigDecimal expression runs
     * (`when` short-circuits, so the slow branch never evaluates on
@@ -74,7 +74,7 @@ object Search {
     // floor() on a double returns LongType; the subtraction promotes
     // back to double, so tie is the distance to the half-up boundary
     val tie = abs(xm - floor(xm) - 0.5)
-    when(xm < 1e10 && tie > 1e-3, floor(xm + 0.5))
+    when(xm >= 0 && xm < 1e10 && tie > 1e-3, floor(xm + 0.5))
       .otherwise((round(x, 6) * 1e6 + 0.5).cast("long"))
   }
 

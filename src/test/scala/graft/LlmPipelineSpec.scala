@@ -2222,6 +2222,23 @@ class LlmPipelineSpec extends AnyFunSuite {
     assert(byId(1L) == c1, "survivor text must be the line-cleaned text")
   }
 
+  test("Curate.corpus: exact copies that line dedup empties do not survive") {
+    import graft.operators.Curate
+    val boiler = "subscribe now for updates\nfollow us on social media"
+    val docs = Seq(
+      // every line of 1-3 is in >= lineMaxDf docs: line dedup empties
+      // all three copies
+      (1L, boiler), (2L, boiler), (3L, boiler),
+      (4L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (5L, "one two three four five six seven eight\nfollow us on social media")
+    ).toDF("doc_id", "text")
+    val out = Curate.corpus(docs, "doc_id", "text", None,
+        Curate.CurateConfig(quality = None, lineMaxDf = 3))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(out.keySet == Set(4L, 5L), s"got ${out.keySet}")
+    assert(out(5L) == "one two three four five six seven eight")
+  }
+
   test("clusterSizeProfile: size histogram over membership") {
     val cl = Seq((1L, 1L), (2L, 1L), (3L, 1L), // size 3
       (4L, 4L), (5L, 4L),                      // size 2

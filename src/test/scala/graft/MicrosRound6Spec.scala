@@ -7,12 +7,13 @@ import graft.operators.Search
 
 /** [[Search.micros6]] — the BigDecimal-free fast path for
   * `(round(x, 6) * 1e6 + 0.5).cast(long)` — must be VALUE-IDENTICAL
-  * to that reference expression everywhere in its non-negative
-  * domain. The sweep concentrates on the only place the fast path
-  * could diverge: the half-up tie neighborhood (x·1e6 near N + 0.5),
-  * including exact binary-fraction ties, the ±1e-3 guard-band edges,
-  * and the large-x region where the fast path must defer to the
-  * BigDecimal branch (x·1e6 ≥ 1e10).
+  * to that reference expression everywhere; negative inputs take the
+  * BigDecimal branch, whose cast truncates toward zero where the fast
+  * path's floor would not. The sweep concentrates on the only place
+  * the fast path could diverge: the half-up tie neighborhood (x·1e6
+  * near N + 0.5), including exact binary-fraction ties, the ±1e-3
+  * guard-band edges, and the large-x region where the fast path must
+  * defer to the BigDecimal branch (x·1e6 ≥ 1e10).
   */
 class MicrosRound6Spec extends AnyFunSuite {
 
@@ -62,7 +63,8 @@ class MicrosRound6Spec extends AnyFunSuite {
     val xs = Seq.fill(20000)(rnd.nextDouble()) ++
       Seq.fill(20000)(rnd.nextDouble() * 1e3) ++
       Seq.fill(10000)(rnd.nextDouble() * 1e5) ++          // fast-path cap
-      Seq.fill(10000)(1e4 + rnd.nextDouble() * 1e9)       // fallback region
+      Seq.fill(10000)(1e4 + rnd.nextDouble() * 1e9) ++    // fallback region
+      Seq.fill(5000)(-rnd.nextDouble() * 1e3)             // negatives
     check(xs, "random")
   }
 

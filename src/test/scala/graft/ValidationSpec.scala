@@ -66,11 +66,10 @@ class ValidationSpec extends AnyFunSuite {
     assert(out("u1").getAs[Boolean]("warn") && out("u2").getAs[Boolean]("warn"))
   }
 
-  test("pointLookup: file-pruned multi-get equals the broadcast batch lookup") {
+  // one published snapshot shared by the pointLookup tests: 512
+  // entities over 32 buckets / 16 files
+  private lazy val shapeSnapshot = {
     import graft.online.OnlineStore
-    import graft.offline.VersionedStore
-    // 512 entities over 32 buckets / 16 files -> a 3-key batch must
-    // open a strict subset of files and return exactly batchLookup
     val vectors = (0 until 512)
       .map(i => (s"u$i", i.toDouble, i * 2.0))
       .toDF("entity_id", "f_a", "f_b")
@@ -78,14 +77,29 @@ class ValidationSpec extends AnyFunSuite {
       .createTempDirectory("pointlk").toString + "/snap"
     OnlineStore.publishSnapshot(vectors, root, "entity_id",
       nBuckets = 32, numFiles = 16)
+    (vectors, root)
+  }
+
+  test("pointLookup: file-pruned multi-get equals the broadcast batch lookup") {
+    import graft.online.OnlineStore
+    import graft.offline.VersionedStore
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    // a 3-key batch must open a strict subset of files — on a fresh
+    // publish no more than the buckets it touches — and return
+    // exactly batchLookup
+    val (vectors, root) = shapeSnapshot
     val allFiles = VersionedStore.read(spark, root).inputFiles.toSet
     assert(allFiles.size >= 8, s"expected ~16 files, got ${allFiles.size}")
     val keys = Seq("u7", "u300", "u999").toDF("entity_id") // u999 missing
     val served = OnlineStore.pointLookup(spark, root, keys)
     val opened = served.inputFiles.toSet
     assert(opened.nonEmpty && opened.subsetOf(allFiles))
-    assert(opened.size < allFiles.size,
-      s"3-key batch must prune: opened ${opened.size}/${allFiles.size}")
+    val buckets = keys.select(
+        pmod(xxhash64(col("entity_id").cast("string")), lit(32L)))
+      .distinct().count()
+    assert(opened.size <= buckets,
+      s"3-key batch must prune: opened ${opened.size}/${allFiles.size} " +
+        s"files for $buckets buckets")
     val expected = OnlineStore.batchLookup(vectors, keys)
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
       .toSet
@@ -93,6 +107,51 @@ class ValidationSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
       .toSet == expected, "point lookup must equal the broadcast lookup")
     assert(expected.size == 2, "missing key yields no row")
+  }
+
+  test("pointLookup: a 3-key local batch runs at most two Spark jobs") {
+    import graft.online.OnlineStore
+    val (_, root) = shapeSnapshot
+    val keys = Seq("u7", "u300", "u999").toDF("entity_id")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rows =
+      try {
+        val r = OnlineStore.pointLookup(spark, root, keys).collect()
+        org.apache.spark.GraftSparkTestAccess
+          .waitListenerBusEmpty(spark.sparkContext, 30000)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rows.map(_.getString(0)).toSet == Set("u7", "u300"))
+    assert(jobs.get() <= 2,
+      s"a local key batch must cost the broadcast and the scan, ran ${jobs.get()} jobs")
+  }
+
+  test("pointLookup: duplicate, null, empty and distributed key batches equal batchLookup") {
+    import graft.online.OnlineStore
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val (vectors, root) = shapeSnapshot
+    val batches = Seq(
+      "duplicates" -> Seq("u7", "u7", "u300", "u7", "u999").toDF("entity_id"),
+      "null" -> Seq(Some("u7"), None, Some("u42")).toDF("entity_id"),
+      "empty" -> Seq.empty[String].toDF("entity_id"),
+      "distributed" -> spark.range(0, 600, 7)
+        .select(concat(lit("u"), col("id")).as("entity_id")))
+    batches.foreach { case (name, keys) =>
+      val got = OnlineStore.pointLookup(spark, root, keys)
+      val want = OnlineStore.batchLookup(vectors, keys)
+      assert(got.columns.toSeq == want.columns.toSeq &&
+        got.columns.head == "entity_id",
+        s"$name: columns ${got.columns.mkString(",")}")
+      val g = got.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+      val w = want.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+      assert(g == w, s"$name: pointLookup must equal batchLookup")
+    }
   }
 
   test("upsertSnapshot: merge refresh serves new values; compact restores pruning") {
