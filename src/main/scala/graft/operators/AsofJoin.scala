@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Point-in-time (ASOF) join: for each label event, the latest value of
   * each feature at-or-before the label's event time.
@@ -14,11 +14,13 @@ import org.apache.spark.sql.functions._
   * floorEntry per label — single-node, O(history) driver memory.
   *
   * Spark-first design: UNION the label stream into the feature stream,
-  * then one window pass per entity ordered by (ts, kind, seq) taking
-  * `last(value, ignoreNulls)` per feature column. One shuffle on the
-  * entity key, no label×history join blowup, streaming-friendly sort
-  * within partitions — this survives 100 TB because each entity's
-  * history is processed once, and the lookback filter prunes
+  * hash-shuffle once on the entity, sort each partition by (entity,
+  * ts, kind, label_id, fname, fval), then ONE streaming pass per
+  * entity that keeps the latest non-null value of each feature and
+  * emits a row only for labels. No label×history join blowup, and a
+  * task holds O(features) state: the sort spills like any external
+  * sort, and nothing buffers an entity's history, so a hot (Zipf)
+  * entity costs sort work, not memory. The lookback filter prunes
   * event_time partitions before the shuffle.
   */
 object AsofJoin {
@@ -42,6 +44,8 @@ object AsofJoin {
                   lookbackDays: Int = 180,
                   labelWindowStart: Option[java.sql.Timestamp] = None)
   : DataFrame = {
+    require(featureNames.distinct.size == featureNames.size,
+      s"duplicate feature names: ${featureNames.diff(featureNames.distinct)}")
     val lookback = expr(s"INTERVAL $lookbackDays DAYS")
     val pruned = labelWindowStart match {
       case Some(start) =>
@@ -72,19 +76,37 @@ object AsofJoin {
     // reference's floorEntry (<=) semantics. fname/fval complete the
     // ordering so equal-timestamp duplicate feature rows resolve
     // deterministically (greatest value wins) on any cluster layout.
-    val w = Window.partitionBy("entity_id")
-      .orderBy(col("ts"), col("kind"), col("label_id"),
-               col("fname"), col("fval"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withAsof = featureNames.foldLeft(unioned) { (df, f) =>
-      df.withColumn(s"f_$f",
-        last(when(col("fname") === f, col("fval")), ignoreNulls = true)
-          .over(w))
+    val in = unioned.schema
+    val outSchema = StructType(
+      Seq(in("entity_id"), in("label_id"), in("label")) ++
+      featureNames.map(f => StructField(s"f_$f", DoubleType, nullable = false)))
+    unioned.groupBy(col("entity_id"))
+      .as[Row, Row](Encoders.row(StructType(Seq(in("entity_id")))),
+        Encoders.row(in))
+      .flatMapSortedGroups(col("ts"), col("kind"), col("label_id"),
+        col("fname"), col("fval"))(
+        scanEntity(featureNames.zipWithIndex.toMap, default, in) _)(
+        Encoders.row(outSchema))
+  }
+
+  /** The per-entity pass over one entity's rows in ASOF order: the
+    * running latest non-null value of each feature, emitted (default
+    * where unseen) at every label row. */
+  private def scanEntity(index: Map[String, Int], default: Double,
+                         in: StructType)(key: Row, rows: Iterator[Row])
+  : Iterator[Row] = {
+    val (kind, labelId, label, fname, fval) = (in.fieldIndex("kind"),
+      in.fieldIndex("label_id"), in.fieldIndex("label"),
+      in.fieldIndex("fname"), in.fieldIndex("fval"))
+    val latest = Array.fill(index.size)(default)
+    rows.flatMap { r =>
+      if (r.getInt(kind) == 0) {
+        if (!r.isNullAt(fval)) latest(index(r.getString(fname))) = r.getDouble(fval)
+        Iterator.empty
+      } else {
+        Iterator.single(Row.fromSeq(
+          Seq(key.get(0), r.get(labelId), r.get(label)) ++ latest))
+      }
     }
-    val outCols =
-      Seq(col("entity_id"), col("label_id"), col("label")) ++
-      featureNames.map(f =>
-        coalesce(col(s"f_$f"), lit(default)).as(s"f_$f"))
-    withAsof.filter(col("kind") === 1).select(outCols: _*)
   }
 }

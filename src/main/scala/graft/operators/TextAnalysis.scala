@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Fns
+import graft.functions.{Fns, TextStats}
 
 /** Text analysis for training-data curation: quality scoring,
   * heuristic language ID, token counting, and document
@@ -18,30 +18,46 @@ object TextAnalysis {
   private def countIn(ws: Column, vals: Seq[String]): Column =
     size(filter(ws, w => vals.map(w === _).reduce(_ || _))).cast("long")
 
+  /** One [[TextStats]] projection — doc_id, n_chars and the `ts`
+    * struct, plus `extra` columns — from which [[quality]],
+    * [[repetitionMetrics]] and both classifiers derive every word
+    * signal, so each signal has exactly one definition. */
+  private def withTextStats(docs: DataFrame, idCol: String, textCol: String,
+                            extra: Column*): DataFrame =
+    docs.select((Seq(col(idCol).as("doc_id"),
+      length(col(textCol)).cast("long").as("n_chars"),
+      TextStats.textStats(col(textCol)).as("ts")) ++ extra): _*)
+
+  // The signal formulas over a withTextStats frame. Ratios are plain
+  // double divisions of exact longs, rounded 6dp. NULL text gives a NULL
+  // ts: its size/ratio signals are NULL, its repetition ratios 0.
+  private def nWords: Column = col("ts.n_words")
+  private def avgWordLen: Column =
+    round((col("n_chars") - (nWords - 1)) / nWords, 6)
+  private def stopwordRatio: Column = round(col("ts.stop_hits") / nWords, 6)
+  private def alphaRatio: Column = round(col("ts.alphas") / col("n_chars"), 6)
+  private def topWordRatio: Column =
+    round(coalesce(col("ts.top_word") / nWords, lit(0.0)), 6)
+  private def distinctWordRatio: Column =
+    round(coalesce(col("ts.n_distinct") / nWords, lit(0.0)), 6)
+  private def topBigramRatio: Column = round(coalesce(
+    when(col("ts.n_bigrams") > 0, col("ts.top_bigram") / col("ts.n_bigrams")),
+    lit(0.0)), 6)
+
   /** Per-document quality signals: size, word stats, stopword /
-    * digit / alpha ratios, and a composite score. Ratios are plain
-    * double divisions of exact longs → deterministic, rounded 6dp.
+    * digit / alpha ratios, and a composite score, computed per input
+    * row from one [[TextStats]] projection. Ratios are plain double
+    * divisions of exact longs → deterministic, rounded 6dp.
     */
-  def quality(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val ws = Fns.words(t)
-    docs.select(
-      col(idCol).as("doc_id"),
-      length(t).cast("long").as("n_chars"),
-      size(ws).cast("long").as("n_words"),
-      countIn(ws, Seq("the", "a")).as("stop_hits"),
-      size(regexp_extract_all(t, lit("[0-9]"), lit(0))).cast("long").as("digits"),
-      size(regexp_extract_all(t, lit("[a-z]"), lit(0))).cast("long").as("alphas"))
-      .withColumn("avg_word_len",
-        round((col("n_chars") - (col("n_words") - 1)) / col("n_words"), 6))
-      .withColumn("stopword_ratio", round(col("stop_hits") / col("n_words"), 6))
-      .withColumn("digit_ratio", round(col("digits") / col("n_chars"), 6))
-      .withColumn("alpha_ratio", round(col("alphas") / col("n_chars"), 6))
-      .withColumn("quality_score",
-        round(least(col("n_words") / lit(100.0), lit(1.0)) *
-              (lit(1.0) - col("stopword_ratio")), 6))
-      .drop("stop_hits", "digits", "alphas")
-  }
+  def quality(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    withTextStats(docs, idCol, textCol).select(
+      col("doc_id"), col("n_chars"), nWords.as("n_words"),
+      avgWordLen.as("avg_word_len"),
+      stopwordRatio.as("stopword_ratio"),
+      round(col("ts.digits") / col("n_chars"), 6).as("digit_ratio"),
+      alphaRatio.as("alpha_ratio"),
+      round(least(nWords / lit(100.0), lit(1.0)) * (lit(1.0) - stopwordRatio),
+        6).as("quality_score"))
 
   /** Heuristic language ID by per-language stopword hits with a
     * deterministic priority tie-break. (The synthetic corpus is
@@ -88,49 +104,21 @@ object TextAnalysis {
     *  - top_bigram_ratio: occurrences of the most frequent word
     *    bigram / total bigrams (the strongest loop detector).
     *
-    * Plan: two passes over the text — the word explode and the bigram
-    * explode are independent subtrees, each a codegen split-scan, plus
-    * a doc_id-only (column-pruned) spine scan so docs with
-    * unparseable/NULL text still get a row. Each explode feeds
-    * per-(doc, term) → per-doc aggregate pairs, all map-side
-    * combinable and keyed by doc_id, so the work is linear in corpus
-    * size and shuffles only (doc_id, term, count) rows. (Sharing one
-    * tokenized pass would mean either caching the corpus-sized token
-    * array or shuffling the full token stream through a window — both
-    * cost more than the second columnar scan.) Docs with no bigrams
-    * (or empty text) report ratio 0, not null.
+    * Plan: one narrow projection — [[TextStats]] counts words and
+    * bigrams by their bytes in a single pass per row, so there is no
+    * explode, no aggregate and no shuffle. Signals are computed per
+    * input ROW: they equal a per-doc_id explode + groupBy only when
+    * doc ids are unique (a duplicated id would have its rows' words
+    * pooled there). NULL text reports n_words 0 and ratio 0; docs with
+    * no bigrams report top_bigram_ratio 0, not null.
     */
   def repetitionMetrics(docs: DataFrame, idCol: String, textCol: String)
-  : DataFrame = {
-    val base = docs.select(col(idCol).as("doc_id"),
-      Fns.words(col(textCol)).as("ws"))
-    val wordCounts = base.select(col("doc_id"), explode(col("ws")).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-    val wordMetrics = wordCounts.groupBy("doc_id").agg(
-      sum("c").as("n_words"), max("c").as("top_word"),
-      count(lit(1)).as("n_distinct"))
-    // sequence(0, -1) counts DOWN — guard short docs to an empty array
-    val bigramArr = when(size(col("ws")) >= 2,
-      expr("transform(sequence(0, size(ws) - 2), " +
-        "i -> concat_ws(' ', ws[i], ws[i + 1]))"))
-      .otherwise(array().cast("array<string>"))
-    val bigramMetrics = base.select(col("doc_id"),
-        explode(bigramArr).as("b"))
-      .groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id").agg(
-        sum("c").as("n_bigrams"), max("c").as("top_bigram"))
-    docs.select(col(idCol).as("doc_id"))
-      .join(wordMetrics, Seq("doc_id"), "left_outer")
-      .join(bigramMetrics, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        round(coalesce(col("top_word") / col("n_words"), lit(0.0)), 6)
-          .as("top_word_ratio"),
-        round(coalesce(col("n_distinct") / col("n_words"), lit(0.0)), 6)
-          .as("distinct_word_ratio"),
-        round(coalesce(col("top_bigram") / col("n_bigrams"), lit(0.0)), 6)
-          .as("top_bigram_ratio"))
-  }
+  : DataFrame =
+    withTextStats(docs, idCol, textCol).select(col("doc_id"),
+      coalesce(nWords, lit(0L)).as("n_words"),
+      topWordRatio.as("top_word_ratio"),
+      distinctWordRatio.as("distinct_word_ratio"),
+      topBigramRatio.as("top_bigram_ratio"))
 
   /** CCNet-style unigram language-model quality score: each document's
     * mean word surprise, avg(-ln p(w)), under the corpus's own unigram
@@ -469,29 +457,33 @@ object TextAnalysis {
     * boolean plus the FIRST failing rule as `drop_reason` (fixed
     * evaluation order → deterministic attribution; null when kept).
     *
-    * All comparisons run on the component operators' ROUNDED outputs,
-    * so the decision is bit-reproducible across engines wherever the
-    * component oracles are. Plan: three linear corpus passes (quality;
-    * word + bigram explodes; lm explode+join), then doc_id equi-joins
-    * of per-doc aggregates — no all-pairs work, map-side combinable
-    * throughout, same scale shape as the components. Docs whose
-    * signals are missing (NULL text never reaches the lm explode)
-    * fail the word_count rule rather than passing silently.
+    * All comparisons run on the same rounded signals the component
+    * operators output, so the decision is bit-reproducible across
+    * engines wherever the component oracles are. Plan: the size,
+    * ratio and repetition signals come from ONE narrow [[TextStats]]
+    * projection (per input row; equal to the components' per-doc_id
+    * aggregates when doc ids are unique); only [[lmScore]], which
+    * needs corpus-wide word counts, is computed separately and joined
+    * on doc_id. Docs whose signals are missing (NULL text never
+    * reaches the lm explode) fail the word_count rule rather than
+    * passing silently.
     */
   def qualityClassifier(docs: DataFrame, idCol: String, textCol: String,
                         th: QualityThresholds = QualityThresholds())
   : DataFrame = {
-    val q = quality(docs, idCol, textCol)
-      .select("doc_id", "n_words", "avg_word_len", "stopword_ratio",
-        "alpha_ratio")
-    val r = repetitionMetrics(docs, idCol, textCol)
-      .select("doc_id", "top_word_ratio", "distinct_word_ratio",
-        "top_bigram_ratio")
+    val sig = withTextStats(docs, idCol, textCol).select(signalCols: _*)
     val l = lmScore(docs, idCol, textCol).select("doc_id", "lm_score")
-    attachDecision(
-      q.join(r, Seq("doc_id"), "left_outer")
-        .join(l, Seq("doc_id"), "left_outer"), th)
+    attachDecision(sig.join(l, Seq("doc_id"), "left_outer"), th)
   }
+
+  /** The classifier signals except lm_score, over a withTextStats
+    * frame — shared by the batch and frozen classifiers. */
+  private def signalCols: Seq[Column] = Seq(col("doc_id"),
+    nWords.as("n_words"), avgWordLen.as("avg_word_len"),
+    stopwordRatio.as("stopword_ratio"), alphaRatio.as("alpha_ratio"),
+    topWordRatio.as("top_word_ratio"),
+    distinctWordRatio.as("distinct_word_ratio"),
+    topBigramRatio.as("top_bigram_ratio"))
 
   /** The shared keep/drop CASE over identically-named signal columns —
     * one rule order for the batch and frozen classifiers, so the two
@@ -518,25 +510,6 @@ object TextAnalysis {
       .withColumn("keep", col("drop_reason").isNull)
   }
 
-  /** STREAMING-SAFE variant of [[qualityClassifier]]: the same policy
-    * as a pure per-row projection — no explode, no per-doc aggregation
-    * state, no shuffle — so it applies to a Structured Streaming
-    * source in append mode with ZERO state, the shape a production
-    * filter takes when new shards arrive continuously.
-    *
-    * The corpus-relative lm signal scores against a FROZEN vocabulary
-    * `(word -> count, totalTokens)` derived OFFLINE (the CCNet shape:
-    * the scoring model is a versioned artifact, not recomputed per
-    * shard); unseen words fall back to `oovCount`. The vocabulary
-    * inlines as a map literal, so size it like a model artifact
-    * (top-K words + OOV), not a full open vocabulary. Repetition
-    * signals compute per-row from the words array (sorted-run
-    * multiplicity, O(n log n) per doc — see [[maxMultiplicity]]). Signal formulas and
-    * rounding mirror the batch operators; the decision CASE is
-    * literally shared, so frozen(batch-vocab) == batch on every
-    * signal except lm_score's summation order (both round to 4dp —
-    * spec-proven equal on the gate corpus).
-    */
   /** Derive the frozen scoring artifact for
     * [[qualityClassifierFrozen]]: the corpus's `topK` words by count
     * plus the FULL corpus token total (the total covers every token,
@@ -557,28 +530,24 @@ object TextAnalysis {
     (top, total)
   }
 
-  /** Most-frequent-element multiplicity of a string-array column as
-    * the longest equal run of the SORTED array — value-identical to
-    * `array_max(transform(array_distinct(a), v -> size(filter(a,
-    * x -> x = v))))` (NULL on NULL/empty input like array_max over
-    * an empty transform) but O(n log n) per row instead of
-    * O(distinct · n): the round-15 A/B measured the bigram
-    * multiplicity scan 1.5 → 0.45 s at sf0.1, zero row diff.
+  /** STREAMING-SAFE variant of [[qualityClassifier]]: the same policy
+    * as a pure per-row projection — no explode, no per-doc aggregation
+    * state, no shuffle — so it applies to a Structured Streaming
+    * source in append mode with ZERO state, the shape a production
+    * filter takes when new shards arrive continuously.
     *
-    * PRECONDITION: array elements must be non-null. The old form's
-    * `x = v` filter drops null elements (counts them 0) while the
-    * sorted-run `<=>` would count a null run — current callers (words
-    * from Fns.words, bigrams from concat_ws over those words) can
-    * never produce null elements, but a future caller with nullable
-    * elements must null-guard before calling. */
-  private def maxMultiplicity(arr: String): Column =
-    expr(s"aggregate(array_sort($arr), " +
-      "named_struct('prev', cast(null as string), 'run', 0, 'mx', 0), " +
-      "(s, x) -> named_struct('prev', x, " +
-      "'run', IF(x <=> s.prev, s.run + 1, 1), " +
-      "'mx', greatest(s.mx, IF(x <=> s.prev, s.run + 1, 1))), " +
-      "s -> IF(s.mx = 0, cast(null as int), s.mx))")
-
+    * The corpus-relative lm signal scores against a FROZEN vocabulary
+    * `(word -> count, totalTokens)` derived OFFLINE (the CCNet shape:
+    * the scoring model is a versioned artifact, not recomputed per
+    * shard); unseen words fall back to `oovCount`. The vocabulary
+    * inlines as a map literal, so size it like a model artifact
+    * (top-K words + OOV), not a full open vocabulary. Every other
+    * signal comes from the same [[TextStats]] projection and formulas
+    * as the batch classifier, and the decision CASE is literally
+    * shared, so frozen(batch-vocab) == batch on every signal except
+    * lm_score's summation order (both round to 4dp — spec-proven
+    * equal on the gate corpus).
+    */
   def qualityClassifierFrozen(docs: DataFrame, idCol: String,
                               textCol: String, vocab: Map[String, Long],
                               totalTokens: Long, oovCount: Long = 1L,
@@ -588,38 +557,14 @@ object TextAnalysis {
     require(totalTokens > 0, "totalTokens must be positive")
     val t = col(textCol)
     val vocabMap = typedLit(vocab)
-    val base = docs.select(
-      col(idCol).as("doc_id"), t.as("_text"),
-      Fns.words(t).as("ws"),
-      length(t).cast("long").as("n_chars"),
-      size(Fns.words(t)).cast("long").as("n_words"),
-      countIn(Fns.words(t), Seq("the", "a")).as("stop_hits"),
-      size(regexp_extract_all(t, lit("[a-z]"), lit(0))).cast("long")
-        .as("alphas"))
-    val bg = when(size(col("ws")) >= 2,
-      expr("transform(sequence(0, size(ws) - 2), " +
-        "i -> concat_ws(' ', ws[i], ws[i + 1]))"))
-      .otherwise(array().cast("array<string>"))
-    val sig = base
-      .withColumn("avg_word_len",
-        round((col("n_chars") - (col("n_words") - 1)) / col("n_words"), 6))
-      .withColumn("stopword_ratio",
-        round(col("stop_hits") / col("n_words"), 6))
-      .withColumn("alpha_ratio", round(col("alphas") / col("n_chars"), 6))
-      .withColumn("top_word_ratio", round(coalesce(
-        maxMultiplicity("ws") / col("n_words"),
-        lit(0.0)), 6))
-      .withColumn("distinct_word_ratio", round(coalesce(
-        expr("size(array_distinct(ws))") / col("n_words"), lit(0.0)), 6))
-      .withColumn("bg", bg)
-      .withColumn("top_bigram_ratio", round(coalesce(
-        maxMultiplicity("bg") / size(col("bg")),
-        lit(0.0)), 6))
-      .withColumn("lm_score", round(
+    val sig = withTextStats(docs, idCol, textCol, t.as("_text"),
+        Fns.words(t).as("ws"))
+      .select(signalCols ++ Seq(col("_text"), round(
         aggregate(transform(col("ws"),
             w => -log(coalesce(element_at(vocabMap, w), lit(oovCount))
               / lit(totalTokens.toDouble))),
-          lit(0.0), (acc, x) => acc + x) / size(col("ws")), 4))
+          lit(0.0), (acc, x) => acc + x) / size(col("ws")), 4)
+        .as("lm_score")): _*)
     val cols = Seq("doc_id", "n_words", "avg_word_len", "stopword_ratio",
       "alpha_ratio", "top_word_ratio", "distinct_word_ratio",
       "top_bigram_ratio", "lm_score", "drop_reason", "keep")

@@ -74,19 +74,15 @@ object Unigram {
   /** Seed vocabulary: the `topK` candidates by (cnt desc, piece asc)
     * UNION every single-character piece (coverage guarantee — any
     * word over the corpus alphabet stays encodable after any
-    * pruning). The rank runs over the candidate table, which is
-    * vocabulary-sized by construction (the [[Bpe]] rule-table
-    * contract), so the single-partition window is driver-scale work,
-    * not corpus-scale. */
+    * pruning). The top-k is a distributed `orderBy(..).limit(k)`:
+    * each partition keeps its own k best before the merge, so no
+    * single-partition window ever sees the whole candidate table
+    * (pieces are unique after the aggregate, so the order is total). */
   def seedVocab(wordCounts: DataFrame, maxPieceLen: Int,
                 topK: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(topK >= 1)
     val cand = candidatePieces(wordCounts, maxPieceLen)
-    val top = cand
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("cnt").desc, col("piece"))))
-      .filter(col("rn") <= topK).drop("rn")
+    val top = cand.orderBy(col("cnt").desc, col("piece")).limit(topK)
     top.union(cand.filter(length(col("piece")) === 1)).distinct()
   }
 
@@ -238,7 +234,6 @@ object Unigram {
   def trainFromCounts(wordCounts: DataFrame, vocabSize: Int,
                       maxPieceLen: Int = 4, rounds: Int = 3,
                       seedTopK: Int = 0): UnigramModel = {
-    import org.apache.spark.sql.expressions.Window
     require(vocabSize >= 1 && rounds >= 1)
     val seedK = if (seedTopK >= 1) seedTopK else 4 * vocabSize
     var vocab = seedVocab(wordCounts, maxPieceLen, seedK)
@@ -253,10 +248,8 @@ object Unigram {
           .select("word", "pieces"), Seq("word"))
         .select(col("cnt"), explode(col("pieces")).as("piece"))
         .groupBy("piece").agg(sum("cnt").as("cnt"))
-      val kept = usage
-        .withColumn("rn", row_number().over(
-          Window.orderBy(col("cnt").desc, col("piece"))))
-        .filter(col("rn") <= vocabSize).drop("rn")
+      val kept = usage.orderBy(col("cnt").desc, col("piece"))
+        .limit(vocabSize)
       // coverage: single characters survive pruning even at zero
       // usage (count floored to 1 so ln stays finite)
       vocab = kept

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** Per-feature statistics profile — the reference's FeatureStatistics
   * row (reference src/main/java/.../domain/FeatureStatistics.java:
   * count, null_count, mean, stddev, min, max, p25/p50/p75/p95/p99).
-  * Exact interpolated percentiles; single shuffle per profile pass.
+  * Exact interpolated percentiles, all five read from ONE percentile
+  * aggregate (one value buffer and one sort per feature, not five);
+  * single shuffle per profile pass.
   */
 object Profiler {
   def profile(records: DataFrame, nameCol: String, valueCol: String)
@@ -21,12 +23,15 @@ object Profiler {
         round(stddev(v), 4).as("stddev"),
         min(v).as("min_value"),
         max(v).as("max_value"),
-        round(percentile(v, lit(0.25)), 4).as("p25"),
-        round(percentile(v, lit(0.5)), 4).as("p50"),
-        round(percentile(v, lit(0.75)), 4).as("p75"),
-        round(percentile(v, lit(0.95)), 4).as("p95"),
-        round(percentile(v, lit(0.99)), 4).as("p99"))
+        percentile(v, array(Percentiles.map(p => lit(p / 100.0)): _*))
+          .as("pcts"))
+      .select(col("*") +: Percentiles.indices.map(i =>
+        round(col("pcts").getItem(i), 4).as(s"p${Percentiles(i)}")): _*)
+      .drop("pcts")
   }
+
+  /** The profile's percentile columns p25 … p99, in output order. */
+  private val Percentiles = Seq(25, 50, 75, 95, 99)
 
   /** Fixed-width histogram per feature — the reference profile's
     * histogram_bins field (reference src/main/java/.../domain/

@@ -106,7 +106,7 @@ object StreamingAsof {
             case (lt, lid, lv) =>
               val view = featureNames.map { n =>
                 // floor semantics: latest ts <= label ts; tie on ts →
-                // greatest value (matches the batch window's ordering)
+                // greatest value (matches the batch sorted scan's ordering)
                 val v = st.features.iterator
                   .filter(fr => fr._2 == n && fr._1 <= lt &&
                     (maxFeatureAgeMs <= 0 || lt - fr._1 <= maxFeatureAgeMs))

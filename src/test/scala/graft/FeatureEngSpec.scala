@@ -96,6 +96,31 @@ class FeatureEngSpec extends AnyFunSuite {
     }
   }
 
+  test("profile: one percentile buffer == five separate percentiles, with NULLs and a single value") {
+    import graft.stats.Profiler
+    val recs = (Seq[(String, java.lang.Double)](("nulls", null), ("nulls", 3.5),
+        ("nulls", null), ("nulls", -1.25), ("nulls", 10.0), ("nulls", 2.0),
+        ("one", 4.2), ("none", null)) ++
+      (1 to 37).map(i => ("many", java.lang.Double.valueOf(i * 1.37 % 11))))
+      .toDF("feature_name", "value_float")
+    // the per-percentile formulation the profile used to run
+    def p(q: Double) = round(percentile(col("value_float"), lit(q)), 4)
+    val five = recs.groupBy(col("feature_name").as("feature_name"))
+      .agg(p(0.25).as("p25"), p(0.5).as("p50"), p(0.75).as("p75"),
+        p(0.95).as("p95"), p(0.99).as("p99"))
+    val cols = Seq("feature_name", "p25", "p50", "p75", "p95", "p99")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val profiled = Profiler.profile(recs, "feature_name", "value_float")
+    assert(profiled.columns.toSeq == Seq("feature_name", "n", "null_count",
+      "mean", "stddev", "min_value", "max_value") ++ cols.tail)
+    assert(rows(profiled) == rows(five))
+    val one = profiled.filter(col("feature_name") === "one").head()
+    assert(cols.tail.forall(c => one.getAs[Double](c) == 4.2))
+    val none = profiled.filter(col("feature_name") === "none").head()
+    assert(cols.tail.forall(c => none.isNullAt(none.fieldIndex(c))))
+  }
+
   test("enrichStar plan broadcasts the tiny dims") {
     val plan = SparkEntry.qEnrichStar(spark, TestSpark.sfDir)
       .queryExecution.executedPlan.toString

@@ -19,19 +19,24 @@ class PlanSpec extends AnyFunSuite {
 
   // Shuffle exchanges only: a BroadcastExchange (tiny side shipped to
   // every executor) is exactly what the scale design WANTS, so it
-  // must not count against the shuffle budget. Round 16: explicitly
-  // PINNED repartitions (REPARTITION_BY_NUM — the loader's scan-split
-  // compensation for single-row-group gate files, and the
-  // deliberately placed fan-out pins in blockedSelfPairs/Search) are
-  // likewise excluded: they are reviewed placements whose row volume
-  // is input-shaped, not operator-induced wide stages — the budget
-  // these tests gate is the ENSURE_REQUIREMENTS/REPARTITION_BY_COL
-  // exchanges an operator's own joins/aggregates demand.
-  private def countShuffles(df: org.apache.spark.sql.DataFrame): Int = {
+  // must not count against the shuffle budget. Explicitly PINNED
+  // repartitions (REPARTITION_BY_NUM — the loader's scan-split
+  // compensation for single-row-group gate files, and the deliberately
+  // placed fan-out pins in blockedSelfPairs/Search) are reviewed
+  // placements whose row volume is input-shaped, so they are not part
+  // of the operator budget either — but each gated query states its
+  // EXACT pin count, so a stray explicit repartition fails the gate
+  // instead of passing unnoticed. The returned budget counts the
+  // ENSURE_REQUIREMENTS/REPARTITION_BY_COL exchanges an operator's own
+  // joins/aggregates demand.
+  private def countShuffles(df: org.apache.spark.sql.DataFrame,
+                            pins: Int): Int = {
     val plan = df.queryExecution.executedPlan.toString
+    val pinned = ", REPARTITION_BY_NUM".r.findAllIn(plan).length
+    assert(pinned == pins,
+      s"expected $pins pinned repartitions, found $pinned:\n$plan")
     "Exchange".r.findAllIn(plan).length -
-      "BroadcastExchange".r.findAllIn(plan).length -
-      ", REPARTITION_BY_NUM".r.findAllIn(plan).length
+      "BroadcastExchange".r.findAllIn(plan).length - pinned
   }
 
   test("q1_agg: shipdate filter pushed to parquet, columns pruned") {
@@ -44,21 +49,25 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_multi_window: all horizons in exactly one shuffle") {
-    assert(countShuffles(SparkEntry.qMultiWindow(spark, TestSpark.sfDir)) == 1)
+    assert(countShuffles(SparkEntry.qMultiWindow(spark, TestSpark.sfDir), pins = 0) == 1)
   }
 
   test("q_sessionize: session aggregate reuses the entity partitioning") {
     // window shuffles on entity; the (entity, session_seq) groupBy must
     // NOT re-shuffle because HashPartitioning(entity) already clusters it
-    assert(countShuffles(SparkEntry.qSessionize(spark, TestSpark.sfDir)) == 1)
+    assert(countShuffles(SparkEntry.qSessionize(spark, TestSpark.sfDir), pins = 0) == 1)
   }
 
-  test("q_asof_join: one data shuffle for the window, no join blowup") {
+  test("q_asof_join: one data shuffle for the sorted scan, no window, no join blowup") {
     val df = SparkEntry.qAsofJoin(spark, TestSpark.sfDir)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("SortMergeJoin"),
       "asof must not be a join")
-    // exactly one hash shuffle moves data (the entity window); the only
+    // a streaming scan per entity, never a Window operator buffering
+    // each entity's whole history
+    assert(!"(?m)^[ +:\\-]*Window ".r.findFirstIn(plan).isDefined,
+      s"asof must not run a window:\n$plan")
+    // exactly one hash shuffle moves data (on the entity); the only
     // other exchange allowed is the one-row SinglePartition aggregate
     // computing the lazy label-min lookback bound
     assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
@@ -67,7 +76,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_materialize_vectors: fused to exactly one shuffle") {
-    assert(countShuffles(SparkEntry.qMaterializeVectors(spark, TestSpark.sfDir)) == 1)
+    assert(countShuffles(SparkEntry.qMaterializeVectors(spark, TestSpark.sfDir), pins = 0) == 1)
   }
 
   test("q_serving_lookup: key set broadcast, snapshot not shuffled for the join") {
@@ -120,7 +129,7 @@ class PlanSpec extends AnyFunSuite {
     // one real shuffle for the eval-side distinct + one for the
     // per-doc overlap count; the corpus token stream itself never
     // exchanges before the join
-    assert(countShuffles(df) <= 2, s"corpus side shuffled:\n$plan")
+    assert(countShuffles(df, pins = 2) <= 2, s"corpus side shuffled:\n$plan")
   }
 
   test("q_tfidf: rank pushes a partial top-k (WindowGroupLimit) below the exchange") {
@@ -186,7 +195,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, TestSpark.sfDir)
     val df = graft.operators.TextAnalysis.qualityClassifierFrozen(
       docs, "doc_id", "text", Map("the" -> 10L, "a" -> 5L), 20L)
-    assert(countShuffles(df) == 0,
+    assert(countShuffles(df, pins = 1) == 0,
       "the streaming-safe classifier must not exchange at all:\n" +
         df.queryExecution.executedPlan.toString)
   }
@@ -210,7 +219,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_pii_redact: pure projection — zero shuffles") {
-    assert(countShuffles(SparkEntry.qPiiRedact(spark, TestSpark.sfDir)) == 0,
+    assert(countShuffles(SparkEntry.qPiiRedact(spark, TestSpark.sfDir), pins = 0) == 0,
       "the redaction pass must run at scan speed, no exchange")
   }
 
@@ -228,7 +237,7 @@ class PlanSpec extends AnyFunSuite {
       .selectExpr("doc_id", "text")
     val df = graft.operators.Dedup.lineDedupFrozen(docs, "doc_id",
       "text", Array("d41d8cd98f00b204e9800998ecf8427e"))
-    assert(countShuffles(df) == 0,
+    assert(countShuffles(df, pins = 1) == 0,
       "the streaming-safe line pass must not exchange at all:\n" +
         df.queryExecution.executedPlan.toString)
   }
@@ -247,17 +256,17 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_quality_sample: zero shuffles — the soft filter runs at scan speed") {
-    assert(countShuffles(SparkEntry.qQualitySample(spark, TestSpark.sfDir))
+    assert(countShuffles(SparkEntry.qQualitySample(spark, TestSpark.sfDir), pins = 1)
       == 0)
   }
 
   test("q_winnow: zero shuffles — fingerprinting is a pure projection") {
-    assert(countShuffles(SparkEntry.qWinnow(spark, TestSpark.sfDir)) == 0)
+    assert(countShuffles(SparkEntry.qWinnow(spark, TestSpark.sfDir), pins = 1) == 0)
   }
 
   test("q_shuffle_shard: exactly one exchange, no single-partition funnel") {
     val df = SparkEntry.qShuffleShard(spark, TestSpark.sfDir)
-    assert(countShuffles(df) == 1,
+    assert(countShuffles(df, pins = 1) == 1,
       "shard numbering must be the permutation's only shuffle")
     assert(!df.queryExecution.executedPlan.toString.contains("SinglePartition"),
       "per-shard windows, never a global one")
@@ -297,7 +306,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_corpus_report: one map-side-combining shuffle, nothing else") {
     assert(countShuffles(SparkEntry.qCorpusReport(spark,
-      TestSpark.sfDir)) == 1)
+      TestSpark.sfDir), pins = 1) == 1)
   }
 
   test("q_stratified_sample: per-cell top-k prunes below the exchange (WindowGroupLimit)") {
@@ -318,7 +327,7 @@ class PlanSpec extends AnyFunSuite {
     // the explicit shingle repartition is shared by the df aggregate
     // and the probe join; the per-doc aggregate is the only other
     // data shuffle
-    assert(countShuffles(df) <= 3, s"shingle exchange must be shared:\n$plan")
+    assert(countShuffles(df, pins = 2) <= 3, s"shingle exchange must be shared:\n$plan")
   }
 
   test("q_semantic_decontam: eval broadcast, corpus shuffles only for the per-doc aggregate") {
@@ -327,7 +336,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), s"no cartesian:\n$plan")
     assert(plan.contains("BroadcastNestedLoopJoin"),
       s"the eval side must broadcast:\n$plan")
-    assert(countShuffles(df) == 1,
+    assert(countShuffles(df, pins = 0) == 1,
       s"only the flagged-rows aggregate may shuffle:\n$plan")
   }
 
@@ -382,14 +391,14 @@ class PlanSpec extends AnyFunSuite {
     // shuffles: seed groupBy(w), totals+priors single-partition aggs,
     // final groupBy(doc_id) — all seed- or doc-sized; the corpus token
     // stream itself joins the model via broadcast only
-    assert(countShuffles(df) <= 6,
+    assert(countShuffles(df, pins = 3) <= 6,
       s"unexpected shuffle growth:\n$plan")
   }
 
   test("q_html_extract / q_boilerplate: pure codegen projections — zero shuffles") {
     for (q <- Seq("q_html_extract", "q_boilerplate")) {
       val df = SparkEntry.queries(q)(spark, TestSpark.sfDir)
-      assert(countShuffles(df) == 0,
+      assert(countShuffles(df, pins = 1) == 0,
         s"$q must stay in the scan stage:\n" +
           df.queryExecution.executedPlan.toString)
       // the regexp chains codegen; only the higher-order array
@@ -411,7 +420,7 @@ class PlanSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     // one exchange builds the synthetic segments (groupBy seg — fixture,
     // not operator); the walker + posexplode + Html chain add none
-    assert(countShuffles(df) <= 1, s"warc chain must be narrow:\n$plan")
+    assert(countShuffles(df, pins = 1) <= 1, s"warc chain must be narrow:\n$plan")
     assert(plan.contains("graft_warc_records"), s"walker missing:\n$plan")
     assert(plan.contains("Generate"), s"posexplode missing:\n$plan")
   }
@@ -421,7 +430,7 @@ class PlanSpec extends AnyFunSuite {
     val r1 = Seq((1L, 10L, 1L), (1L, 11L, 2L)).toDF("q_id", "doc_id", "rank")
     val r2 = Seq((1L, 11L, 1L), (1L, 12L, 2L)).toDF("q_id", "doc_id", "rank")
     val fused = graft.operators.Search.rrfFuse(Seq(r1, r2), k = 5)
-    assert(countShuffles(fused) <= 2,
+    assert(countShuffles(fused, pins = 0) <= 2,
       s"fusion must be one groupBy + one window:\n" +
         fused.queryExecution.executedPlan.toString)
   }
@@ -429,7 +438,7 @@ class PlanSpec extends AnyFunSuite {
   // ---- round-10 sketch / range-join / multimodal plans ------------
 
   test("q_frame_sample: pure scan-stage pipeline — zero exchanges") {
-    assert(countShuffles(SparkEntry.qFrameSample(spark, TestSpark.sfDir)) == 0)
+    assert(countShuffles(SparkEntry.qFrameSample(spark, TestSpark.sfDir), pins = 1) == 0)
     val plan = SparkEntry.qFrameSample(spark, TestSpark.sfDir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"frame sampling must not join:\n$plan")
@@ -443,7 +452,7 @@ class PlanSpec extends AnyFunSuite {
             org.apache.spark.sql.functions.col("text"), 3)).as("shingle"))
     val df = graft.operators.Sketch.hllSketchTable(stream, "shingle",
       Seq("source"))
-    assert(countShuffles(df) == 1, "sketch build must be one exchange")
+    assert(countShuffles(df, pins = 1) == 1, "sketch build must be one exchange")
     val plan = df.queryExecution.executedPlan.toString
     // partial registers accumulate BEFORE the exchange (the 1000-executor
     // tree-merge contract): a partial_graft_hll_sketch must appear
@@ -461,7 +470,7 @@ class PlanSpec extends AnyFunSuite {
     val probed = docs.select(
       graft.operators.Sketch.bloomProbe(bitset,
         org.apache.spark.sql.functions.col("k"), 256, 2).as("hit"))
-    assert(countShuffles(probed) == 0)
+    assert(countShuffles(probed, pins = 1) == 0)
     assert(!probed.queryExecution.executedPlan.toString.contains("Join"))
   }
 
@@ -474,8 +483,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_kanon_report: suppression costs no extra shuffle over the report") {
-    val base = countShuffles(SparkEntry.qCorpusReport(spark, TestSpark.sfDir))
-    assert(countShuffles(SparkEntry.qKanonReport(spark, TestSpark.sfDir))
+    val base = countShuffles(SparkEntry.qCorpusReport(spark, TestSpark.sfDir), pins = 1)
+    assert(countShuffles(SparkEntry.qKanonReport(spark, TestSpark.sfDir), pins = 1)
       == base, "k-anon must be a projection on the report aggregate")
   }
 
@@ -489,7 +498,7 @@ class PlanSpec extends AnyFunSuite {
     // exactly 3 data shuffles: the additive cell groupBy, the
     // per-probe min, and the exact-audit count — nothing probe-shaped
     // ever shuffles the corpus
-    assert(countShuffles(df) == 3, s"plan:\n$plan")
+    assert(countShuffles(df, pins = 2) == 3, s"plan:\n$plan")
   }
 
   test("q_cm_join_size: estimate cost is sketch-shaped — cells join cells, corpora never meet pre-estimate") {
@@ -502,7 +511,7 @@ class PlanSpec extends AnyFunSuite {
     // ≤ depth rows, cost-free; the guard is what proves an
     // overlap-free depth row as join size 0). The only nested loop
     // is the deliberate 1×1 crossJoin stitching estimate to audit.
-    assert(countShuffles(df) == 8, s"plan:\n$plan")
+    assert(countShuffles(df, pins = 6) == 8, s"plan:\n$plan")
     assert("BroadcastNestedLoopJoin".r.findAllIn(plan).length <= 2,
       s"only the 1×1 estimate/audit stitch may nest:\n$plan")
   }
@@ -579,7 +588,7 @@ class PlanSpec extends AnyFunSuite {
     // so the Viterbi DP is a pure projection: the only shuffle is the
     // word-count groupBy that feeds it; no join anywhere
     assert(!plan.contains("Join"), s"encode must not join:\n$plan")
-    assert(countShuffles(df) <= 1, s"word-count exchange only:\n$plan")
+    assert(countShuffles(df, pins = 1) <= 1, s"word-count exchange only:\n$plan")
   }
 
   test("q_join_plan: planning reads cells, never a corpus cartesian") {
