@@ -6,33 +6,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Versioned parquet table with storage-level time travel — the
-  * Spark-native analogue of the reference's Iceberg snapshot store
-  * (reference src/main/java/.../store/offline/IcebergOfflineStore
-  * .java:42-59: every write commits a snapshot, historical reads open
-  * a snapshot by id), built from public parts only: immutable parquet
-  * data files plus an append-only JSON commit log of file manifests.
-  *
-  * Layout:
-  * {{{
-  *   <root>/_graft_log/v00000042.json      one manifest per version
-  *   <root>/data/<uuid>/part-*.parquet     immutable data files
-  * }}}
-  *
-  * Scale properties:
-  *  - A manifest lists EVERY file in its snapshot, so reading version
-  *    v opens exactly those files — O(|snapshot|), never O(|history|);
-  *    no filter over a commit column, no tombstone reconciliation.
-  *  - Commits are optimistic: the manifest is created with
-  *    `create(overwrite = false)` (atomic on HDFS and local file
-  *    systems), so concurrent writers race on the version number and
-  *    the loser retries against the new head. Readers see a complete
-  *    manifest or none — snapshot isolation by construction.
-  *  - Data files are immutable; `merge` is copy-on-write over ONLY
-  *    the files whose key ranges intersect the updates — driven by the
-  *    per-file min/max footer stats in the manifest; provably
-  *    unmatched files are carried into the new snapshot by reference.
-  */
 /** Shared manifest-file plumbing for the offline stores. */
 private[offline] object StorageUtil {
   def readAllBytes(fs: FileSystem, p: Path): Array[Byte] = {
@@ -83,20 +56,90 @@ private[offline] object StorageUtil {
     }
 }
 
+/** A scan's file list taken verbatim from a manifest: qualified paths
+  * with their recorded byte lengths and modification times, one
+  * unpartitioned directory. Planning a scan over it globs nothing,
+  * probes no path and runs no listing job, however many files it
+  * names. Like Delta's and Iceberg's file indexes it carries no block
+  * locations. Lengths must be exact: split planning and the parquet
+  * footer read both trust them.
+  *
+  * Equal by file set, as Spark's InMemoryFileIndex is by root paths, so
+  * two reads of one snapshot still share cached data and reused
+  * exchanges. */
+private[offline] final class ManifestFileIndex(
+    files: Seq[org.apache.hadoop.fs.FileStatus])
+  extends org.apache.spark.sql.execution.datasources.FileIndex {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
+
+  override def rootPaths: Seq[Path] = files.map(_.getPath)
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty,
+      files.map(FileStatusWithMetadata(_))))
+  override def inputFiles: Array[String] =
+    files.map(_.getPath.toUri.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: org.apache.spark.sql.types.StructType =
+    new org.apache.spark.sql.types.StructType()
+  override def equals(other: Any): Boolean = other match {
+    case m: ManifestFileIndex => rootPaths.toSet == m.rootPaths.toSet
+    case _ => false
+  }
+  override def hashCode(): Int = rootPaths.toSet.hashCode()
+}
+
+/** Versioned parquet table with storage-level time travel — the
+  * Spark-native analogue of the reference's Iceberg snapshot store
+  * (reference src/main/java/.../store/offline/IcebergOfflineStore
+  * .java:42-59: every write commits a snapshot, historical reads open
+  * a snapshot by id), built from public parts only: immutable parquet
+  * data files plus an append-only JSON commit log of file manifests.
+  *
+  * Layout:
+  * {{{
+  *   <root>/_graft_log/v00000042.json      one manifest per version
+  *   <root>/data/<uuid>/part-*.parquet     immutable data files
+  * }}}
+  *
+  * Scale properties:
+  *  - A manifest lists EVERY file in its snapshot, with its byte
+  *    length and modification time, so reading version v opens exactly
+  *    those files — O(|snapshot|), never O(|history|); no filter over
+  *    a commit column, no tombstone reconciliation. The scan is planned
+  *    from the manifest alone ([[ManifestFileIndex]]): no path
+  *    globbing, no existence probes, no listing job and no block
+  *    locations, at any file count.
+  *  - Commits are optimistic: the manifest is created with
+  *    `create(overwrite = false)` (atomic on HDFS and local file
+  *    systems), so concurrent writers race on the version number and
+  *    the loser retries against the new head. Readers see a complete
+  *    manifest or none — snapshot isolation by construction.
+  *  - Data files are immutable; `merge` is copy-on-write over ONLY
+  *    the files whose key ranges intersect the updates — driven by the
+  *    per-file min/max footer stats in the manifest; provably
+  *    unmatched files are carried into the new snapshot by reference.
+  */
 object VersionedStore {
 
   case class VersionInfo(version: Long, op: String, nFiles: Int, rows: Long)
 
   /** One snapshot's manifest: the exact file list, row count, schema,
-    * per-file column ranges for data skipping, and per-file row counts
+    * per-file column ranges for data skipping, per-file row counts
     * (fileRows — used by partial merge to carry untouched files without
-    * recounting them; empty for manifests written before it existed). */
+    * recounting them; empty for manifests written before it existed),
+    * and per-file (byte length, modification time) — fileSizes, what a
+    * scan is planned from; empty for manifests written before it. */
   private case class Snapshot(op: String, files: Seq[String], rows: Long,
                               schemaJson: String,
                               stats: Map[String, Map[String, (Double, Double)]],
                               commitTsMs: Long,
                               fileRows: Map[String, Long],
-                              strStats: Map[String, Map[String, (String, String)]])
+                              strStats: Map[String, Map[String, (String, String)]],
+                              fileSizes: Map[String, (Long, Long)])
 
   private val mapper = new ObjectMapper()
 
@@ -158,10 +201,18 @@ object VersionedStore {
               }.toMap
             }.toMap
       }
+    val fileSizes: Map[String, (Long, Long)] = m.get("fileSizes") match {
+      case null => Map.empty // manifests written before manifest scans
+      case fs: java.util.Map[_, _] =>
+        fs.asInstanceOf[java.util.Map[String, java.util.List[Number]]]
+          .asScala.map { case (f, lm) =>
+            f -> (lm.get(0).longValue(), lm.get(1).longValue())
+          }.toMap
+    }
     Snapshot(m.get("op").toString, files, m.get("rows").toString.toLong,
       Option(m.get("schema")).map(_.toString).getOrElse(""), stats,
       Option(m.get("ts")).map(_.toString.toLong).getOrElse(0L), fileRows,
-      strStats)
+      strStats, fileSizes)
   }
 
   /** Tolerant manifest read: None when the manifest has vanished —
@@ -379,12 +430,38 @@ object VersionedStore {
     * from an arbitrary footer) is what makes add-column schema
     * evolution readable: files written before a column existed
     * null-backfill it, and no footer-sampling race can drop an
-    * evolved column. Also skips the schema-inference footer read. */
+    * evolved column. Also skips the schema-inference footer read.
+    *
+    * When the manifest records every file's size, the scan is a
+    * HadoopFsRelation over a [[ManifestFileIndex]] of exactly `files`
+    * (possibly none: an empty frame of the snapshot's schema), with
+    * the data schema nullable at every level as a path read makes it.
+    * Manifests written before sizes were recorded read by path. */
   private def readFiles(spark: SparkSession, root: String, snap: Snapshot,
-                        files: Seq[String]): DataFrame = {
-    val reader = snapshotStruct(snap).fold(spark.read)(spark.read.schema)
-    reader.parquet(files.map(f => new Path(root, f).toString): _*)
-  }
+                        files: Seq[String]): DataFrame =
+    snapshotStruct(snap) match {
+      case Some(schema) if files.forall(snap.fileSizes.contains) =>
+        import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+        import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        val rootPath = new Path(root)
+        val fs = fileSystem(spark, rootPath)
+        val blockSize = fs.getDefaultBlockSize(rootPath)
+        val statuses = files.map { f =>
+          val (len, mtime) = snap.fileSizes(f)
+          new org.apache.hadoop.fs.FileStatus(len, false, 0, blockSize,
+            mtime, fs.makeQualified(new Path(root, f)))
+        }
+        spark.baseRelationToDataFrame(HadoopFsRelation(
+          new ManifestFileIndex(statuses),
+          partitionSchema = new org.apache.spark.sql.types.StructType(),
+          dataSchema = nullableEverywhere(schema).asInstanceOf[
+            org.apache.spark.sql.types.StructType],
+          bucketSpec = None, fileFormat = new ParquetFileFormat(),
+          options = Map.empty)(spark))
+      case struct =>
+        struct.fold(spark.read)(spark.read.schema)
+          .parquet(files.map(f => new Path(root, f).toString): _*)
+    }
 
   /** Read a snapshot: the latest version, or `versionAsOf` — opening
     * ONLY that manifest's files, as that manifest's schema (files
@@ -429,15 +506,7 @@ object VersionedStore {
     }
     val pred = org.apache.spark.sql.functions.col(column)
       .cast("double").between(lo, hi)
-    if (kept.isEmpty) {
-      // every file pruned: an empty frame with the snapshot's schema
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        schema)
-    } else
-      readFiles(spark, root, snap, kept).where(pred)
+    readFiles(spark, root, snap, kept).where(pred)
   }
 
   /** Point-set read with the same MANIFEST-level data skipping as
@@ -472,14 +541,7 @@ object VersionedStore {
     }
     val pred = org.apache.spark.sql.functions.col(column)
       .cast("double").isin(sorted: _*)
-    if (kept.isEmpty) {
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        schema)
-    } else
-      readFiles(spark, root, snap, kept).where(pred)
+    readFiles(spark, root, snap, kept).where(pred)
   }
 
   /** [[readValues]] for a STRING column: file pruning against the
@@ -514,14 +576,7 @@ object VersionedStore {
     }
     val pred = org.apache.spark.sql.functions.col(column)
       .isin(values.distinct: _*)
-    if (kept.isEmpty) {
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        schema)
-    } else
-      readFiles(spark, root, snap, kept).where(pred)
+    readFiles(spark, root, snap, kept).where(pred)
   }
 
   /** The snapshot's schema from the manifest alone — no file listing,
@@ -602,26 +657,33 @@ object VersionedStore {
       }
     }
 
+  /** `dt` with every nesting level nullable (struct fields, array
+    * elements, map values), field metadata kept — what Spark's
+    * DataSource makes of a file read's data schema. */
+  private def nullableEverywhere(dt: org.apache.spark.sql.types.DataType)
+  : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullableEverywhere(f.dataType), nullable = true)))
+      case a: ArrayType =>
+        ArrayType(nullableEverywhere(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullableEverywhere(m.keyType),
+        nullableEverywhere(m.valueType), valueContainsNull = true)
+      case o => o
+    }
+  }
+
   /** Name+type "shape" of a schema with nullability erased at EVERY
     * nesting level (array containsNull / map valueContainsNull / nested
     * struct fields differ freely between literal-built and parquet-read
     * frames of the same logical shape) — the compatibility unit for
     * mixing files in one snapshot. */
   private def schemaShape(json: String)
-  : Set[(String, org.apache.spark.sql.types.DataType)] = {
-    import org.apache.spark.sql.types._
-    def norm(dt: DataType): DataType = dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        StructField(f.name, norm(f.dataType), nullable = true)))
-      case a: ArrayType =>
-        ArrayType(norm(a.elementType), containsNull = true)
-      case m: MapType => MapType(norm(m.keyType),
-        norm(m.valueType), valueContainsNull = true)
-      case o => o
-    }
-    DataType.fromJson(json).asInstanceOf[StructType]
-      .fields.map(f => (f.name, norm(f.dataType))).toSet
-  }
+  : Set[(String, org.apache.spark.sql.types.DataType)] =
+    org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fields.map(f => (f.name, nullableEverywhere(f.dataType))).toSet
 
   /** Files carried by reference from the head snapshot into a partial
     * (file-pruned) commit, with their stats and row counts. Only valid
@@ -631,7 +693,8 @@ object VersionedStore {
   private case class Carry(files: Seq[String], rows: Long,
                            stats: Map[String, Map[String, (Double, Double)]],
                            fileRows: Map[String, Long],
-                           strStats: Map[String, Map[String, (String, String)]])
+                           strStats: Map[String, Map[String, (String, String)]],
+                           fileSizes: Map[String, (Long, Long)])
 
   /** Commit `df` as a new version. `carryPrev` keeps the previous
     * snapshot's files in the new manifest (append semantics). When
@@ -654,10 +717,18 @@ object VersionedStore {
     val dataDir = new Path(root, dataRel)
     df.write.parquet(dataDir.toString)
     val fs = fileSystem(spark, dataDir)
-    val newNames = fs.listStatus(dataDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .sorted.toSeq
+    val written = fs.listStatus(dataDir)
+      .filter { st =>
+        val n = st.getPath.getName
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }.sortBy(_.getPath.getName).toSeq
+    val newNames = written.map(_.getPath.getName)
     val newFiles = newNames.map(n => s"$dataRel/$n")
+    // exact byte lengths and mtimes from the same listing: the scan
+    // of this snapshot is planned from them (ManifestFileIndex)
+    val newSizes = written.map(st =>
+      s"$dataRel/${st.getPath.getName}" -> (st.getLen, st.getModificationTime))
+      .toMap
     // Rows AND per-file column ranges straight from the parquet
     // footers — one metadata pass, no Spark job, no data pages.
     val (newRowsByName, newStatsByName, newStrStatsByName) = footerStats(
@@ -673,11 +744,12 @@ object VersionedStore {
     while (attempt < 10) {
       val prev = latestVersion(spark, root)
       var schemaOut = df.schema.json
-      val (files, rows, stats, fileRows, strStats) =
+      val (files, rows, stats, fileRows, strStats, sizes) =
         if (carry.isDefined) {
           val c = carry.get
           (c.files ++ newFiles, c.rows + newRows, c.stats ++ newStats,
-            c.fileRows ++ newFileRows, c.strStats ++ newStrStats)
+            c.fileRows ++ newFileRows, c.strStats ++ newStrStats,
+            c.fileSizes ++ newSizes)
         } else if (carryPrev && prev >= 0) {
           val p = readManifest(spark, root, prev)
           // A carried snapshot mixes old and new files in ONE logical
@@ -728,8 +800,10 @@ object VersionedStore {
                   f.nullable || prevNullable.getOrElse(f.name, false)))).json
           }
           (p.files ++ newFiles, p.rows + newRows, p.stats ++ newStats,
-            p.fileRows ++ newFileRows, p.strStats ++ newStrStats)
-        } else (newFiles, newRows, newStats, newFileRows, newStrStats)
+            p.fileRows ++ newFileRows, p.strStats ++ newStrStats,
+            p.fileSizes ++ newSizes)
+        } else (newFiles, newRows, newStats, newFileRows, newStrStats,
+          newSizes)
       val next = if (expectedVersion >= 0) expectedVersion else prev + 1
       val manifest = new java.util.LinkedHashMap[String, Object]()
       manifest.put("version", java.lang.Long.valueOf(next))
@@ -767,6 +841,14 @@ object VersionedStore {
           fileRowsM.put(f, java.lang.Long.valueOf(r)))
       }
       manifest.put("fileRows", fileRowsM)
+      val sizesM = new java.util.LinkedHashMap[String, Object]()
+      files.foreach { f =>
+        sizes.get(f).foreach { case (len, mtime) =>
+          sizesM.put(f, java.util.List.of(
+            java.lang.Long.valueOf(len), java.lang.Long.valueOf(mtime)))
+        }
+      }
+      manifest.put("fileSizes", sizesM)
       try {
         atomicCreate(fs, manifestPath(root, next),
           mapper.writeValueAsBytes(manifest))
@@ -839,6 +921,13 @@ object VersionedStore {
     * type-widening drifting the merged schema away from the carried
     * files' shape.
     *
+    * Key bounds and value sets come from the batch itself: a batch of
+    * at most 1,024 rows is collected once (no job over a local batch)
+    * and resolved on the driver, its distinct key tuples broadcast as a
+    * local relation for the anti-join; a larger batch runs one bounds
+    * aggregate and capped distinct collects. Both give the same file
+    * split.
+    *
     * Optimistic concurrency done right: the merged content is bound to
     * the head it was computed from (commit claims exactly head+1); if
     * a racing writer lands first, the merge is RECOMPUTED against the
@@ -869,14 +958,14 @@ object VersionedStore {
   private def copyOnWrite(updates: DataFrame, root: String,
                           keys: Seq[String], insertUpdates: Boolean)
   : Long = {
-    import org.apache.spark.sql.functions.{col, min, max}
+    import org.apache.spark.sql.functions.{broadcast, col, min, max}
     import org.apache.spark.sql.types.{NumericType, TimestampType, StructType, DataType}
     val spark = updates.sparkSession
     // [min, max] of each prunable merge key over the updates, on the
     // cast-to-double scale the manifest stats use (timestamps = epoch
     // seconds). Non-numeric keys yield no bounds (and under ANSI mode
     // a string→double cast would throw, so they are never cast).
-    // O(|updates|) — one small agg, paid once, head-independent.
+    // Paid once, head-independent.
     val prunableKeys = updates.schema.fields
       .filter(f => keys.contains(f.name) && (f.dataType match {
         case _: NumericType | _: TimestampType => true
@@ -892,31 +981,10 @@ object VersionedStore {
       .filter(f => keys.contains(f.name) &&
         f.dataType == org.apache.spark.sql.types.StringType)
       .map(_.name).toSeq
-    // every key's bounds in ONE aggregate: numeric pairs first, then
-    // string pairs
-    val aggs = prunableKeys.flatMap(k =>
-        Seq(min(col(k).cast("double")), max(col(k).cast("double")))) ++
-      strKeys.flatMap(k => Seq(min(col(k)), max(col(k))))
-    val bounds =
-      if (aggs.isEmpty) None
-      else Some(updates.agg(aggs.head, aggs.tail: _*).head())
-    val updBounds: Map[String, (Double, Double)] = bounds.map { r =>
-      prunableKeys.zipWithIndex.collect {
-        case (k, i) if !r.isNullAt(2 * i) =>
-          // widened one ulp each way, mirroring the footer stats
-          k -> (Math.nextDown(r.getDouble(2 * i)),
-                Math.nextUp(r.getDouble(2 * i + 1)))
-      }.toMap
-    }.getOrElse(Map.empty)
     def utf8(s: String): Array[Byte] =
       s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val strBounds: Map[String, (Array[Byte], Array[Byte])] = bounds.map { r =>
-      val at = 2 * prunableKeys.size
-      strKeys.zipWithIndex.collect {
-        case (k, i) if !r.isNullAt(at + 2 * i) =>
-          k -> (utf8(r.getString(at + 2 * i)), utf8(r.getString(at + 2 * i + 1)))
-      }.toMap
-    }.getOrElse(Map.empty)
+    def bCmp(a: Array[Byte], b: Array[Byte]): Int =
+      java.util.Arrays.compareUnsigned(a, b)
     // EXACT value sets for low-cardinality prunable keys: a batch
     // touching buckets {0, 31} has range [0, 31] — which intersects
     // every file — but its value SET misses every file strictly
@@ -924,24 +992,90 @@ object VersionedStore {
     // rewrites the world. Capped: a high-cardinality key falls back
     // to its range (the set would cost more than it prunes).
     val setCap = 1024
-    val updValueSets: Map[String, Array[Double]] =
-      updBounds.keys.flatMap { k =>
-        val vs = updates.select(col(k).cast("double").as("v"))
-          .filter(col("v").isNotNull).distinct().limit(setCap + 1)
-          .collect().map(_.getDouble(0))
-        if (vs.length > setCap) None else Some(k -> vs.sorted)
-      }.toMap
-    // the capped exact value set of a string key carries
-    // scattered-key batches past files strictly between their values
-    def bCmp(a: Array[Byte], b: Array[Byte]): Int =
-      java.util.Arrays.compareUnsigned(a, b)
-    val strValueSets: Map[String, Array[Array[Byte]]] =
-      strBounds.keys.flatMap { k =>
-        val vs = updates.select(col(k).as("v"))
-          .filter(col("v").isNotNull).distinct().limit(setCap + 1)
-          .collect().map(r => utf8(r.getString(0)))
-        if (vs.length > setCap) None else Some(k -> vs)
-      }.toMap
+    // One capped collect of the key projection, numeric keys also on
+    // the double scale. Over a local batch Catalyst folds projection
+    // and limit into the relation, so no job runs. A batch of at most
+    // setCap rows is the WHOLE batch: its bounds, value sets and
+    // anti-join keys are then resolved here on the driver.
+    val keyCols = updates.select(keys.map(col): _*)
+    val batch = updates
+      .select(keys.map(col) ++ prunableKeys.map(k => col(k).cast("double")): _*)
+      .limit(setCap + 1).collect()
+    val small = batch.length <= setCap
+    val (updBounds, strBounds, updValueSets, strValueSets) =
+      if (small) {
+        val num = prunableKeys.zipWithIndex.map { case (k, i) =>
+          val at = keys.size + i
+          k -> batch.collect { case r if !r.isNullAt(at) => r.getDouble(at) }
+            .distinct
+        }.filter(_._2.nonEmpty)
+        val str = strKeys.map { k =>
+          val at = keys.indexOf(k)
+          k -> batch.collect { case r if !r.isNullAt(at) => r.getString(at) }
+            .distinct.map(utf8)
+        }.filter(_._2.nonEmpty)
+        // Spark's min/max orders: NaN above every double (TotalOrdering
+        // differs from it only on the sign of zero, which the one-ulp
+        // widening erases); strings by unsigned UTF-8 bytes
+        val dOrder = Ordering.Double.TotalOrdering
+        val bOrder = Ordering.fromLessThan[Array[Byte]](bCmp(_, _) < 0)
+        (num.map { case (k, vs) =>
+           k -> (Math.nextDown(vs.min(dOrder)), Math.nextUp(vs.max(dOrder)))
+         }.toMap,
+         str.map { case (k, vs) => k -> (vs.min(bOrder), vs.max(bOrder)) }.toMap,
+         num.toMap, str.toMap)
+      } else {
+        // every key's bounds in ONE aggregate: numeric pairs first, then
+        // string pairs
+        val aggs = prunableKeys.flatMap(k =>
+            Seq(min(col(k).cast("double")), max(col(k).cast("double")))) ++
+          strKeys.flatMap(k => Seq(min(col(k)), max(col(k))))
+        val bounds =
+          if (aggs.isEmpty) None
+          else Some(updates.agg(aggs.head, aggs.tail: _*).head())
+        val updBounds: Map[String, (Double, Double)] = bounds.map { r =>
+          prunableKeys.zipWithIndex.collect {
+            case (k, i) if !r.isNullAt(2 * i) =>
+              // widened one ulp each way, mirroring the footer stats
+              k -> (Math.nextDown(r.getDouble(2 * i)),
+                    Math.nextUp(r.getDouble(2 * i + 1)))
+          }.toMap
+        }.getOrElse(Map.empty)
+        val strBounds: Map[String, (Array[Byte], Array[Byte])] = bounds.map { r =>
+          val at = 2 * prunableKeys.size
+          strKeys.zipWithIndex.collect {
+            case (k, i) if !r.isNullAt(at + 2 * i) =>
+              k -> (utf8(r.getString(at + 2 * i)), utf8(r.getString(at + 2 * i + 1)))
+          }.toMap
+        }.getOrElse(Map.empty)
+        val updValueSets: Map[String, Array[Double]] =
+          updBounds.keys.flatMap { k =>
+            val vs = updates.select(col(k).cast("double").as("v"))
+              .filter(col("v").isNotNull).distinct().limit(setCap + 1)
+              .collect().map(_.getDouble(0))
+            if (vs.length > setCap) None else Some(k -> vs.sorted)
+          }.toMap
+        // the capped exact value set of a string key carries
+        // scattered-key batches past files strictly between their values
+        val strValueSets: Map[String, Array[Array[Byte]]] =
+          strBounds.keys.flatMap { k =>
+            val vs = updates.select(col(k).as("v"))
+              .filter(col("v").isNotNull).distinct().limit(setCap + 1)
+              .collect().map(r => utf8(r.getString(0)))
+            if (vs.length > setCap) None else Some(k -> vs)
+          }.toMap
+        (updBounds, strBounds, updValueSets, strValueSets)
+      }
+    // The anti-join side: distinct key tuples. A small batch's are a
+    // broadcast local relation (a NULL key never equality-matches, so
+    // tuples holding one are dropped); a large batch's stay distributed.
+    val updateKeys =
+      if (small) broadcast(spark.createDataFrame(
+        batch.filterNot(r => keys.indices.exists(r.isNullAt))
+          .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.take(keys.size)))
+          .distinct.toSeq.asJava,
+        keyCols.schema))
+      else keyCols.distinct()
     var attempt = 0
     while (attempt < 10) {
       val head = latestVersion(spark, root)
@@ -977,7 +1111,6 @@ object VersionedStore {
       // pruning proved no file can hold a deleted key → the delete is
       // a NO-OP; don't burn a version on an empty rewrite
       if (!insertUpdates && touched.isEmpty) return head
-      val updateKeys = updates.select(keys.map(col): _*).distinct()
       def fullMerged = {
         val kept = read(spark, root, head)
           .join(updateKeys, keys, "left_anti")
@@ -1025,7 +1158,8 @@ object VersionedStore {
             (aligned, Some(Carry(untouched, carriedRows,
               snap.stats.filter { case (f, _) => untouchedSet(f) },
               snap.fileRows.filter { case (f, _) => untouchedSet(f) },
-              snap.strStats.filter { case (f, _) => untouchedSet(f) })))
+              snap.strStats.filter { case (f, _) => untouchedSet(f) },
+              snap.fileSizes.filter { case (f, _) => untouchedSet(f) })))
           } else (fullMerged, None)
         }
       // a delete that leaves no carried file and no surviving row

@@ -77,6 +77,13 @@ object OnlineStore {
     * correct; like the IVF inverted file, merge-written files can span
     * buckets and degrade [[pointLookup]]'s file pruning until
     * [[compactSnapshot]].
+    *
+    * A local batch of at most 1,024 rows is resolved on the driver
+    * (VersionedStore.merge): its bucket and key bounds, value sets and
+    * anti-join keys come from one collect that runs no job, and the
+    * touched files are read from the manifest with no listing. Such an
+    * upsert costs two Spark jobs: the broadcast of its keys and the
+    * write. A larger batch adds the bounds and value-set aggregates.
     */
   def upsertSnapshot(updates: DataFrame, root: String): Long = {
     import graft.offline.VersionedStore

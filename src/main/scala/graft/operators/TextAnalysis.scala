@@ -30,12 +30,16 @@ object TextAnalysis {
 
   // The signal formulas over a withTextStats frame. Ratios are plain
   // double divisions of exact longs, rounded 6dp. NULL text gives a NULL
-  // ts: its size/ratio signals are NULL, its repetition ratios 0.
+  // ts: its size/ratio signals are NULL, its repetition ratios 0. An
+  // empty text has no characters to take a share of: its per-character
+  // ratios are NULL too (under ANSI mode x / 0 throws).
   private def nWords: Column = col("ts.n_words")
   private def avgWordLen: Column =
     round((col("n_chars") - (nWords - 1)) / nWords, 6)
   private def stopwordRatio: Column = round(col("ts.stop_hits") / nWords, 6)
-  private def alphaRatio: Column = round(col("ts.alphas") / col("n_chars"), 6)
+  private def perChar(count: Column): Column =
+    round(when(col("n_chars") > 0, count / col("n_chars")), 6)
+  private def alphaRatio: Column = perChar(col("ts.alphas"))
   private def topWordRatio: Column =
     round(coalesce(col("ts.top_word") / nWords, lit(0.0)), 6)
   private def distinctWordRatio: Column =
@@ -54,7 +58,7 @@ object TextAnalysis {
       col("doc_id"), col("n_chars"), nWords.as("n_words"),
       avgWordLen.as("avg_word_len"),
       stopwordRatio.as("stopword_ratio"),
-      round(col("ts.digits") / col("n_chars"), 6).as("digit_ratio"),
+      perChar(col("ts.digits")).as("digit_ratio"),
       alphaRatio.as("alpha_ratio"),
       round(least(nWords / lit(100.0), lit(1.0)) * (lit(1.0) - stopwordRatio),
         6).as("quality_score"))
@@ -789,18 +793,28 @@ object TextAnalysis {
     * variance) surface as NULLs, never NaN.
     *
     * Scale shape: one corpus scan to the vocabulary-sized frequency
-    * table (map-side combinable); the rank window runs over THAT
-    * table (vocabulary ~ corpus^0.5, Heaps' law — documented
-    * SinglePartition over a model-sized frame, the freezeVocabulary
-    * precedent); the report is one aggregate row.
+    * table (map-side combinable), ranked without a global window by
+    * the distributed prefix pattern of FeatureEng.selectToBudget: the
+    * words of strictly higher count are a [[FeatureEng.runningTotal]]
+    * over distinct counts (bucketed offsets), the position inside a
+    * tie a window partitioned BY the count. A tie group is one window
+    * partition; in a Zipf vocabulary the largest is the words seen
+    * once, about half of it. The report is one aggregate row.
     */
   def zipfFit(docs: DataFrame, idCol: String, textCol: String)
   : DataFrame = {
     val freq = docs.select(explode(Fns.words(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-    val ranked = freq.withColumn("rank",
-      row_number().over(Window.orderBy(col("cnt").desc, col("w")))
-        .cast("long"))
+      .localCheckpoint(false) // feeds the tie totals AND the rank join
+    // rank = row_number over (cnt desc, w) = words of higher count +
+    // position by w among the words of equal count
+    val ties = freq.groupBy(negate(col("cnt")).as("negcnt"))
+      .agg(count(lit(1)).as("n_tie"))
+    val above = FeatureEng.runningTotal(ties, "negcnt", "n_tie")
+      .select(negate(col("ord")).as("cnt"),
+        (col("running_total") - col("val")).as("above"))
+    val ranked = freq.join(above, "cnt").withColumn("rank",
+      col("above") + row_number().over(Window.partitionBy("cnt").orderBy("w")))
     val sums = ranked.select(
         expr("CAST(round(1e6 * ln(rank)) AS BIGINT)").as("xm"),
         expr("CAST(round(1e6 * ln(cnt)) AS BIGINT)").as("ym"),

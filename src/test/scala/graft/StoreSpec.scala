@@ -228,6 +228,71 @@ class StoreSpec extends AnyFunSuite {
     assert(got == Map(0L -> "x", 159L -> "y", 80L -> "v80"))
   }
 
+  test("VersionedStore: a 1,025-row merge takes the aggregate path and still prunes by value set") {
+    val root = tmp("vmbig")
+    VersionedStore.create(
+      (0L until 1600L).map(i => (i, (i / 100).toInt)).toDF("id", "cell"), root)
+    VersionedStore.compact(spark, root, numFiles = 16, sortBy = Seq("cell"))
+    val head = VersionedStore.read(spark, root)
+    val before = head.inputFiles.toSet
+    assert(before.size == 16)
+    // one row past the driver-resolved batch size; cells {0, 15} span
+    // every file's range, but the value set misses the 14 between
+    val updates = (0L until 1025L)
+      .map(i => (100000L + i, if (i % 2 == 0) 0 else 15)).toDF("id", "cell")
+    val want = head.join(updates.select("cell").distinct(), Seq("cell"),
+        "left_anti").select("id", "cell").unionByName(updates)
+      .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    VersionedStore.merge(updates, root, Seq("cell"))
+    val merged = VersionedStore.read(spark, root)
+    val after = merged.inputFiles.toSet
+    // the files holding no row of cell 0 or 15 (each file's range is
+    // contiguous, so those hold no update value)
+    def name(path: String) = path.substring(path.lastIndexOf('/') + 1)
+    val hit = head.where(col("cell").isin(0, 15))
+      .select(input_file_name()).as[String].collect().map(name).toSet
+    val untouched = before.filterNot(f => hit(name(f)))
+    assert(untouched.size >= 12 && (before & after) == untouched,
+      s"kept ${(before & after).size} of ${before.size}, " +
+        s"expected ${untouched.size}")
+    assert(merged.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+      == want)
+  }
+
+  test("VersionedStore: a manifest without file sizes reads, merges and compacts by path") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val root = tmp("vnosize")
+    val rows = (0L until 200L).map(i => (i, s"v$i"))
+    VersionedStore.create(rows.toDF("id", "v"), root)
+    VersionedStore.compact(spark, root, numFiles = 4, sortBy = Seq("id"))
+    val manifest = new java.io.File(s"$root/_graft_log/v00000001.json")
+    val mapper = new ObjectMapper()
+    val m = mapper.readValue(manifest,
+      classOf[java.util.LinkedHashMap[String, Object]])
+    // the recorded sizes are the files' exact byte lengths
+    val sizes = m.get("fileSizes")
+      .asInstanceOf[java.util.Map[String, java.util.List[Number]]]
+    assert(sizes.size == 4)
+    sizes.forEach { (f, lm) =>
+      assert(lm.get(0).longValue == new java.io.File(s"$root/$f").length, f)
+    }
+    // a manifest written before sizes were recorded
+    m.remove("fileSizes")
+    mapper.writeValue(manifest, m)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(rowsOf(VersionedStore.read(spark, root)) == rows)
+    assert(rowsOf(VersionedStore.readRange(spark, root, "id", 10, 19)) ==
+      rows.slice(10, 20))
+    VersionedStore.merge(Seq((5L, "x"), (500L, "y")).toDF("id", "v"), root,
+      Seq("id"))
+    val want = rows.map { case (i, v) => (i, if (i == 5L) "x" else v) } :+
+      ((500L, "y"))
+    assert(rowsOf(VersionedStore.read(spark, root)) == want)
+    VersionedStore.compact(spark, root, numFiles = 2, sortBy = Seq("id"))
+    assert(rowsOf(VersionedStore.read(spark, root)) == want)
+  }
+
   test("VersionedStore: string-keyed merge prunes by footer ranges and value set") {
     val root = tmp("vstr")
     VersionedStore.create(
@@ -402,10 +467,8 @@ class StoreSpec extends AnyFunSuite {
     assert(afterSecond.count() == 5)
     // assert on the MANIFEST's schema, not a file read (Spark relaxes
     // file-read schemas to nullable, which would mask a manifest
-    // regression): the all-pruned readRange branch builds its empty
-    // frame from the manifest schema verbatim
-    val manifestSchema =
-      VersionedStore.readRange(spark, root, "id", 1e9, 2e9).schema
+    // regression): schemaOf returns the manifest schema verbatim
+    val manifestSchema = VersionedStore.schemaOf(spark, root)
     assert(manifestSchema("score").nullable,
       "a later non-null batch must not flip the evolved column back " +
         "to non-nullable in the manifest")

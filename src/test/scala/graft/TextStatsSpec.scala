@@ -87,4 +87,33 @@ class TextStatsSpec extends AnyFunSuite {
     check((1 to 300).map(_ =>
       Seq.fill(rnd.nextInt(24))(alphabet(rnd.nextInt(alphabet.size))).mkString))
   }
+
+  test("an empty document scores NULL per-character ratios, never a division by zero") {
+    import graft.operators.{Curate, TextAnalysis}
+    val docs = Seq((1L, "the cat sat on a mat with the dog"), (2L, ""))
+      .toDF("doc_id", "text")
+    val q = TextAnalysis.quality(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(q(2L).isNullAt(q(2L).fieldIndex("alpha_ratio")) &&
+      q(2L).isNullAt(q(2L).fieldIndex("digit_ratio")))
+    assert(q(1L).getAs[Double]("alpha_ratio") == 0.757576 &&
+      q(1L).getAs[Double]("digit_ratio") == 0.0)
+    val batch = TextAnalysis.qualityClassifier(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r).toMap
+    val (vocab, total) = TextAnalysis.freezeVocabulary(docs, "doc_id", "text", 10)
+    val frozen = TextAnalysis.qualityClassifierFrozen(docs, "doc_id", "text",
+        vocab, total)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    Seq(batch, frozen).foreach { out =>
+      assert(out(2L).isNullAt(out(2L).fieldIndex("alpha_ratio")))
+      assert(!out(2L).getAs[Boolean]("keep"))
+      assert(out(1L).getAs[Double]("alpha_ratio") == 0.757576)
+    }
+    val lenient = TextAnalysis.QualityThresholds(minWords = 1L,
+      minAvgWordLen = 0.0, minDistinctRatio = 0.0, maxTopWordRatio = 1.0)
+    val kept = Curate.corpus(docs, "doc_id", "text",
+        cfg = Curate.CurateConfig(quality = Some(lenient)))
+      .collect().map(_.getLong(0)).toSeq
+    assert(kept == Seq(1L))
+  }
 }

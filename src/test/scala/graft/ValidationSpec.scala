@@ -109,10 +109,8 @@ class ValidationSpec extends AnyFunSuite {
     assert(expected.size == 2, "missing key yields no row")
   }
 
-  test("pointLookup: a 3-key local batch runs at most two Spark jobs") {
-    import graft.online.OnlineStore
-    val (_, root) = shapeSnapshot
-    val keys = Seq("u7", "u300", "u999").toDF("entity_id")
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  private def countJobs[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -120,16 +118,49 @@ class ValidationSpec extends AnyFunSuite {
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    val rows =
-      try {
-        val r = OnlineStore.pointLookup(spark, root, keys).collect()
-        org.apache.spark.GraftSparkTestAccess
-          .waitListenerBusEmpty(spark.sparkContext, 30000)
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftSparkTestAccess
+        .waitListenerBusEmpty(spark.sparkContext, 30000)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("pointLookup: a 3-key local batch runs at most two Spark jobs") {
+    import graft.online.OnlineStore
+    val (_, root) = shapeSnapshot
+    val keys = Seq("u7", "u300", "u999").toDF("entity_id")
+    val (rows, jobs) =
+      countJobs(OnlineStore.pointLookup(spark, root, keys).collect())
     assert(rows.map(_.getString(0)).toSet == Set("u7", "u300"))
-    assert(jobs.get() <= 2,
-      s"a local key batch must cost the broadcast and the scan, ran ${jobs.get()} jobs")
+    assert(jobs <= 2,
+      s"a local key batch must cost the broadcast and the scan, ran $jobs jobs")
+  }
+
+  test("pointLookup: a read keeping more than 32 files runs two jobs, no listing") {
+    import graft.online.OnlineStore
+    import graft.offline.VersionedStore
+    // 64 single-bucket files: a 100-key batch keeps about 50 of them,
+    // past the 32 paths at which a path read lists files in a job
+    val vectors = (0 until 1024)
+      .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
+    val root = java.nio.file.Files
+      .createTempDirectory("pointwide").toString + "/snap"
+    OnlineStore.publishSnapshot(vectors, root, "entity_id",
+      nBuckets = 64, numFiles = 64)
+    val keys = (0 until 1024 by 10).map(i => s"u$i").toDF("entity_id")
+    // counted from the call on: a path-based file index lists its
+    // files when the frame is built, not when it runs
+    val (rows, jobs) =
+      countJobs(OnlineStore.pointLookup(spark, root, keys).collect())
+    assert(jobs == 2, s"broadcast + pruned scan, ran $jobs jobs")
+    val opened = OnlineStore.pointLookup(spark, root, keys).inputFiles.toSet
+    assert(opened.size >= 33 &&
+      opened.subsetOf(VersionedStore.read(spark, root).inputFiles.toSet),
+      s"the batch must keep more than 32 files, kept ${opened.size}")
+    assert(rows.map(r => (r.getString(0), r.getDouble(1))).toSet ==
+      OnlineStore.batchLookup(vectors, keys).collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSet)
   }
 
   test("pointLookup: duplicate, null, empty and distributed key batches equal batchLookup") {
@@ -185,6 +216,60 @@ class ValidationSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(after == got)
     assert(VersionedStore.read(spark, root).inputFiles.length <= 8)
+  }
+
+  test("upsertSnapshot: a local batch of at most 1,024 keys runs at most two jobs") {
+    import graft.online.OnlineStore
+    import graft.offline.VersionedStore
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val vectors = (0 until 512)
+      .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
+    val root = java.nio.file.Files
+      .createTempDirectory("snapjobs").toString + "/snap"
+    val v0 = OnlineStore.publishSnapshot(vectors, root, "entity_id",
+      nBuckets = 32, numFiles = 16)
+    val before = VersionedStore.read(spark, root, v0)
+    val fileSet = before.inputFiles.toSet
+    // the entities of half the buckets, one of them twice, a NULL key
+    // and a new key: a few hundred rows that leave some files untouched
+    val kb = "_kb_entity_id_32"
+    val bucketOf = pmod(xxhash64(col("entity_id").cast("string")), lit(32L))
+    val hot = vectors.select(col("entity_id"), bucketOf.as("b"))
+      .where(col("b") < 16).select("entity_id").as[String].collect()
+    val rows = hot.map(k => (Option(k), -1.0)).toSeq ++
+      Seq((Some(hot(0)), -2.0), (None, 7.0), (Some("u9999"), 42.0))
+    assert(rows.size <= 1024)
+    val updates = rows.toDF("entity_id", "f_a")
+    val (v1, jobs) = countJobs(OnlineStore.upsertSnapshot(updates, root))
+    assert(jobs <= 2, s"an upsert of a local batch ran $jobs jobs")
+    // the snapshot equals the anti-join + union reference
+    val keyed = updates.withColumn(kb, bucketOf)
+    val want = before.join(keyed.select(kb, "entity_id"),
+        Seq(kb, "entity_id"), "left_anti").unionByName(keyed)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("entity_id", "f_a", kb).collect().map(_.toSeq).toSeq
+        .sortBy(_.mkString("|"))
+    assert(rowsOf(VersionedStore.read(spark, root, v1)) == rowsOf(want))
+    // carried files: exactly those whose bucket range or entity range
+    // holds no update value (NULL entity ids never match)
+    val bkts = keyed.select(kb).as[Long].collect().toSet
+    val ids = rows.flatMap(_._1).toSet
+    def name(path: String) = path.substring(path.lastIndexOf('/') + 1)
+    val ranges = before.groupBy(org.apache.spark.sql.functions.input_file_name())
+      .agg(org.apache.spark.sql.functions.min(kb),
+        org.apache.spark.sql.functions.max(kb),
+        org.apache.spark.sql.functions.min("entity_id"),
+        org.apache.spark.sql.functions.max("entity_id"))
+      .collect().map(r => name(r.getString(0)) ->
+        ((r.getLong(1), r.getLong(2), r.getString(3), r.getString(4)))).toMap
+    val expectCarried = fileSet.filter { f =>
+      val (bLo, bHi, sLo, sHi) = ranges(name(f))
+      !bkts.exists(b => b >= bLo && b <= bHi) ||
+        !ids.exists(s => s >= sLo && s <= sHi)
+    }
+    val carried = fileSet & VersionedStore.read(spark, root, v1).inputFiles.toSet
+    assert(expectCarried.nonEmpty && carried == expectCarried,
+      s"carried ${carried.size}, expected ${expectCarried.size} of ${fileSet.size}")
   }
 
   test("deleteSnapshotKeys: retracted entities stop resolving; pruned rewrite; history intact") {
