@@ -921,12 +921,12 @@ object VersionedStore {
     * type-widening drifting the merged schema away from the carried
     * files' shape.
     *
-    * Key bounds and value sets come from the batch itself: a batch of
-    * at most 1,024 rows is collected once (no job over a local batch)
-    * and resolved on the driver, its distinct key tuples broadcast as a
-    * local relation for the anti-join; a larger batch runs one bounds
-    * aggregate and capped distinct collects. Both give the same file
-    * split.
+    * Key bounds and value sets come from the batch itself: a batch
+    * whose plan optimizes to a local relation of at most 1,024 rows is
+    * collected (no job) and resolved on the driver, its distinct key
+    * tuples broadcast as a local relation for the anti-join; any other
+    * batch runs one bounds aggregate and capped distinct collects, and
+    * is never collected first. Both give the same file split.
     *
     * Optimistic concurrency done right: the merged content is bound to
     * the head it was computed from (commit claims exactly head+1); if
@@ -992,16 +992,23 @@ object VersionedStore {
     // rewrites the world. Capped: a high-cardinality key falls back
     // to its range (the set would cost more than it prunes).
     val setCap = 1024
-    // One capped collect of the key projection, numeric keys also on
-    // the double scale. Over a local batch Catalyst folds projection
-    // and limit into the relation, so no job runs. A batch of at most
-    // setCap rows is the WHOLE batch: its bounds, value sets and
-    // anti-join keys are then resolved here on the driver.
+    // A batch that optimizes to a local relation of at most setCap
+    // rows is resolved here on the driver: Catalyst folds the key
+    // projection (numeric keys also on the double scale) into the
+    // relation, so collecting it runs no job, and its bounds, value
+    // sets and anti-join keys all come from that one array. Any other
+    // batch takes the aggregate path and is never collected.
     val keyCols = updates.select(keys.map(col): _*)
-    val batch = updates
-      .select(keys.map(col) ++ prunableKeys.map(k => col(k).cast("double")): _*)
-      .limit(setCap + 1).collect()
-    val small = batch.length <= setCap
+    val small = updates.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.size <= setCap
+      case _ => false
+    }
+    val batch =
+      if (!small) Array.empty[org.apache.spark.sql.Row]
+      else updates
+        .select(keys.map(col) ++ prunableKeys.map(k => col(k).cast("double")): _*)
+        .collect()
     val (updBounds, strBounds, updValueSets, strValueSets) =
       if (small) {
         val num = prunableKeys.zipWithIndex.map { case (k, i) =>

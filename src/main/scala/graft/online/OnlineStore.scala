@@ -78,12 +78,15 @@ object OnlineStore {
     * buckets and degrade [[pointLookup]]'s file pruning until
     * [[compactSnapshot]].
     *
-    * A local batch of at most 1,024 rows is resolved on the driver
+    * A batch that is a local relation of at most 1,024 rows (e.g.
+    * `createDataFrame` over driver rows) is resolved on the driver
     * (VersionedStore.merge): its bucket and key bounds, value sets and
     * anti-join keys come from one collect that runs no job, and the
     * touched files are read from the manifest with no listing. Such an
     * upsert costs two Spark jobs: the broadcast of its keys and the
-    * write. A larger batch adds the bounds and value-set aggregates.
+    * write. Any other batch (a larger one, or one computed by a
+    * distributed plan) runs the bounds and value-set aggregates and a
+    * distributed distinct of its keys instead, as before.
     */
   def upsertSnapshot(updates: DataFrame, root: String): Long = {
     import graft.offline.VersionedStore

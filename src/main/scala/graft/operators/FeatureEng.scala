@@ -639,11 +639,10 @@ object FeatureEng {
     * schedule.
     *
     * Scale shape: the schedule table is |sources|·maxEpochs rows — a
-    * documented SinglePartition window over that config-sized table
-    * (never a corpus- or vocabulary-sized one) that broadcasts back;
-    * full units are broadcast joins against the one checkpointed
-    * token projection; the ONLY deep prefix runs over the single
-    * straddling source, through
+    * documented model-sized SinglePartition window (the zipfFit
+    * precedent) that broadcasts back; full units are broadcast joins
+    * against the one checkpointed token projection; the ONLY deep
+    * prefix runs over the single straddling source, through
     * [[md5DenseRank]] (bucketed, no global sort) and [[runningTotal]]
     * (bucketed offsets) — never a corpus-sized window partition.
     */

@@ -793,28 +793,18 @@ object TextAnalysis {
     * variance) surface as NULLs, never NaN.
     *
     * Scale shape: one corpus scan to the vocabulary-sized frequency
-    * table (map-side combinable), ranked without a global window by
-    * the distributed prefix pattern of FeatureEng.selectToBudget: the
-    * words of strictly higher count are a [[FeatureEng.runningTotal]]
-    * over distinct counts (bucketed offsets), the position inside a
-    * tie a window partitioned BY the count. A tie group is one window
-    * partition; in a Zipf vocabulary the largest is the words seen
-    * once, about half of it. The report is one aggregate row.
+    * table (map-side combinable); the rank window runs over THAT
+    * table (vocabulary ~ corpus^0.5, Heaps' law — documented
+    * SinglePartition over a model-sized frame, the freezeVocabulary
+    * precedent); the report is one aggregate row.
     */
   def zipfFit(docs: DataFrame, idCol: String, textCol: String)
   : DataFrame = {
     val freq = docs.select(explode(Fns.words(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false) // feeds the tie totals AND the rank join
-    // rank = row_number over (cnt desc, w) = words of higher count +
-    // position by w among the words of equal count
-    val ties = freq.groupBy(negate(col("cnt")).as("negcnt"))
-      .agg(count(lit(1)).as("n_tie"))
-    val above = FeatureEng.runningTotal(ties, "negcnt", "n_tie")
-      .select(negate(col("ord")).as("cnt"),
-        (col("running_total") - col("val")).as("above"))
-    val ranked = freq.join(above, "cnt").withColumn("rank",
-      col("above") + row_number().over(Window.partitionBy("cnt").orderBy("w")))
+    val ranked = freq.withColumn("rank",
+      row_number().over(Window.orderBy(col("cnt").desc, col("w")))
+        .cast("long"))
     val sums = ranked.select(
         expr("CAST(round(1e6 * ln(rank)) AS BIGINT)").as("xm"),
         expr("CAST(round(1e6 * ln(cnt)) AS BIGINT)").as("ym"),

@@ -75,14 +75,6 @@ class PlanSpec extends AnyFunSuite {
     assert("Exchange SinglePartition".r.findAllIn(plan).length <= 1)
   }
 
-  test("q_zipf_fit: every rank window is partitioned (no single-partition window)") {
-    val plan = SparkEntry.qZipfFit(spark, TestSpark.sfDir).queryExecution.optimizedPlan
-    val windows = plan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
-    assert(windows.nonEmpty && windows.forall(_.partitionSpec.nonEmpty),
-      s"unpartitioned window in:\n$plan")
-  }
-
   test("q_materialize_vectors: fused to exactly one shuffle") {
     assert(countShuffles(SparkEntry.qMaterializeVectors(spark, TestSpark.sfDir), pins = 0) == 1)
   }

@@ -228,18 +228,20 @@ class StoreSpec extends AnyFunSuite {
     assert(got == Map(0L -> "x", 159L -> "y", 80L -> "v80"))
   }
 
-  test("VersionedStore: a 1,025-row merge takes the aggregate path and still prunes by value set") {
-    val root = tmp("vmbig")
+  /** Merges `updates`, keyed on cell and holding only cells 0 and 15,
+    * into a 16-file table compacted by cell, and checks the merged rows
+    * and that exactly the files holding neither cell are carried. Cells
+    * {0, 15} span every file's range, but the value set misses the 14
+    * between. */
+  private def assertValueSetPruned(updates: org.apache.spark.sql.DataFrame,
+                                   prefix: String): Unit = {
+    val root = tmp(prefix)
     VersionedStore.create(
       (0L until 1600L).map(i => (i, (i / 100).toInt)).toDF("id", "cell"), root)
     VersionedStore.compact(spark, root, numFiles = 16, sortBy = Seq("cell"))
     val head = VersionedStore.read(spark, root)
     val before = head.inputFiles.toSet
     assert(before.size == 16)
-    // one row past the driver-resolved batch size; cells {0, 15} span
-    // every file's range, but the value set misses the 14 between
-    val updates = (0L until 1025L)
-      .map(i => (100000L + i, if (i % 2 == 0) 0 else 15)).toDF("id", "cell")
     val want = head.join(updates.select("cell").distinct(), Seq("cell"),
         "left_anti").select("id", "cell").unionByName(updates)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
@@ -257,6 +259,23 @@ class StoreSpec extends AnyFunSuite {
         s"expected ${untouched.size}")
     assert(merged.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
       == want)
+  }
+
+  test("VersionedStore: a 1,025-row merge takes the aggregate path and still prunes by value set") {
+    // one row past the batch size resolved on the driver
+    assertValueSetPruned((0L until 1025L)
+      .map(i => (100000L + i, if (i % 2 == 0) 0 else 15)).toDF("id", "cell"),
+      "vmbig")
+  }
+
+  test("VersionedStore: a small batch from a distributed plan takes the aggregate path") {
+    // six rows, but computed by a distributed plan: never collected
+    // before the merge, bounds and value sets come from aggregates
+    val updates = spark.range(0, 6, 1, 2).select((col("id") + 100000L).as("id"),
+      when(col("id") % 2 === 0, 0).otherwise(15).as("cell"))
+    assert(!updates.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assertValueSetPruned(updates, "vmdist")
   }
 
   test("VersionedStore: a manifest without file sizes reads, merges and compacts by path") {
