@@ -2,9 +2,10 @@ package graft.offline
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared manifest-file plumbing for the offline stores. */
 private[offline] object StorageUtil {
@@ -106,40 +107,47 @@ private[offline] final class ManifestFileIndex(
   * }}}
   *
   * Scale properties:
-  *  - A manifest lists EVERY file in its snapshot, with its byte
-  *    length and modification time, so reading version v opens exactly
-  *    those files — O(|snapshot|), never O(|history|); no filter over
-  *    a commit column, no tombstone reconciliation. The scan is planned
-  *    from the manifest alone ([[ManifestFileIndex]]): no path
-  *    globbing, no existence probes, no listing job and no block
-  *    locations, at any file count.
+  *  - A manifest lists EVERY file in its snapshot, so reading version
+  *    v opens exactly those files — O(|snapshot|), never
+  *    O(|history|); no filter over a commit column, no tombstone
+  *    reconciliation. It is decoded in one place into one entry per
+  *    file (path, rows, byte length, mtime, footer column ranges); a
+  *    manifest written before one of those fields existed is upgraded
+  *    there, once, so nothing downstream has a fallback.
+  *  - Every read takes one path: the snapshot's entries, pruned by one
+  *    range/value-set proof, planned as a scan from the entries alone
+  *    ([[ManifestFileIndex]]): no path globbing, no existence probes,
+  *    no listing job and no block locations, at any file count.
   *  - Commits are optimistic: the manifest is created with
   *    `create(overwrite = false)` (atomic on HDFS and local file
   *    systems), so concurrent writers race on the version number and
   *    the loser retries against the new head. Readers see a complete
   *    manifest or none — snapshot isolation by construction.
   *  - Data files are immutable; `merge` is copy-on-write over ONLY
-  *    the files whose key ranges intersect the updates — driven by the
-  *    per-file min/max footer stats in the manifest; provably
-  *    unmatched files are carried into the new snapshot by reference.
+  *    the files whose key ranges intersect the updates — the same
+  *    proof the reads prune with; provably unmatched files are
+  *    carried into the new snapshot by reference, entries and all.
   */
 object VersionedStore {
 
   case class VersionInfo(version: Long, op: String, nFiles: Int, rows: Long)
 
-  /** One snapshot's manifest: the exact file list, row count, schema,
-    * per-file column ranges for data skipping, per-file row counts
-    * (fileRows — used by partial merge to carry untouched files without
-    * recounting them; empty for manifests written before it existed),
-    * and per-file (byte length, modification time) — fileSizes, what a
-    * scan is planned from; empty for manifests written before it. */
-  private case class Snapshot(op: String, files: Seq[String], rows: Long,
-                              schemaJson: String,
-                              stats: Map[String, Map[String, (Double, Double)]],
-                              commitTsMs: Long,
-                              fileRows: Map[String, Long],
-                              strStats: Map[String, Map[String, (String, String)]],
-                              fileSizes: Map[String, (Long, Long)])
+  /** One data file of a snapshot: its path under the table root, row
+    * count, byte length and modification time (a scan is planned from
+    * them), and its footer [min, max] column ranges — numeric ones on
+    * the `cast(col AS double)` scale, string ones as UTF-8 bytes. A
+    * column without a range has no usable stats: it may hold anything. */
+  private case class FileEntry(path: String, rows: Long, length: Long,
+                               mtime: Long,
+                               ranges: Map[String, (Double, Double)],
+                               strRanges: Map[String, (Array[Byte], Array[Byte])])
+
+  /** One version's manifest, decoded. */
+  private case class Snapshot(version: Long, op: String,
+                              files: Seq[FileEntry], schema: StructType,
+                              commitTsMs: Long) {
+    def rows: Long = files.map(_.rows).sum
+  }
 
   private val mapper = new ObjectMapper()
 
@@ -162,57 +170,58 @@ object VersionedStore {
       .foldLeft(-1L)(math.max)
   }
 
+  /** Decode manifest `v` — the only reader of the manifest format
+    * ([[commit]] is its only writer). A manifest written before a
+    * per-file field existed is brought up to the current shape here:
+    * byte lengths and mtimes from one listing per data directory, row
+    * counts from the parquet footers, the schema from a footer. A file
+    * such a manifest lists but storage lacks fails the decode with an
+    * IllegalStateException, which [[readManifestOpt]] does not mistake
+    * for a vacuumed version. Files without recorded ranges have none
+    * (manifests from before data skipping): they may match anything. */
   private def readManifest(spark: SparkSession, root: String, v: Long)
   : Snapshot = {
     val p = manifestPath(root, v)
     val fs = fileSystem(spark, p)
     require(fs.exists(p), s"version $v does not exist under $root")
-    val bytes = StorageUtil.readAllBytes(fs, p)
-    val m = mapper.readValue(bytes, classOf[java.util.Map[String, Object]])
-    val files = m.get("files").asInstanceOf[java.util.List[String]]
-      .asScala.toSeq
-    val stats: Map[String, Map[String, (Double, Double)]] =
-      m.get("stats") match {
-        case null => Map.empty // manifests written before data skipping
-        case s: java.util.Map[_, _] =>
-          s.asInstanceOf[java.util.Map[String, java.util.Map[String,
-              java.util.List[Number]]]]
-            .asScala.map { case (f, cols) =>
-              f -> cols.asScala.map { case (c, mm) =>
-                c -> (mm.get(0).doubleValue(), mm.get(1).doubleValue())
-              }.toMap
-            }.toMap
-      }
-    val fileRows: Map[String, Long] = m.get("fileRows") match {
-      case null => Map.empty // manifests written before partial merge
-      case fr: java.util.Map[_, _] =>
-        fr.asInstanceOf[java.util.Map[String, Number]].asScala
-          .map { case (f, n) => f -> n.longValue() }.toMap
+    val m = mapper.readTree(StorageUtil.readAllBytes(fs, p))
+    val paths = m.get("files").asScala.map(_.asText).toSeq
+    val (fileRows, fileSizes) = (m.path("fileRows"), m.path("fileSizes"))
+    val stale = paths.filterNot(f => fileRows.has(f) && fileSizes.has(f))
+    val listed = stale.map(f => new Path(f).getParent.toString).distinct
+      .flatMap { dir =>
+        val d = new Path(root, dir)
+        if (!fs.exists(d)) Nil
+        else fs.listStatus(d).map(st => s"$dir/${st.getPath.getName}" -> st)
+      }.toMap
+    stale.find(f => !listed.contains(f)).foreach { f =>
+      throw new IllegalStateException(
+        s"version $v of $root lists $f, which is missing from storage")
     }
-    val strStats: Map[String, Map[String, (String, String)]] =
-      m.get("strStats") match {
-        case null => Map.empty // manifests written before string stats
-        case s: java.util.Map[_, _] =>
-          s.asInstanceOf[java.util.Map[String, java.util.Map[String,
-              java.util.List[String]]]]
-            .asScala.map { case (f, cols) =>
-              f -> cols.asScala.map { case (c, mm) =>
-                c -> (mm.get(0), mm.get(1))
-              }.toMap
-            }.toMap
-      }
-    val fileSizes: Map[String, (Long, Long)] = m.get("fileSizes") match {
-      case null => Map.empty // manifests written before manifest scans
-      case fs: java.util.Map[_, _] =>
-        fs.asInstanceOf[java.util.Map[String, java.util.List[Number]]]
-          .asScala.map { case (f, lm) =>
-            f -> (lm.get(0).longValue(), lm.get(1).longValue())
-          }.toMap
+    val uncounted = stale.filterNot(fileRows.has)
+    val counted = uncounted.zip(footerStats(
+      spark.sparkContext.hadoopConfiguration,
+      uncounted.map(new Path(root, _))).map(_._1)).toMap
+    val b64 = java.util.Base64.getDecoder
+    def ranges[T](byCol: JsonNode, as: JsonNode => T): Map[String, (T, T)] =
+      byCol.properties.asScala.map { e =>
+        e.getKey -> (as(e.getValue.get(0)), as(e.getValue.get(1)))
+      }.toMap
+    val files = paths.map { f =>
+      val (length, mtime) =
+        if (fileSizes.has(f))
+          (fileSizes.get(f).get(0).asLong, fileSizes.get(f).get(1).asLong)
+        else (listed(f).getLen, listed(f).getModificationTime)
+      FileEntry(f, if (fileRows.has(f)) fileRows.get(f).asLong else counted(f),
+        length, mtime, ranges(m.path("stats").path(f), _.asDouble),
+        ranges(m.path("strStats").path(f), n => b64.decode(n.asText)))
     }
-    Snapshot(m.get("op").toString, files, m.get("rows").toString.toLong,
-      Option(m.get("schema")).map(_.toString).getOrElse(""), stats,
-      Option(m.get("ts")).map(_.toString.toLong).getOrElse(0L), fileRows,
-      strStats, fileSizes)
+    val schema = m.path("schema").asText("") match {
+      case "" if paths.isEmpty => new StructType()
+      case "" => spark.read.parquet(new Path(root, paths.head).toString).schema
+      case json => DataType.fromJson(json).asInstanceOf[StructType]
+    }
+    Snapshot(v, m.get("op").asText, files, schema, m.path("ts").asLong(0L))
   }
 
   /** Tolerant manifest read: None when the manifest has vanished —
@@ -270,6 +279,10 @@ object VersionedStore {
 
   // --- footer-driven file statistics ---------------------------------
 
+  /** A file's row count and its numeric and string column ranges. */
+  private type FooterStats =
+    (Long, Map[String, (Double, Double)], Map[String, (Array[Byte], Array[Byte])])
+
   /** Per-file row counts and [min, max] ranges for top-level
     * int/long/float/double/decimal/timestamp columns, read from the
     * parquet FOOTERS of the freshly written files — pure metadata, no
@@ -280,42 +293,35 @@ object VersionedStore {
     * double conversion can never un-conservatively narrow a range.
     * A column missing usable stats in ANY row group of a file simply
     * has no entry for that file — readers must treat "no stats" as
-    * "may match".
+    * "may match". Results are in the order of `files`.
     */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-                          dataDir: Path, names: Seq[String])
-  : (Map[String, Long], Map[String, Map[String, (Double, Double)]],
-     Map[String, Map[String, (String, String)]]) = {
+                          files: Seq[Path]): Seq[FooterStats] = {
+    if (files.isEmpty) return Nil // no pool for a manifest decode
     // Footer opens are storage round-trips; serially they would make
     // the commit O(nFiles × RTT) on the driver. A bounded pool keeps
     // a 50k-file append's metadata pass in seconds, not minutes. (The
     // production refinement is collecting these during the WRITE, via
     // task-side commit messages — then this pass disappears.)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(32, names.size)))
+      math.max(1, math.min(32, files.size)))
     try {
-      val futures = names.map(n => n -> pool.submit(
-        new java.util.concurrent.Callable[
-            (Long, Map[String, (Double, Double)],
-             Map[String, (String, String)])] {
-          def call() = fileFooterStats(conf, new Path(dataDir, n))
+      val futures = files.map(f => pool.submit(
+        new java.util.concurrent.Callable[FooterStats] {
+          def call() = fileFooterStats(conf, f)
         }))
-      val results = futures.map { case (n, f) =>
+      futures.map { f =>
         // surface the worker's real failure, not the pool's wrapper
-        n -> (try f.get() catch {
+        try f.get() catch {
           case e: java.util.concurrent.ExecutionException
             if e.getCause != null => throw e.getCause
-        })
+        }
       }
-      (results.map { case (n, (rows, _, _)) => n -> rows }.toMap,
-        results.collect { case (n, (_, s, _)) if s.nonEmpty => n -> s }.toMap,
-        results.collect { case (n, (_, _, b)) if b.nonEmpty => n -> b }.toMap)
     } finally pool.shutdown()
   }
 
   private def fileFooterStats(conf: org.apache.hadoop.conf.Configuration,
-                              file: Path)
-  : (Long, Map[String, (Double, Double)], Map[String, (String, String)]) = {
+                              file: Path): FooterStats = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     {
@@ -407,61 +413,95 @@ object VersionedStore {
             }
           }
         }
-        val b64 = java.util.Base64.getEncoder
         (totalRows, acc.collect { case (c, (lo, hi, true)) =>
           c -> (Math.nextDown(lo), Math.nextUp(hi))
         }.toMap, bacc.collect { case (c, (lo, hi, true)) =>
-          c -> (b64.encodeToString(lo), b64.encodeToString(hi))
+          c -> (lo, hi)
         }.toMap)
       } finally reader.close()
     }
   }
 
-  /** The snapshot's recorded schema, if the manifest has one (empty
-    * only for manifests written before schemas were recorded). */
-  private def snapshotStruct(snap: Snapshot)
-  : Option[org.apache.spark.sql.types.StructType] =
-    if (snap.schemaJson.isEmpty) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
+  // --- reads ----------------------------------------------------------
 
-  /** Open a subset of a snapshot's files AS the snapshot's schema.
+  /** What a read or a merge seeks in one column, on the scale of the
+    * manifest's ranges for it: any value within [lo, hi] (Left), or
+    * exactly the values of a set (Right). */
+  private case class Sought[T](column: String, within: Either[(T, T), Seq[T]])
+
+  private val utf8Order: Ordering[Array[Byte]] = new Ordering[Array[Byte]] {
+    def compare(a: Array[Byte], b: Array[Byte]): Int =
+      java.util.Arrays.compareUnsigned(a, b)
+  }
+
+  private def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The pruning proof behind every read and merge: a file may hold a
+    * sought value unless, for some sought column, its recorded range
+    * lies outside [lo, hi] or contains no value of the set. A column
+    * with no recorded range may hold anything. Numeric ranges compare
+    * by IEEE order (NaN compares false, -0.0 equals 0.0), string
+    * ranges by unsigned UTF-8 bytes — parquet's STRING stat order,
+    * which Spark's string comparisons share. Ranges cover non-NULL
+    * values only and NULL never equality-matches, so NULLs on either
+    * side cannot defeat the proof. */
+  private def mayHold(f: FileEntry, num: Seq[Sought[Double]],
+                      str: Seq[Sought[Array[Byte]]]): Boolean = {
+    def may[T](ranges: Map[String, (T, T)], ord: Ordering[T])(s: Sought[T]) =
+      ranges.get(s.column).forall { case (fLo, fHi) =>
+        s.within match {
+          case Left((lo, hi)) => !ord.lt(fHi, lo) && !ord.lt(hi, fLo)
+          case Right(vs) => vs.exists(x => ord.lteq(fLo, x) && ord.lteq(x, fHi))
+        }
+      }
+    num.forall(may(f.ranges, Ordering.Double.IeeeOrdering)) &&
+      str.forall(may(f.strRanges, utf8Order))
+  }
+
+  /** Open some of a snapshot's files AS the snapshot's schema: a
+    * HadoopFsRelation over a [[ManifestFileIndex]] of exactly `files`
+    * (possibly none: an empty frame of the snapshot's schema), with
+    * the data schema nullable at every level as a path read makes it.
     * Pinning the read schema to the manifest (instead of inferring
     * from an arbitrary footer) is what makes add-column schema
     * evolution readable: files written before a column existed
     * null-backfill it, and no footer-sampling race can drop an
-    * evolved column. Also skips the schema-inference footer read.
-    *
-    * When the manifest records every file's size, the scan is a
-    * HadoopFsRelation over a [[ManifestFileIndex]] of exactly `files`
-    * (possibly none: an empty frame of the snapshot's schema), with
-    * the data schema nullable at every level as a path read makes it.
-    * Manifests written before sizes were recorded read by path. */
+    * evolved column. */
   private def readFiles(spark: SparkSession, root: String, snap: Snapshot,
-                        files: Seq[String]): DataFrame =
-    snapshotStruct(snap) match {
-      case Some(schema) if files.forall(snap.fileSizes.contains) =>
-        import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-        import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-        val rootPath = new Path(root)
-        val fs = fileSystem(spark, rootPath)
-        val blockSize = fs.getDefaultBlockSize(rootPath)
-        val statuses = files.map { f =>
-          val (len, mtime) = snap.fileSizes(f)
-          new org.apache.hadoop.fs.FileStatus(len, false, 0, blockSize,
-            mtime, fs.makeQualified(new Path(root, f)))
-        }
-        spark.baseRelationToDataFrame(HadoopFsRelation(
-          new ManifestFileIndex(statuses),
-          partitionSchema = new org.apache.spark.sql.types.StructType(),
-          dataSchema = nullableEverywhere(schema).asInstanceOf[
-            org.apache.spark.sql.types.StructType],
-          bucketSpec = None, fileFormat = new ParquetFileFormat(),
-          options = Map.empty)(spark))
-      case struct =>
-        struct.fold(spark.read)(spark.read.schema)
-          .parquet(files.map(f => new Path(root, f).toString): _*)
-    }
+                        files: Seq[FileEntry]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val rootPath = new Path(root)
+    val fs = fileSystem(spark, rootPath)
+    val blockSize = fs.getDefaultBlockSize(rootPath)
+    val statuses = files.map(f =>
+      new org.apache.hadoop.fs.FileStatus(f.length, false, 0, blockSize,
+        f.mtime, fs.makeQualified(new Path(root, f.path))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ManifestFileIndex(statuses), partitionSchema = new StructType(),
+      dataSchema = nullableEverywhere(snap.schema).asInstanceOf[StructType],
+      bucketSpec = None, fileFormat = new ParquetFileFormat(),
+      options = Map.empty)(spark))
+  }
+
+  /** The snapshot at `versionAsOf`, or at the latest version. */
+  private def snapshotAt(spark: SparkSession, root: String,
+                         versionAsOf: Long): Snapshot = {
+    val v = if (versionAsOf >= 0) versionAsOf else latestVersion(spark, root)
+    require(v >= 0, s"no committed version under $root")
+    readManifest(spark, root, v)
+  }
+
+  /** The files of a snapshot that may hold the sought values. */
+  private def scan(spark: SparkSession, root: String, versionAsOf: Long,
+                   num: Seq[Sought[Double]] = Nil,
+                   str: Seq[Sought[Array[Byte]]] = Nil): DataFrame = {
+    val snap = snapshotAt(spark, root, versionAsOf)
+    require(snap.files.nonEmpty,
+      s"version ${snap.version} of $root is an empty snapshot")
+    readFiles(spark, root, snap, snap.files.filter(mayHold(_, num, str)))
+  }
 
   /** Read a snapshot: the latest version, or `versionAsOf` — opening
     * ONLY that manifest's files, as that manifest's schema (files
@@ -469,13 +509,7 @@ object VersionedStore {
     * version returns the old schema unchanged).
     */
   def read(spark: SparkSession, root: String, versionAsOf: Long = -1L)
-  : DataFrame = {
-    val v = if (versionAsOf >= 0) versionAsOf else latestVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val snap = readManifest(spark, root, v)
-    require(snap.files.nonEmpty, s"version $v of $root is an empty snapshot")
-    readFiles(spark, root, snap, snap.files)
-  }
+  : DataFrame = scan(spark, root, versionAsOf)
 
   /** Range-predicate read with MANIFEST-level data skipping: only
     * files whose footer [min, max] range for `column` intersects
@@ -494,19 +528,9 @@ object VersionedStore {
                 lo: Double, hi: Double, versionAsOf: Long = -1L)
   : DataFrame = {
     require(lo <= hi, s"empty range [$lo, $hi]")
-    val v = if (versionAsOf >= 0) versionAsOf else latestVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val snap = readManifest(spark, root, v)
-    require(snap.files.nonEmpty, s"version $v of $root is an empty snapshot")
-    val kept = snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true // no stats recorded — may match
-      }
-    }
-    val pred = org.apache.spark.sql.functions.col(column)
-      .cast("double").between(lo, hi)
-    readFiles(spark, root, snap, kept).where(pred)
+    scan(spark, root, versionAsOf, num = Seq(Sought(column, Left((lo, hi)))))
+      .where(org.apache.spark.sql.functions.col(column)
+        .cast("double").between(lo, hi))
   }
 
   /** Point-set read with the same MANIFEST-level data skipping as
@@ -528,20 +552,10 @@ object VersionedStore {
   : DataFrame = {
     // empty IN-set == IN () == no rows — callers like an empty serve
     // batch must get an empty frame, not a crash
-    val v = if (versionAsOf >= 0) versionAsOf else latestVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val snap = readManifest(spark, root, v)
-    require(snap.files.nonEmpty, s"version $v of $root is an empty snapshot")
     val sorted = values.distinct.sorted
-    val kept = snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) => sorted.exists(x => x >= mn && x <= mx)
-        case None => true // no stats recorded — may match
-      }
-    }
-    val pred = org.apache.spark.sql.functions.col(column)
-      .cast("double").isin(sorted: _*)
-    readFiles(spark, root, snap, kept).where(pred)
+    scan(spark, root, versionAsOf, num = Seq(Sought(column, Right(sorted))))
+      .where(org.apache.spark.sql.functions.col(column)
+        .cast("double").isin(sorted: _*))
   }
 
   /** [[readValues]] for a STRING column: file pruning against the
@@ -555,47 +569,19 @@ object VersionedStore {
     */
   def readValuesStr(spark: SparkSession, root: String, column: String,
                     values: Seq[String], versionAsOf: Long = -1L)
-  : DataFrame = {
-    val v = if (versionAsOf >= 0) versionAsOf else latestVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val snap = readManifest(spark, root, v)
-    require(snap.files.nonEmpty, s"version $v of $root is an empty snapshot")
-    val utf8 = values.distinct.map(
-      _.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    def cmp(a: Array[Byte], b: Array[Byte]): Int =
-      java.util.Arrays.compareUnsigned(a, b)
-    val dec64 = java.util.Base64.getDecoder
-    val kept = snap.files.filter { f =>
-      snap.strStats.get(f).flatMap(_.get(column)) match {
-        case Some((mnB, mxB)) =>
-          val mn = dec64.decode(mnB)
-          val mx = dec64.decode(mxB)
-          utf8.exists(x => cmp(x, mn) >= 0 && cmp(x, mx) <= 0)
-        case None => true // no stats recorded — may match
-      }
-    }
-    val pred = org.apache.spark.sql.functions.col(column)
-      .isin(values.distinct: _*)
-    readFiles(spark, root, snap, kept).where(pred)
-  }
+  : DataFrame =
+    scan(spark, root, versionAsOf,
+      str = Seq(Sought(column, Right(values.distinct.map(utf8)))))
+      .where(org.apache.spark.sql.functions.col(column)
+        .isin(values.distinct: _*))
 
   /** The snapshot's schema from the manifest alone — no file listing,
     * no scan DataFrame. The cheap path for callers that only need
     * column names/types (e.g. parsing serving config encoded in a
     * column name) before a pruned read. */
   def schemaOf(spark: SparkSession, root: String,
-               versionAsOf: Long = -1L)
-  : org.apache.spark.sql.types.StructType = {
-    val v = if (versionAsOf >= 0) versionAsOf else latestVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val json = readManifest(spark, root, v).schemaJson
-    // manifests written before schemas were recorded carry "" — fall
-    // back to the footer-inferred schema (the cost the fast path
-    // avoids), not a Jackson parse error
-    if (json.isEmpty) read(spark, root, v).schema
-    else org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-  }
+               versionAsOf: Long = -1L): StructType =
+    snapshotAt(spark, root, versionAsOf).schema
 
   def versions(spark: SparkSession, root: String): Seq[VersionInfo] =
     (0L to latestVersion(spark, root)).flatMap { v =>
@@ -660,8 +646,7 @@ object VersionedStore {
   /** `dt` with every nesting level nullable (struct fields, array
     * elements, map values), field metadata kept — what Spark's
     * DataSource makes of a file read's data schema. */
-  private def nullableEverywhere(dt: org.apache.spark.sql.types.DataType)
-  : org.apache.spark.sql.types.DataType = {
+  private def nullableEverywhere(dt: DataType): DataType = {
     import org.apache.spark.sql.types._
     dt match {
       case s: StructType => StructType(s.fields.map(f =>
@@ -679,37 +664,26 @@ object VersionedStore {
     * struct fields differ freely between literal-built and parquet-read
     * frames of the same logical shape) — the compatibility unit for
     * mixing files in one snapshot. */
-  private def schemaShape(json: String)
-  : Set[(String, org.apache.spark.sql.types.DataType)] =
-    org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-      .fields.map(f => (f.name, nullableEverywhere(f.dataType))).toSet
-
-  /** Files carried by reference from the head snapshot into a partial
-    * (file-pruned) commit, with their stats and row counts. Only valid
-    * with `expectedVersion` >= 0: the carry is bound to the head it was
-    * computed from, and a racing commit invalidates it (CommitConflict
-    * → caller recomputes). */
-  private case class Carry(files: Seq[String], rows: Long,
-                           stats: Map[String, Map[String, (Double, Double)]],
-                           fileRows: Map[String, Long],
-                           strStats: Map[String, Map[String, (String, String)]],
-                           fileSizes: Map[String, (Long, Long)])
+  private def schemaShape(schema: StructType): Set[(String, DataType)] =
+    schema.fields.map(f => (f.name, nullableEverywhere(f.dataType))).toSet
 
   /** Commit `df` as a new version. `carryPrev` keeps the previous
-    * snapshot's files in the new manifest (append semantics). When
-    * `expectedVersion` >= 0 the commit claims EXACTLY that version or
-    * throws CommitConflict — required whenever the content was derived
-    * from a snapshot read (create/merge), because blindly re-claiming
-    * the next number would publish stale content over a racing
-    * writer's commit. Append/overwrite content is head-independent
-    * (append re-reads the head's file list on every attempt), so those
-    * retry internally. Returns the committed version number.
+    * snapshot's files in the new manifest (append semantics);
+    * `carried` keeps the given files of the head instead (a partial,
+    * file-pruned merge), which binds the commit to the head they were
+    * taken from. When `expectedVersion` >= 0 the commit claims EXACTLY
+    * that version or throws CommitConflict — required whenever the
+    * content was derived from a snapshot read (create/merge), because
+    * blindly re-claiming the next number would publish stale content
+    * over a racing writer's commit. Append/overwrite content is
+    * head-independent (append re-reads the head's file list on every
+    * attempt), so those retry internally. The only writer of the
+    * manifest format. Returns the committed version number.
     */
   private def commit(df: DataFrame, root: String, op: String,
                      carryPrev: Boolean, expectedVersion: Long = -1L,
-                     carry: Option[Carry] = None): Long = {
-    require(carry.isEmpty || expectedVersion >= 0,
+                     carried: Seq[FileEntry] = Nil): Long = {
+    require(carried.isEmpty || expectedVersion >= 0,
       "a partial carry must be pinned to the head it was computed from")
     val spark = df.sparkSession
     val uuid = java.util.UUID.randomUUID().toString.take(12)
@@ -722,35 +696,23 @@ object VersionedStore {
         val n = st.getPath.getName
         n.startsWith("part-") && n.endsWith(".parquet")
       }.sortBy(_.getPath.getName).toSeq
-    val newNames = written.map(_.getPath.getName)
-    val newFiles = newNames.map(n => s"$dataRel/$n")
-    // exact byte lengths and mtimes from the same listing: the scan
-    // of this snapshot is planned from them (ManifestFileIndex)
-    val newSizes = written.map(st =>
-      s"$dataRel/${st.getPath.getName}" -> (st.getLen, st.getModificationTime))
-      .toMap
-    // Rows AND per-file column ranges straight from the parquet
-    // footers — one metadata pass, no Spark job, no data pages.
-    val (newRowsByName, newStatsByName, newStrStatsByName) = footerStats(
-      spark.sparkContext.hadoopConfiguration, dataDir, newNames)
-    val newRows = newRowsByName.values.sum
-    val newStats = newStatsByName.map { case (n, s) => s"$dataRel/$n" -> s }
-    val newStrStats =
-      newStrStatsByName.map { case (n, s) => s"$dataRel/$n" -> s }
-    val newFileRows = newRowsByName.map { case (n, r) => s"$dataRel/$n" -> r }
+    // exact byte lengths and mtimes from the listing (the scan of this
+    // snapshot is planned from them); rows AND per-file column ranges
+    // straight from the parquet footers — one metadata pass, no Spark
+    // job, no data pages
+    val newFiles = written.zip(footerStats(
+        spark.sparkContext.hadoopConfiguration, written.map(_.getPath)))
+      .map { case (st, (rows, ranges, strRanges)) =>
+        FileEntry(s"$dataRel/${st.getPath.getName}", rows, st.getLen,
+          st.getModificationTime, ranges, strRanges)
+      }
     fs.mkdirs(logDir(root))
     var attempt = 0
     var lastConflict: Throwable = null
     while (attempt < 10) {
       val prev = latestVersion(spark, root)
-      var schemaOut = df.schema.json
-      val (files, rows, stats, fileRows, strStats, sizes) =
-        if (carry.isDefined) {
-          val c = carry.get
-          (c.files ++ newFiles, c.rows + newRows, c.stats ++ newStats,
-            c.fileRows ++ newFileRows, c.strStats ++ newStrStats,
-            c.fileSizes ++ newSizes)
-        } else if (carryPrev && prev >= 0) {
+      val (kept, schemaOut) =
+        if (carryPrev && prev >= 0) {
           val p = readManifest(spark, root, prev)
           // A carried snapshot mixes old and new files in ONE logical
           // table. Shared columns must agree on name+type (nullability
@@ -761,94 +723,71 @@ object VersionedStore {
           // pins the manifest schema, so no footer-sampling race can
           // drop them). Dropping or retyping a column still requires
           // overwrite/merge.
-          if (p.schemaJson.nonEmpty) {
-            val prevFields = schemaShape(p.schemaJson).toMap
-            val newFields = schemaShape(df.schema.json).toMap
-            val missing = prevFields.keySet -- newFields.keySet
-            val retyped = (prevFields.keySet & newFields.keySet)
-              .filter(n => prevFields(n) != newFields(n))
-            if (missing.nonEmpty || retyped.nonEmpty) {
-              fs.delete(dataDir, true) // staged files never referenced
-              throw new IllegalArgumentException(
-                s"append schema mismatch for $root: " +
-                  (if (missing.nonEmpty) s"append drops table columns " +
-                    s"${missing.toSeq.sorted.mkString(", ")}; " else "") +
-                  (if (retyped.nonEmpty) s"append retypes " +
-                    retyped.toSeq.sorted.map(n =>
-                      s"$n (${prevFields(n).simpleString} -> " +
-                        s"${newFields(n).simpleString})").mkString(", ") + "; "
-                   else "") +
-                  "appends may only ADD columns — use overwrite/merge " +
-                  "for drops or type changes")
-            }
-            val added = newFields.keySet -- prevFields.keySet
-            // Added columns are null in every pre-evolution file, so
-            // the evolved snapshot schema must declare them nullable —
-            // and once a column is nullable in the table it must STAY
-            // nullable on every later append (the old null-bearing
-            // files don't go away because a new batch happens to carry
-            // the column non-null). Nullability is the OR of the
-            // table's and the batch's, per column.
-            val prevNullable = org.apache.spark.sql.types.DataType
-              .fromJson(p.schemaJson)
-              .asInstanceOf[org.apache.spark.sql.types.StructType]
-              .fields.map(f => f.name -> f.nullable).toMap
-            schemaOut = org.apache.spark.sql.types.StructType(
-              df.schema.fields.map(f =>
-                if (added(f.name)) f.copy(nullable = true)
-                else f.copy(nullable =
-                  f.nullable || prevNullable.getOrElse(f.name, false)))).json
+          val prevFields = schemaShape(p.schema).toMap
+          val newFields = schemaShape(df.schema).toMap
+          val missing = prevFields.keySet -- newFields.keySet
+          val retyped = (prevFields.keySet & newFields.keySet)
+            .filter(n => prevFields(n) != newFields(n))
+          if (missing.nonEmpty || retyped.nonEmpty) {
+            fs.delete(dataDir, true) // staged files never referenced
+            throw new IllegalArgumentException(
+              s"append schema mismatch for $root: " +
+                (if (missing.nonEmpty) s"append drops table columns " +
+                  s"${missing.toSeq.sorted.mkString(", ")}; " else "") +
+                (if (retyped.nonEmpty) s"append retypes " +
+                  retyped.toSeq.sorted.map(n =>
+                    s"$n (${prevFields(n).simpleString} -> " +
+                      s"${newFields(n).simpleString})").mkString(", ") + "; "
+                 else "") +
+                "appends may only ADD columns — use overwrite/merge " +
+                "for drops or type changes")
           }
-          (p.files ++ newFiles, p.rows + newRows, p.stats ++ newStats,
-            p.fileRows ++ newFileRows, p.strStats ++ newStrStats,
-            p.fileSizes ++ newSizes)
-        } else (newFiles, newRows, newStats, newFileRows, newStrStats,
-          newSizes)
+          val added = newFields.keySet -- prevFields.keySet
+          // Added columns are null in every pre-evolution file, so
+          // the evolved snapshot schema must declare them nullable —
+          // and once a column is nullable in the table it must STAY
+          // nullable on every later append (the old null-bearing
+          // files don't go away because a new batch happens to carry
+          // the column non-null). Nullability is the OR of the
+          // table's and the batch's, per column.
+          val prevNullable = p.schema.fields.map(f => f.name -> f.nullable).toMap
+          (p.files, StructType(df.schema.fields.map(f =>
+            if (added(f.name)) f.copy(nullable = true)
+            else f.copy(nullable =
+              f.nullable || prevNullable.getOrElse(f.name, false)))))
+        } else (carried, df.schema)
+      val files = kept ++ newFiles
       val next = if (expectedVersion >= 0) expectedVersion else prev + 1
       val manifest = new java.util.LinkedHashMap[String, Object]()
       manifest.put("version", java.lang.Long.valueOf(next))
       manifest.put("op", op)
-      manifest.put("files", files.asJava)
-      manifest.put("rows", java.lang.Long.valueOf(rows))
-      manifest.put("schema", schemaOut)
+      manifest.put("files", files.map(_.path).asJava)
+      manifest.put("rows", java.lang.Long.valueOf(files.map(_.rows).sum))
+      manifest.put("schema", schemaOut.json)
       manifest.put("ts", java.lang.Long.valueOf(System.currentTimeMillis()))
-      val statsM = new java.util.LinkedHashMap[String, Object]()
-      files.foreach { f =>
-        stats.get(f).filter(_.nonEmpty).foreach { cols =>
-          val colsM = new java.util.LinkedHashMap[String, Object]()
-          cols.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) =>
-            colsM.put(c, java.util.List.of(
-              java.lang.Double.valueOf(mn), java.lang.Double.valueOf(mx)))
+      // per-file fields, each a map keyed by path; a file without
+      // column ranges has no key in stats / strStats
+      def perFile(field: String)(value: FileEntry => Option[Object]): Unit = {
+        val byFile = new java.util.LinkedHashMap[String, Object]()
+        files.foreach(f => value(f).foreach(byFile.put(f.path, _)))
+        manifest.put(field, byFile)
+      }
+      def byColumn[T](ranges: Map[String, (T, T)])(enc: T => Object)
+      : Option[Object] =
+        if (ranges.isEmpty) None
+        else {
+          val byCol = new java.util.LinkedHashMap[String, Object]()
+          ranges.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
+            byCol.put(c, java.util.List.of(enc(lo), enc(hi)))
           }
-          statsM.put(f, colsM)
+          Some(byCol)
         }
-      }
-      manifest.put("stats", statsM)
-      val strStatsM = new java.util.LinkedHashMap[String, Object]()
-      files.foreach { f =>
-        strStats.get(f).filter(_.nonEmpty).foreach { cols =>
-          val colsM = new java.util.LinkedHashMap[String, Object]()
-          cols.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) =>
-            colsM.put(c, java.util.List.of(mn, mx))
-          }
-          strStatsM.put(f, colsM)
-        }
-      }
-      manifest.put("strStats", strStatsM)
-      val fileRowsM = new java.util.LinkedHashMap[String, Object]()
-      files.foreach { f =>
-        fileRows.get(f).foreach(r =>
-          fileRowsM.put(f, java.lang.Long.valueOf(r)))
-      }
-      manifest.put("fileRows", fileRowsM)
-      val sizesM = new java.util.LinkedHashMap[String, Object]()
-      files.foreach { f =>
-        sizes.get(f).foreach { case (len, mtime) =>
-          sizesM.put(f, java.util.List.of(
-            java.lang.Long.valueOf(len), java.lang.Long.valueOf(mtime)))
-        }
-      }
-      manifest.put("fileSizes", sizesM)
+      val b64 = java.util.Base64.getEncoder
+      perFile("stats")(f => byColumn(f.ranges)(java.lang.Double.valueOf(_)))
+      perFile("strStats")(f => byColumn(f.strRanges)(b64.encodeToString(_)))
+      perFile("fileRows")(f => Some(java.lang.Long.valueOf(f.rows)))
+      perFile("fileSizes")(f => Some(java.util.List.of(
+        java.lang.Long.valueOf(f.length), java.lang.Long.valueOf(f.mtime))))
       try {
         atomicCreate(fs, manifestPath(root, next),
           mapper.writeValueAsBytes(manifest))
@@ -921,12 +860,14 @@ object VersionedStore {
     * type-widening drifting the merged schema away from the carried
     * files' shape.
     *
-    * Key bounds and value sets come from the batch itself: a batch
-    * whose plan optimizes to a local relation of at most 1,024 rows is
-    * collected (no job) and resolved on the driver, its distinct key
-    * tuples broadcast as a local relation for the anti-join; any other
-    * batch runs one bounds aggregate and capped distinct collects, and
-    * is never collected first. Both give the same file split.
+    * Each key prunes by its exact set of distinct values when it has
+    * at most 1,024, else by its [min, max]. A batch whose plan
+    * optimizes to a local relation of at most 1,024 rows is collected
+    * (no job) and resolved on the driver, its distinct key tuples
+    * broadcast as a local relation for the anti-join; any other batch
+    * runs a capped distinct per key (and one bounds aggregate over the
+    * keys past the cap), and is never collected first. Both give the
+    * same file split.
     *
     * Optimistic concurrency done right: the merged content is bound to
     * the head it was computed from (commit claims exactly head+1); if
@@ -938,8 +879,8 @@ object VersionedStore {
 
   /** Row deletion by key — the storage-level right-to-be-forgotten
     * primitive. Copy-on-write exactly like [[merge]] with the SAME
-    * file pruning (numeric range + capped value set, string UTF-8
-    * footer ranges): only files that can hold a deleted key are
+    * file pruning (capped value set, else range, on numeric and
+    * string keys): only files that can hold a deleted key are
     * rewritten without the matching rows; provably unmatched files
     * carry by reference. Earlier versions remain readable — deletion
     * is a new snapshot, so compliance workflows pair this with
@@ -959,45 +900,39 @@ object VersionedStore {
                           keys: Seq[String], insertUpdates: Boolean)
   : Long = {
     import org.apache.spark.sql.functions.{broadcast, col, min, max}
-    import org.apache.spark.sql.types.{NumericType, TimestampType, StructType, DataType}
+    import org.apache.spark.sql.types.{NumericType, StringType, TimestampType}
     val spark = updates.sparkSession
-    // [min, max] of each prunable merge key over the updates, on the
-    // cast-to-double scale the manifest stats use (timestamps = epoch
-    // seconds). Non-numeric keys yield no bounds (and under ANSI mode
-    // a string→double cast would throw, so they are never cast).
-    // Paid once, head-independent.
-    val prunableKeys = updates.schema.fields
+    // The merge keys that prune, each as the column the manifest
+    // ranges are on: numeric/timestamp keys cast to double (timestamps
+    // = epoch seconds), string keys as they are (parquet STRING footer
+    // stats and Spark's string min/max both order by unsigned UTF-8
+    // bytes). Other keys never prune, and under ANSI mode a
+    // string→double cast would throw, so they are never cast.
+    // Head-independent: resolved once, before the retry loop.
+    val numKeys = updates.schema.fields
       .filter(f => keys.contains(f.name) && (f.dataType match {
         case _: NumericType | _: TimestampType => true
         case _ => false
       })).map(_.name).toSeq
-    // String merge keys prune too, against the manifest's strStats:
-    // parquet STRING footer stats and Spark's min/max on strings both
-    // order by unsigned UTF-8 byte comparison, so file [min, max]
-    // ranges and update bounds live in one total order. Bounds are
-    // exact update values (no ulp widening needed — the comparison is
-    // exact).
     val strKeys = updates.schema.fields
-      .filter(f => keys.contains(f.name) &&
-        f.dataType == org.apache.spark.sql.types.StringType)
+      .filter(f => keys.contains(f.name) && f.dataType == StringType)
       .map(_.name).toSeq
-    def utf8(s: String): Array[Byte] =
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    def bCmp(a: Array[Byte], b: Array[Byte]): Int =
-      java.util.Arrays.compareUnsigned(a, b)
-    // EXACT value sets for low-cardinality prunable keys: a batch
-    // touching buckets {0, 31} has range [0, 31] — which intersects
-    // every file — but its value SET misses every file strictly
-    // between, so set pruning carries those files where range pruning
-    // rewrites the world. Capped: a high-cardinality key falls back
-    // to its range (the set would cost more than it prunes).
+    val prunable = numKeys ++ strKeys
+    def onScale(k: String) =
+      if (numKeys.contains(k)) col(k).cast("double") else col(k)
+    // EXACT value sets: a batch touching buckets {0, 31} has range
+    // [0, 31] — which intersects every file — but its value SET misses
+    // every file strictly between, so set pruning carries those files
+    // where range pruning rewrites the world. Capped: a key with more
+    // distinct values prunes by its range (the set would cost more
+    // than it prunes).
     val setCap = 1024
     // A batch that optimizes to a local relation of at most setCap
     // rows is resolved here on the driver: Catalyst folds the key
     // projection (numeric keys also on the double scale) into the
-    // relation, so collecting it runs no job, and its bounds, value
-    // sets and anti-join keys all come from that one array. Any other
-    // batch takes the aggregate path and is never collected.
+    // relation, so collecting it runs no job, and its value sets and
+    // anti-join keys all come from that one array. Any other batch
+    // takes the aggregate path and is never collected.
     val keyCols = updates.select(keys.map(col): _*)
     val small = updates.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
@@ -1006,73 +941,48 @@ object VersionedStore {
     }
     val batch =
       if (!small) Array.empty[org.apache.spark.sql.Row]
-      else updates
-        .select(keys.map(col) ++ prunableKeys.map(k => col(k).cast("double")): _*)
+      else updates.select(keys.map(col) ++ prunable.map(onScale): _*)
         .collect()
-    val (updBounds, strBounds, updValueSets, strValueSets) =
-      if (small) {
-        val num = prunableKeys.zipWithIndex.map { case (k, i) =>
-          val at = keys.size + i
-          k -> batch.collect { case r if !r.isNullAt(at) => r.getDouble(at) }
-            .distinct
-        }.filter(_._2.nonEmpty)
-        val str = strKeys.map { k =>
-          val at = keys.indexOf(k)
-          k -> batch.collect { case r if !r.isNullAt(at) => r.getString(at) }
-            .distinct.map(utf8)
-        }.filter(_._2.nonEmpty)
-        // Spark's min/max orders: NaN above every double (TotalOrdering
-        // differs from it only on the sign of zero, which the one-ulp
-        // widening erases); strings by unsigned UTF-8 bytes
-        val dOrder = Ordering.Double.TotalOrdering
-        val bOrder = Ordering.fromLessThan[Array[Byte]](bCmp(_, _) < 0)
-        (num.map { case (k, vs) =>
-           k -> (Math.nextDown(vs.min(dOrder)), Math.nextUp(vs.max(dOrder)))
-         }.toMap,
-         str.map { case (k, vs) => k -> (vs.min(bOrder), vs.max(bOrder)) }.toMap,
-         num.toMap, str.toMap)
-      } else {
-        // every key's bounds in ONE aggregate: numeric pairs first, then
-        // string pairs
-        val aggs = prunableKeys.flatMap(k =>
-            Seq(min(col(k).cast("double")), max(col(k).cast("double")))) ++
-          strKeys.flatMap(k => Seq(min(col(k)), max(col(k))))
-        val bounds =
-          if (aggs.isEmpty) None
-          else Some(updates.agg(aggs.head, aggs.tail: _*).head())
-        val updBounds: Map[String, (Double, Double)] = bounds.map { r =>
-          prunableKeys.zipWithIndex.collect {
-            case (k, i) if !r.isNullAt(2 * i) =>
-              // widened one ulp each way, mirroring the footer stats
-              k -> (Math.nextDown(r.getDouble(2 * i)),
-                    Math.nextUp(r.getDouble(2 * i + 1)))
-          }.toMap
-        }.getOrElse(Map.empty)
-        val strBounds: Map[String, (Array[Byte], Array[Byte])] = bounds.map { r =>
-          val at = 2 * prunableKeys.size
-          strKeys.zipWithIndex.collect {
-            case (k, i) if !r.isNullAt(at + 2 * i) =>
-              k -> (utf8(r.getString(at + 2 * i)), utf8(r.getString(at + 2 * i + 1)))
-          }.toMap
-        }.getOrElse(Map.empty)
-        val updValueSets: Map[String, Array[Double]] =
-          updBounds.keys.flatMap { k =>
-            val vs = updates.select(col(k).cast("double").as("v"))
-              .filter(col("v").isNotNull).distinct().limit(setCap + 1)
-              .collect().map(_.getDouble(0))
-            if (vs.length > setCap) None else Some(k -> vs.sorted)
-          }.toMap
-        // the capped exact value set of a string key carries
-        // scattered-key batches past files strictly between their values
-        val strValueSets: Map[String, Array[Array[Byte]]] =
-          strBounds.keys.flatMap { k =>
-            val vs = updates.select(col(k).as("v"))
-              .filter(col("v").isNotNull).distinct().limit(setCap + 1)
-              .collect().map(r => utf8(r.getString(0)))
-            if (vs.length > setCap) None else Some(k -> vs)
-          }.toMap
-        (updBounds, strBounds, updValueSets, strValueSets)
+    // each prunable key's distinct non-NULL values, at most setCap + 1
+    val distinct = prunable.zipWithIndex.map { case (k, i) =>
+      val at = keys.size + i
+      if (small) batch.collect { case r if !r.isNullAt(at) => r.get(at) }.distinct
+      else updates.select(onScale(k).as("v")).filter(col("v").isNotNull)
+        .distinct().limit(setCap + 1).collect().map(_.get(0))
+    }
+    // the keys past the cap take their [min, max] from ONE aggregate
+    val overCap = prunable.zip(distinct).collect {
+      case (k, vs) if vs.length > setCap => k
+    }
+    val bounds: Map[String, (Any, Any)] =
+      if (overCap.isEmpty) Map.empty
+      else {
+        val aggs = overCap.flatMap(k => Seq(min(onScale(k)), max(onScale(k))))
+        val r = updates.agg(aggs.head, aggs.tail: _*).head()
+        overCap.zipWithIndex.collect { case (k, i) if !r.isNullAt(2 * i) =>
+          k -> (r.get(2 * i), r.get(2 * i + 1))
+        }.toMap
       }
+    // What one key seeks: its value set within the cap (the set's own
+    // [min, max] would prune nothing more: a file range holding a set
+    // value overlaps those bounds), else its bounds; nothing (no
+    // pruning) when every value is NULL.
+    def sought[T](k: String, vs: Array[Any], as: Any => T,
+                  widen: ((T, T)) => (T, T)): Option[Sought[T]] =
+      if (vs.isEmpty) None
+      else if (vs.length <= setCap) Some(Sought(k, Right(vs.toSeq.map(as))))
+      else bounds.get(k).map { case (lo, hi) =>
+        Sought(k, Left(widen((as(lo), as(hi)))))
+      }
+    val num = numKeys.zip(distinct).flatMap { case (k, vs) =>
+      // widened one ulp each way, mirroring the footer stats
+      sought[Double](k, vs, _.asInstanceOf[Double],
+        { case (lo, hi) => (Math.nextDown(lo), Math.nextUp(hi)) })
+    }
+    val str = strKeys.zip(distinct.drop(numKeys.size)).flatMap {
+      case (k, vs) => sought[Array[Byte]](k, vs,
+        v => utf8(v.asInstanceOf[String]), identity)
+    }
     // The anti-join side: distinct key tuples. A small batch's are a
     // broadcast local relation (a NULL key never equality-matches, so
     // tuples holding one are dropped); a large batch's stay distributed.
@@ -1088,92 +998,36 @@ object VersionedStore {
       val head = latestVersion(spark, root)
       require(head >= 0, s"no committed version under $root")
       val snap = readManifest(spark, root, head)
-      // a file is untouchable iff SOME key's file range provably
-      // misses every update key — by range, or by the exact value set
-      // when we have it (null keys never equality-match, and footer
-      // ranges cover non-null values only, so null rows on either
-      // side cannot defeat the proof)
-      val dec64 = java.util.Base64.getDecoder
-      val (untouched, touched) = snap.files.partition { f =>
-        updBounds.exists { case (k, (uLo, uHi)) =>
-          snap.stats.get(f).flatMap(_.get(k)) match {
-            case Some((fLo, fHi)) =>
-              fHi < uLo || fLo > uHi ||
-                updValueSets.get(k)
-                  .exists(vs => !vs.exists(v => v >= fLo && v <= fHi))
-            case None => false
-          }
-        } || strBounds.exists { case (k, (uLo, uHi)) =>
-          snap.strStats.get(f).flatMap(_.get(k)) match {
-            case Some((fLoB, fHiB)) =>
-              val fLo = dec64.decode(fLoB)
-              val fHi = dec64.decode(fHiB)
-              bCmp(fHi, uLo) < 0 || bCmp(fLo, uHi) > 0 ||
-                strValueSets.get(k).exists(vs =>
-                  !vs.exists(v => bCmp(v, fLo) >= 0 && bCmp(v, fHi) <= 0))
-            case None => false
-          }
-        }
-      }
+      val (touched, untouched) = snap.files.partition(mayHold(_, num, str))
       // pruning proved no file can hold a deleted key → the delete is
       // a NO-OP; don't burn a version on an empty rewrite
       if (!insertUpdates && touched.isEmpty) return head
-      def fullMerged = {
-        val kept = read(spark, root, head)
+      def rewrite(files: Seq[FileEntry]) = {
+        val kept = readFiles(spark, root, snap, files)
           .join(updateKeys, keys, "left_anti")
         if (insertUpdates) kept.unionByName(updates) else kept
       }
-      val (merged, carry) =
-        if (untouched.isEmpty) (fullMerged, None)
+      // nothing intersects a merge: a pure insert
+      val survivors = if (touched.isEmpty) updates else rewrite(touched)
+      // union type-widening (e.g. int updates over a long table)
+      // would drift the snapshot schema away from the carried
+      // files — only carry when the shape is provably unchanged
+      val (merged, carried) =
+        if (untouched.isEmpty ||
+            schemaShape(survivors.schema) != schemaShape(snap.schema))
+          (rewrite(snap.files), Nil)
         else {
-          val survivors =
-            if (touched.isEmpty) {
-              // nothing intersects: pure insert for merge; for delete
-              // there is nothing to rewrite at all
-              if (insertUpdates) updates
-              else read(spark, root, head).limit(0)
-            } else {
-              val kept = readFiles(spark, root, snap, touched)
-                .join(updateKeys, keys, "left_anti")
-              if (insertUpdates) kept.unionByName(updates) else kept
-            }
-          // union type-widening (e.g. int updates over a long table)
-          // would drift the snapshot schema away from the carried
-          // files — only carry when the shape is provably unchanged
-          if (snap.schemaJson.nonEmpty &&
-              schemaShape(survivors.schema.json) == schemaShape(snap.schemaJson)) {
-            // align column order to the table's (shape equality is
-            // set-based; a pure-insert path takes the updates' order)
-            val tableCols = DataType.fromJson(snap.schemaJson)
-              .asInstanceOf[StructType].fieldNames.toSeq
-            val aligned =
-              if (survivors.columns.toSeq == tableCols) survivors
-              else survivors.select(tableCols.map(col): _*)
-            val untouchedSet = untouched.toSet
-            // pre-fileRows manifests: count from the footers (pure
-            // metadata, no Spark job) — through the bounded pool, not
-            // serially: this sits inside the optimistic retry loop, and
-            // O(untouched × storage RTT) per attempt would dominate
-            // merges into old long-lived tables
-            val uncounted = untouched.filterNot(snap.fileRows.contains)
-            val footerRows: Map[String, Long] =
-              if (uncounted.isEmpty) Map.empty
-              else footerStats(spark.sparkContext.hadoopConfiguration,
-                new Path(root), uncounted)._1
-            val carriedRows = untouched.map(f =>
-              snap.fileRows.getOrElse(f, footerRows(f))).sum
-            (aligned, Some(Carry(untouched, carriedRows,
-              snap.stats.filter { case (f, _) => untouchedSet(f) },
-              snap.fileRows.filter { case (f, _) => untouchedSet(f) },
-              snap.strStats.filter { case (f, _) => untouchedSet(f) },
-              snap.fileSizes.filter { case (f, _) => untouchedSet(f) })))
-          } else (fullMerged, None)
+          // align column order to the table's (shape equality is
+          // set-based; a pure-insert path takes the updates' order)
+          val tableCols = snap.schema.fieldNames.toSeq
+          (if (survivors.columns.toSeq == tableCols) survivors
+           else survivors.select(tableCols.map(col): _*), untouched)
         }
       // a delete that leaves no carried file and no surviving row
       // would commit an empty snapshot (unreadable by invariant) —
       // refuse loudly. Only reachable on the full-rewrite path, so
       // the extra count is paid when every file was touched anyway.
-      if (!insertUpdates && carry.isEmpty &&
+      if (!insertUpdates && carried.isEmpty &&
           merged.limit(1).count() == 0L)
         throw new IllegalArgumentException(
           s"deleteKeys would remove every row of $root — empty " +
@@ -1181,7 +1035,7 @@ object VersionedStore {
       try {
         return commit(merged, root,
           if (insertUpdates) "merge" else "delete", carryPrev = false,
-          expectedVersion = head + 1, carry = carry)
+          expectedVersion = head + 1, carried = carried)
       } catch {
         case _: CommitConflict => attempt += 1 // recompute vs new head
       }
@@ -1254,7 +1108,7 @@ object VersionedStore {
       // range per column: min-of-mins / max-of-maxes across the
       // snapshot's files — only usable when EVERY file carries stats
       val fromStats: Map[String, (Double, Double)] = zorderBy.flatMap { c =>
-        val per = snap.files.map(f => snap.stats.get(f).flatMap(_.get(c)))
+        val per = snap.files.map(_.ranges.get(c))
         if (per.nonEmpty && per.forall(_.isDefined)) {
           val vs = per.flatten
           Some(c -> (vs.map(_._1).min, vs.map(_._2).max))
@@ -1340,14 +1194,14 @@ object VersionedStore {
       .filter(v => fs.exists(manifestPath(root, v)))
     val referenced = survivors
       .flatMap(v => readManifestOpt(spark, root, v)
-        .map(_.files).getOrElse(Nil)).toSet
+        .map(_.files.map(_.path)).getOrElse(Nil)).toSet
     val droppedCandidates = (0L until math.max(cutoff, 0L))
       .filter(v => fs.exists(manifestPath(root, v)))
     // 1. manifests go first — those versions are no longer readable
     val (dropped, droppedFileSeqs) = droppedCandidates.flatMap { v =>
       readManifestOpt(spark, root, v).map { snap =>
         fs.delete(manifestPath(root, v), false)
-        (v, snap.files)
+        (v, snap.files.map(_.path))
       }
     }.unzip
     val droppedFiles = droppedFileSeqs.flatten.toSet

@@ -46,6 +46,11 @@ object OnlineStore {
     (name, body.substring(0, idx), body.substring(idx + 1).toInt)
   }
 
+  /** A key's serving bucket — the hash contract that publish, upsert,
+    * delete and lookup must all agree on. */
+  private def bucketOf(keyCol: String, nBuckets: Int) =
+    pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong))
+
   /** PERSIST a materialized snapshot for point-read serving: rows gain
     * a stable hash bucket of the key column and are laid out sorted by
     * it (~contiguous bucket ranges per file), so a later
@@ -56,15 +61,16 @@ object OnlineStore {
     * size. Repeated publishes overwrite atomically (old versions stay
     * time-travelable); the key/bucket config is encoded in the bucket
     * column's name, so serving needs no out-of-band config and config
-    * can never diverge from data.
+    * can never diverge from data. Rows whose key is NULL are dropped:
+    * [[pointLookup]] never serves a NULL key.
     */
   def publishSnapshot(vectors: DataFrame, root: String, keyCol: String,
                       nBuckets: Int = 256, numFiles: Int = 64): Long = {
     import graft.offline.VersionedStore
     require(nBuckets > 0 && numFiles > 0, "nBuckets/numFiles must be positive")
     val kb = bucketColName(keyCol, nBuckets)
-    val bucketed = vectors.withColumn(kb,
-        pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong)))
+    val bucketed = vectors.where(col(keyCol).isNotNull)
+      .withColumn(kb, bucketOf(keyCol, nBuckets))
       .repartitionByRange(numFiles, col(kb))
       .sortWithinPartitions(kb)
     VersionedStore.overwrite(bucketed, root)
@@ -76,17 +82,19 @@ object OnlineStore {
     * snapshot's OWN hash config (read from its schema) so lookups stay
     * correct; like the IVF inverted file, merge-written files can span
     * buckets and degrade [[pointLookup]]'s file pruning until
-    * [[compactSnapshot]].
+    * [[compactSnapshot]]. Rows whose key is NULL are dropped: no
+    * lookup could serve them and no later upsert or delete could match
+    * them.
     *
     * A batch that is a local relation of at most 1,024 rows (e.g.
     * `createDataFrame` over driver rows) is resolved on the driver
-    * (VersionedStore.merge): its bucket and key bounds, value sets and
+    * (VersionedStore.merge): its bucket and key value sets and
     * anti-join keys come from one collect that runs no job, and the
     * touched files are read from the manifest with no listing. Such an
     * upsert costs two Spark jobs: the broadcast of its keys and the
     * write. Any other batch (a larger one, or one computed by a
-    * distributed plan) runs the bounds and value-set aggregates and a
-    * distributed distinct of its keys instead, as before.
+    * distributed plan) runs the value-set and bounds aggregates and a
+    * distributed distinct of its keys instead.
     */
   def upsertSnapshot(updates: DataFrame, root: String): Long = {
     import graft.offline.VersionedStore
@@ -103,8 +111,8 @@ object OnlineStore {
     // buckets (e.g. {0, 31}) rewrites only those buckets' files, not
     // everything the overall range spans.
     VersionedStore.merge(
-      updates.withColumn(kb,
-        pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong))),
+      updates.where(col(keyCol).isNotNull)
+        .withColumn(kb, bucketOf(keyCol, nBuckets)),
       root, Seq(kb, keyCol))
   }
 
@@ -121,8 +129,7 @@ object OnlineStore {
     val (kb, keyCol, nBuckets) =
       parseBucketCol(VersionedStore.schemaOf(spark, root))
     VersionedStore.deleteKeys(
-      keys.select(col(keyCol)).withColumn(kb,
-        pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong))),
+      keys.select(col(keyCol)).withColumn(kb, bucketOf(keyCol, nBuckets)),
       root, Seq(kb, keyCol))
   }
 
@@ -167,8 +174,7 @@ object OnlineStore {
     require(version >= 0, s"no committed version under $root")
     val (kb, keyCol, nBuckets) =
       parseBucketCol(VersionedStore.schemaOf(spark, root, version))
-    val resolved = keys.select(col(keyCol),
-        pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong)))
+    val resolved = keys.select(col(keyCol), bucketOf(keyCol, nBuckets))
     val keyField = resolved.schema.head.copy(name = keyCol)
     val pairs = resolved.collect().filterNot(_.isNullAt(0))
     val buckets = pairs.map(_.getLong(1).toDouble).distinct.toSeq

@@ -638,9 +638,11 @@ object FeatureEng {
     * past the budget are dropped. Zero-token and NULL-text docs never
     * schedule.
     *
-    * Scale shape: the schedule table is |sources|·maxEpochs rows — a
-    * documented model-sized SinglePartition window (the zipfFit
-    * precedent) that broadcasts back; full units are broadcast joins
+    * Scale shape: the schedule table is |sources|·maxEpochs rows,
+    * prefix-summed in one window partition per epoch (every epoch
+    * holds each source once, so a unit starts after (e − 1) whole
+    * epochs plus the sources before it) and broadcast back; full
+    * units are broadcast joins
     * against the one checkpointed token projection; the ONLY deep
     * prefix runs over the single straddling source, through
     * [[md5DenseRank]] (bucketed, no global sort) and [[runningTotal]]
@@ -664,12 +666,11 @@ object FeatureEng {
     val units = toks.groupBy("source").agg(sum("n_tokens").as("t_src"))
       .crossJoin(spark.range(1, maxEpochs + 1)
         .select(col("id").as("epoch"))) // long: the oracle's BIGINT
-    // |sources|·maxEpochs rows: model-sized SinglePartition, declared
-    val wU = org.apache.spark.sql.expressions.Window
-      .orderBy("epoch", "source")
-      .rowsBetween(Long.MinValue, 0)
+    val wE = org.apache.spark.sql.expressions.Window.partitionBy("epoch")
     val sched = units
-      .withColumn("start", sum("t_src").over(wU) - col("t_src"))
+      .withColumn("start", (col("epoch") - 1) * sum("t_src").over(wE) +
+        sum("t_src").over(wE.orderBy("source").rowsBetween(Long.MinValue, 0)) -
+        col("t_src"))
       .localCheckpoint(false) // one schedule for full + partial + join
     val fullU = sched
       .filter(col("start") + col("t_src") <= budgetTokens)

@@ -278,7 +278,7 @@ class StoreSpec extends AnyFunSuite {
     assertValueSetPruned(updates, "vmdist")
   }
 
-  test("VersionedStore: a manifest without file sizes reads, merges and compacts by path") {
+  test("VersionedStore: a manifest without sizes, rows or schema reads, merges, compacts") {
     import com.fasterxml.jackson.databind.ObjectMapper
     val root = tmp("vnosize")
     val rows = (0L until 200L).map(i => (i, s"v$i"))
@@ -295,21 +295,40 @@ class StoreSpec extends AnyFunSuite {
     sizes.forEach { (f, lm) =>
       assert(lm.get(0).longValue == new java.io.File(s"$root/$f").length, f)
     }
-    // a manifest written before sizes were recorded
+    // a manifest written before sizes, row counts and the schema were
+    // recorded; its stats stay, so the merge still prunes and carries
+    val written = VersionedStore.schemaOf(spark, root)
     m.remove("fileSizes")
+    m.remove("fileRows")
+    m.remove("schema")
     mapper.writeValue(manifest, m)
+    assert(VersionedStore.schemaOf(spark, root) == written)
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     assert(rowsOf(VersionedStore.read(spark, root)) == rows)
     assert(rowsOf(VersionedStore.readRange(spark, root, "id", 10, 19)) ==
       rows.slice(10, 20))
+    val before = VersionedStore.read(spark, root).inputFiles.toSet
     VersionedStore.merge(Seq((5L, "x"), (500L, "y")).toDF("id", "v"), root,
       Seq("id"))
     val want = rows.map { case (i, v) => (i, if (i == 5L) "x" else v) } :+
       ((500L, "y"))
     assert(rowsOf(VersionedStore.read(spark, root)) == want)
+    // three files carried, their rows counted from the footers
+    assert((before & VersionedStore.read(spark, root).inputFiles.toSet).size == 3)
+    assert(VersionedStore.rowCount(spark, root) == 201)
+    assert(VersionedStore.schemaOf(spark, root) == written)
     VersionedStore.compact(spark, root, numFiles = 2, sortBy = Seq("id"))
     assert(rowsOf(VersionedStore.read(spark, root)) == want)
+    // a file such a manifest lists but storage lacks fails the read
+    val head = new java.io.File(s"$root/_graft_log/v00000003.json")
+    val h = mapper.readValue(head,
+      classOf[java.util.LinkedHashMap[String, Object]])
+    h.remove("fileSizes")
+    mapper.writeValue(head, h)
+    val lost = h.get("files").asInstanceOf[java.util.List[String]].get(0)
+    assert(new java.io.File(s"$root/$lost").delete())
+    intercept[IllegalStateException](VersionedStore.read(spark, root))
   }
 
   test("VersionedStore: string-keyed merge prunes by footer ranges and value set") {
@@ -697,6 +716,17 @@ class StoreSpec extends AnyFunSuite {
         .withColumn("m", col("m").cast("decimal(18,2)")), root2)
     assert(VersionedStore.readRange(spark, root2, "m", 10, 11)
       .collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  test("VersionedStore: infinite column ranges round-trip through the manifest") {
+    // Double.MaxValue widens to an Infinity bound, which the manifest
+    // JSON stores as the string "Infinity"
+    val root = tmp("vinf")
+    VersionedStore.create(Seq((1L, Double.MaxValue), (2L, 0.0),
+      (3L, Double.NegativeInfinity)).toDF("id", "x"), root)
+    assert(VersionedStore.read(spark, root).count() == 3)
+    assert(VersionedStore.readRange(spark, root, "x", 1e308,
+      Double.PositiveInfinity).collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   test("VersionedStore: concurrent appends never lose a commit (atomic claim)") {

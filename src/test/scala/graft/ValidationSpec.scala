@@ -242,8 +242,10 @@ class ValidationSpec extends AnyFunSuite {
     val updates = rows.toDF("entity_id", "f_a")
     val (v1, jobs) = countJobs(OnlineStore.upsertSnapshot(updates, root))
     assert(jobs <= 2, s"an upsert of a local batch ran $jobs jobs")
-    // the snapshot equals the anti-join + union reference
-    val keyed = updates.withColumn(kb, bucketOf)
+    // the snapshot equals the anti-join + union reference over the
+    // batch's non-NULL keys: a NULL-key row is dropped, never stored
+    val keyed = updates.where(col("entity_id").isNotNull)
+      .withColumn(kb, bucketOf)
     val want = before.join(keyed.select(kb, "entity_id"),
         Seq(kb, "entity_id"), "left_anti").unionByName(keyed)
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
@@ -251,7 +253,7 @@ class ValidationSpec extends AnyFunSuite {
         .sortBy(_.mkString("|"))
     assert(rowsOf(VersionedStore.read(spark, root, v1)) == rowsOf(want))
     // carried files: exactly those whose bucket range or entity range
-    // holds no update value (NULL entity ids never match)
+    // holds no update value
     val bkts = keyed.select(kb).as[Long].collect().toSet
     val ids = rows.flatMap(_._1).toSet
     def name(path: String) = path.substring(path.lastIndexOf('/') + 1)
@@ -270,6 +272,11 @@ class ValidationSpec extends AnyFunSuite {
     val carried = fileSet & VersionedStore.read(spark, root, v1).inputFiles.toSet
     assert(expectCarried.nonEmpty && carried == expectCarried,
       s"carried ${carried.size}, expected ${expectCarried.size} of ${fileSet.size}")
+    // upserting the same batch again stores no NULL-key row either
+    val v2 = OnlineStore.upsertSnapshot(updates, root)
+    assert(VersionedStore.read(spark, root, v2)
+      .where(col("entity_id").isNull).count() == 0)
+    assert(rowsOf(VersionedStore.read(spark, root, v2)) == rowsOf(want))
   }
 
   test("deleteSnapshotKeys: retracted entities stop resolving; pruned rewrite; history intact") {
