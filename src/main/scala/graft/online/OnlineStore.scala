@@ -52,13 +52,18 @@ object OnlineStore {
     pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong))
 
   /** PERSIST a materialized snapshot for point-read serving: rows gain
-    * a stable hash bucket of the key column and are laid out sorted by
-    * it (~contiguous bucket ranges per file), so a later
+    * a stable hash bucket of the key column and are written in the
+    * serving layout — file slot floor(bucket · numFiles / nBuckets),
+    * one file per non-empty slot, sorted by bucket — so a later
     * [[pointLookup]] prunes the read to the files whose bucket range
     * contains a requested key — the reference's RocksDB multi-get
     * shape (OnlineServingService.java batch lookup) re-expressed as
     * manifest-stat point reads: files opened ∝ key batch, not table
-    * size. Repeated publishes overwrite atomically (old versions stay
+    * size. The write is one shuffle (no sampling job) into one task per
+    * core while the snapshot is small (more once it outgrows a read
+    * split per core), each rolling the files of a contiguous run of
+    * slots (VersionedStore.Slots). Repeated
+    * publishes overwrite atomically (old versions stay
     * time-travelable); the key/bucket config is encoded in the bucket
     * column's name, so serving needs no out-of-band config and config
     * can never diverge from data. Rows whose key is NULL are dropped:
@@ -71,9 +76,8 @@ object OnlineStore {
     val kb = bucketColName(keyCol, nBuckets)
     val bucketed = vectors.where(col(keyCol).isNotNull)
       .withColumn(kb, bucketOf(keyCol, nBuckets))
-      .repartitionByRange(numFiles, col(kb))
-      .sortWithinPartitions(kb)
-    VersionedStore.overwrite(bucketed, root)
+    VersionedStore.overwrite(bucketed, root,
+      Some(VersionedStore.Slots(kb, nBuckets, numFiles)))
   }
 
   /** Refresh a published snapshot with new/changed vectors: a keyed
@@ -92,9 +96,10 @@ object OnlineStore {
     * anti-join keys come from one collect that runs no job, and the
     * touched files are read from the manifest with no listing. Such an
     * upsert costs two Spark jobs: the broadcast of its keys and the
-    * write. Any other batch (a larger one, or one computed by a
-    * distributed plan) runs the value-set and bounds aggregates and a
-    * distributed distinct of its keys instead.
+    * write, and its rows are written as one file. Any other batch (a
+    * larger one, or one computed by a distributed plan) runs the
+    * value-set and bounds aggregates and a distributed distinct of its
+    * keys instead.
     */
   def upsertSnapshot(updates: DataFrame, root: String): Long = {
     import graft.offline.VersionedStore
@@ -133,13 +138,17 @@ object OnlineStore {
       root, Seq(kb, keyCol))
   }
 
-  /** Re-sort a published snapshot by bucket to restore ~per-bucket
-    * file pruning after accumulated upserts. */
+  /** Rewrite a published snapshot back into the serving layout (see
+    * [[publishSnapshot]]) to restore per-slot file pruning after
+    * accumulated upserts: two Spark jobs, the shuffle's map stage and
+    * a write of one task per core while the snapshot is small. */
   def compactSnapshot(spark: SparkSession, root: String,
                       numFiles: Int): Long = {
     import graft.offline.VersionedStore
-    val (kb, _, _) = parseBucketCol(VersionedStore.schemaOf(spark, root))
-    VersionedStore.compact(spark, root, numFiles, sortBy = Seq(kb))
+    val (kb, _, nBuckets) =
+      parseBucketCol(VersionedStore.schemaOf(spark, root))
+    VersionedStore.compact(spark, root,
+      VersionedStore.Slots(kb, nBuckets, numFiles))
   }
 
   /** Point-read batch multi-get from a [[publishSnapshot]] table.

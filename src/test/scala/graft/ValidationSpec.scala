@@ -3,6 +3,8 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.registry.Registry
 import graft.validation.Validation
 
@@ -111,18 +113,29 @@ class ValidationSpec extends AnyFunSuite {
 
   /** Spark jobs started while `body` runs, counted by a listener. */
   private def countJobs[T](body: => T): (T, Int) = {
+    val (r, jobs, _) = countJobsAndStages(body)
+    (r, jobs)
+  }
+
+  /** [[countJobs]], and the task counts of the stages completed, in
+    * completion order. */
+  private def countJobsAndStages[T](body: => T): (T, Int, Seq[Int]) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
         j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onStageCompleted(
+        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.add(s.stageInfo.numTasks)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = body
       org.apache.spark.GraftSparkTestAccess
         .waitListenerBusEmpty(spark.sparkContext, 30000)
-      (r, jobs.get())
+      (r, jobs.get(), stages.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -256,7 +269,9 @@ class ValidationSpec extends AnyFunSuite {
     // holds no update value
     val bkts = keyed.select(kb).as[Long].collect().toSet
     val ids = rows.flatMap(_._1).toSet
-    def name(path: String) = path.substring(path.lastIndexOf('/') + 1)
+    // a file's path below the table root: part-file names repeat across
+    // the slot directories of one write
+    def name(path: String) = path.substring(path.indexOf("/data/") + 1)
     val ranges = before.groupBy(org.apache.spark.sql.functions.input_file_name())
       .agg(org.apache.spark.sql.functions.min(kb),
         org.apache.spark.sql.functions.max(kb),
@@ -305,6 +320,168 @@ class ValidationSpec extends AnyFunSuite {
     // the compliance step that retires it)
     assert(VersionedStore.read(spark, root, v0).count() == 256)
     assert(VersionedStore.read(spark, root).count() == 254)
+  }
+
+  // --- the serving layout: one file per non-empty slot ---------------
+
+  /** The serving layout of `numFiles` slots over `nBuckets` buckets:
+    * every file's bucket range lies inside one slot, the ranges are
+    * pairwise disjoint, and no slot holds two files. */
+  private def assertSlotted(root: String, kb: String, nBuckets: Int,
+                            numFiles: Int): Unit = {
+    import graft.offline.VersionedStore
+    import org.apache.spark.sql.functions.{input_file_name, max, min}
+    // per file: its path and the least and greatest bucket it holds
+    val ranges = VersionedStore.read(spark, root)
+      .groupBy(input_file_name()).agg(min(kb), max(kb))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSeq.sortBy(_._2)
+    assert(ranges.size == VersionedStore.read(spark, root).inputFiles.length,
+      "every file holds rows")
+    def slot(b: Long) = b * numFiles / nBuckets
+    ranges.foreach { case (f, lo, hi) =>
+      assert(slot(lo) == slot(hi), s"$f holds buckets $lo..$hi across slots")
+    }
+    ranges.zip(ranges.drop(1)).foreach { case (a, b) =>
+      assert(a._3 < b._2, s"overlapping bucket ranges: $a, $b")
+    }
+    val slots = ranges.map(r => slot(r._2))
+    assert(slots.distinct.size == slots.size, s"a slot holds two files: $slots")
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+
+  test("serving layout: publish and upserts + compaction write one file per slot; rows equal batchLookup") {
+    import graft.online.OnlineStore
+    import graft.offline.VersionedStore
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    val vectors = (0 until 256)
+      .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
+    val root = java.nio.file.Files
+      .createTempDirectory("slotpub").toString + "/snap"
+    val kb = "_kb_entity_id_32"
+    OnlineStore.publishSnapshot(vectors, root, "entity_id",
+      nBuckets = 32, numFiles = 8)
+    assertSlotted(root, kb, 32, 8)
+    // the slot names a directory and is no column of the snapshot
+    assert(VersionedStore.schemaOf(spark, root).fieldNames.toSeq ==
+      Seq("entity_id", "f_a", kb))
+    assert(VersionedStore.read(spark, root).inputFiles.forall(_.contains("/slot=")))
+    // a local batch's rows land in one file
+    val v1 = OnlineStore.upsertSnapshot(
+      Seq(("u7", -1.0), ("u9999", 42.0)).toDF("entity_id", "f_a"), root)
+    assert(VersionedStore.read(spark, root, v1)
+      .where(col("entity_id").isin("u7", "u9999"))
+      .select(input_file_name()).distinct().count() == 1)
+    OnlineStore.upsertSnapshot(Seq(("u8", -2.0)).toDF("entity_id", "f_a"), root)
+    OnlineStore.compactSnapshot(spark, root, numFiles = 8)
+    assertSlotted(root, kb, 32, 8)
+    val want = vectors.where(!col("entity_id").isin("u7", "u8"))
+      .unionByName(Seq(("u7", -1.0), ("u8", -2.0), ("u9999", 42.0))
+        .toDF("entity_id", "f_a"))
+    val keys = want.select("entity_id").unionByName(Seq("u404").toDF("entity_id"))
+    assert(rowsOf(OnlineStore.pointLookup(spark, root, keys)) ==
+      rowsOf(OnlineStore.batchLookup(want, keys)))
+    assert(rowsOf(VersionedStore.read(spark, root).drop(kb)) == rowsOf(want))
+    // a publish with no non-NULL key writes no slot file, yet stays a
+    // readable snapshot that serves nothing
+    val empty = root + "_empty"
+    OnlineStore.publishSnapshot(Seq((None: Option[String], 1.0))
+      .toDF("entity_id", "f_a"), empty, "entity_id", nBuckets = 32, numFiles = 8)
+    assert(OnlineStore.pointLookup(spark, empty, keys).count() == 0)
+  }
+
+  test("compactSnapshot: two jobs, a write stage of one task per core; one per slot past a read split per core") {
+    import graft.online.OnlineStore
+    import graft.offline.VersionedStore
+    val vectors = (0 until 512)
+      .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
+    val root = java.nio.file.Files
+      .createTempDirectory("slotjobs").toString + "/snap"
+    val kb = "_kb_entity_id_64"
+    OnlineStore.publishSnapshot(vectors, root, "entity_id",
+      nBuckets = 64, numFiles = 64)
+    val v1 = OnlineStore.upsertSnapshot(
+      (0 until 300 by 3).map(i => (s"u$i", -1.0)).toDF("entity_id", "f_a"), root)
+    val (v2, jobs, stageTasks) =
+      countJobsAndStages(OnlineStore.compactSnapshot(spark, root, numFiles = 64))
+    val cores = spark.sparkContext.defaultParallelism
+    assert(v2 == v1 + 1)
+    assert(jobs <= 2, s"compaction ran $jobs jobs")
+    assert(stageTasks.nonEmpty && stageTasks.last <= cores,
+      s"the write stage ran ${stageTasks.last} tasks on $cores cores")
+    assertSlotted(root, kb, 64, 64)
+    assert(VersionedStore.read(spark, root).inputFiles.length == 64)
+    // another slot count is another layout; a snapshot of more than a
+    // read split per core is written by one task per slot
+    val split = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(split, "1k")
+    val (v3, _, bigStages) = try
+      countJobsAndStages(OnlineStore.compactSnapshot(spark, root, numFiles = 16))
+    finally spark.conf.unset(split)
+    assert(v3 == v2 + 1)
+    assert(bigStages.last == 16,
+      s"the write stage ran ${bigStages.last} tasks for 16 slots")
+    assertSlotted(root, kb, 64, 16)
+    assert(rowsOf(VersionedStore.read(spark, root)) ==
+      rowsOf(VersionedStore.read(spark, root, v1)))
+  }
+
+  test("serving layout: a slotted snapshot time-travels, deletes keys, vacuums and diffs") {
+    import graft.online.OnlineStore
+    import graft.offline.VersionedStore
+    val vectors = (0 until 256)
+      .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
+    val root = java.nio.file.Files
+      .createTempDirectory("slotlife").toString + "/snap"
+    val kb = "_kb_entity_id_32"
+    val v0 = OnlineStore.publishSnapshot(vectors, root, "entity_id",
+      nBuckets = 32, numFiles = 8)
+    OnlineStore.upsertSnapshot(Seq(("u7", -1.0)).toDF("entity_id", "f_a"), root)
+    val v2 = OnlineStore.compactSnapshot(spark, root, numFiles = 8)
+    val v3 = OnlineStore.deleteSnapshotKeys(Seq("u8").toDF("entity_id"), root)
+    def served(keys: String*) = OnlineStore.pointLookup(spark, root,
+        keys.toDF("entity_id"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(served("u7", "u8", "u3") == Map("u7" -> -1.0, "u3" -> 3.0))
+    // time travel to the publish and the compaction
+    assert(rowsOf(VersionedStore.read(spark, root, v0).drop(kb)) == rowsOf(vectors))
+    assert(VersionedStore.read(spark, root, v2).count() == 256)
+    val diff = VersionedStore.diffVersions(spark, root, "entity_id", v0, v3)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(diff == Map("u7" -> "changed", "u8" -> "removed"))
+    // vacuum keeps the head; every parquet file left on disk is the head's
+    assert(VersionedStore.vacuum(spark, root, keepVersions = 1) == Seq(0L, 1L, 2L))
+    val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "data"))
+      .iterator().asScala.count(_.toString.endsWith(".parquet"))
+    assert(onDisk == VersionedStore.read(spark, root).inputFiles.length)
+    assert(served("u7", "u8", "u3") == Map("u7" -> -1.0, "u3" -> 3.0))
+  }
+
+  test("serving layout: a flat snapshot reads, merges and compacts into slots") {
+    import graft.online.OnlineStore
+    import graft.offline.VersionedStore
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    // the flat layout a publish wrote before slots: range-partitioned
+    // and sorted by bucket, one file per task
+    val vectors = (0 until 256)
+      .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
+    val root = java.nio.file.Files
+      .createTempDirectory("slotflat").toString + "/snap"
+    val kb = "_kb_entity_id_32"
+    VersionedStore.overwrite(vectors
+      .withColumn(kb, pmod(xxhash64(col("entity_id").cast("string")), lit(32L)))
+      .repartitionByRange(8, col(kb)).sortWithinPartitions(kb), root)
+    assert(!VersionedStore.read(spark, root).inputFiles.exists(_.contains("/slot=")))
+    OnlineStore.upsertSnapshot(Seq(("u7", -1.0)).toDF("entity_id", "f_a"), root)
+    OnlineStore.compactSnapshot(spark, root, numFiles = 8)
+    assert(VersionedStore.read(spark, root).inputFiles.forall(_.contains("/slot=")))
+    assertSlotted(root, kb, 32, 8)
+    val want = vectors.where(col("entity_id") =!= "u7")
+      .unionByName(Seq(("u7", -1.0)).toDF("entity_id", "f_a"))
+    assert(rowsOf(OnlineStore.pointLookup(spark, root, want.select("entity_id"))) ==
+      rowsOf(want))
   }
 
   test("metricGate: thresholds enforced") {
