@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * pipelines converged on (RefinedWeb / Dolma / CCNet):
   *
   *   1. quality filter    — drop whole documents the composite
-  *                          classifier rejects (TextAnalysis
-  *                          .qualityClassifier);
+  *                          classifier rejects (the keep decision of
+  *                          TextAnalysis.qualityClassifier);
   *   2. line dedup        — cut boilerplate lines repeated across
   *                          documents (Dedup.lineDedup), BEFORE
   *                          near-dup detection so shared nav/footer
@@ -18,15 +18,48 @@ import org.apache.spark.sql.functions._
   *   3. document dedup    — exact → MinHash candidates → exact-verify
   *                          keep-min (Dedup.pipeline) over the
   *                          CLEANED text;
-  *   4. decontamination   — drop documents overlapping the eval set
-  *                          (Dedup.decontaminate, broadcast shingles).
+  *   4. decontamination   — drop documents sharing at least
+  *                          `decontamMinOverlap` distinct n-grams with
+  *                          the eval set (Dedup.decontaminate's rule).
   *
   * Returns (doc_id, text) survivors with stage-2-cleaned text; a
   * document left with no words (NULL, empty or whitespace-only text)
-  * does not survive. Every
-  * stage keeps its own scale shape (each is individually probed and
-  * oracle-checked); the composition adds only id-keyed semi/anti
-  * joins, so nothing here changes a stage's plan.
+  * does not survive. Doc ids must be unique (every Dedup stage assumes
+  * it): the quality gate and line dedup work per row, so two rows
+  * sharing an id are gated one by one, and the survivors of a repeated
+  * id are not specified.
+  *
+  * Plan. Each stage hands the next its surviving rows, text included,
+  * so the composition has no doc_id joins of its own:
+  *  - quality: with the default lm band (`minLmScore <= 0`,
+  *    `maxLmScore` = +Inf) the lm_score rule cannot fail a document
+  *    (TextAnalysis.lmBandBinds), and the gate is one per-row
+  *    TextStats projection and filter (TextAnalysis.qualityGate). A
+  *    bounded band needs the corpus vocabulary and keeps the
+  *    classifier's plan, semi-joined on doc_id;
+  *  - line dedup: one line-frequency aggregate and one per-doc
+  *    reassembly (Dedup.keptLines); a doc left without lines is gone;
+  *  - near-dup: Dedup.pipelineRows returns the surviving rows;
+  *  - decontamination: the eval set's distinct shingles are collected
+  *    once (Dedup.freezeEvalShingles; the eval side is small, the
+  *    broadcast assumption decontaminate already makes) and each doc
+  *    probes its own shingles against them (Dedup.scrubFrozen): no
+  *    corpus explode, no shuffle, no anti-join.
+  *
+  * A curation holds three corpus-sized lazy joints (localCheckpoint,
+  * materialized at first use, reclaimed by the ContextCleaner): the
+  * gate's output, read twice by line dedup (the frequent lines and the
+  * reassembly), which would otherwise run the gate's TextStats pass
+  * twice; the cleaned text, read by the dedup's exact and short-doc
+  * branches; and the dedup's exact survivors with their shingle
+  * hashes, read by the band keys, both verify sides and the output.
+  * The dedup's near-drop list is a fourth, small joint.
+  *
+  * Jobs that run while a stage is built carry its job description
+  * (`curate: quality`, `curate: line dedup`, `curate: near-dup`,
+  * `curate: decontaminate`); the caller's description is restored
+  * after each. The last jobs — the near-drop list's broadcast and the
+  * survivors' scan — run at the caller's action.
   */
 object Curate {
 
@@ -39,46 +72,56 @@ object Curate {
       dedupN: Int = 3,
       dedupThreshold: Double = 0.8,
       decontamN: Int = 3,
-      decontamMinOverlap: Long = 1L)
+      decontamMinOverlap: Long = 1L) {
+    require(decontamMinOverlap >= 1,
+      s"decontamMinOverlap must be >= 1, got $decontamMinOverlap")
+  }
 
   def corpus(docs: DataFrame, idCol: String, textCol: String,
              evalDocs: Option[DataFrame] = None,
              cfg: CurateConfig = CurateConfig()): DataFrame = {
-    val base = docs.select(col(idCol).as("doc_id"),
-      col(textCol).as("text"))
-    val afterQuality = cfg.quality match {
-      case Some(th) =>
-        val kept = TextAnalysis.qualityClassifier(docs, idCol, textCol, th)
-          .filter(col("keep")).select("doc_id")
-        base.join(kept, Seq("doc_id"), "left_semi")
-      case None => base
+    val sc = docs.sparkSession.sparkContext
+    // the caller's description (or its absence) is restored after each
+    def stage[T](name: String)(body: => T): T = {
+      val key = "spark.job.description"
+      val caller = sc.getLocalProperty(key)
+      sc.setLocalProperty(key, s"curate: $name")
+      try body finally sc.setLocalProperty(key, caller)
     }
-    // Lazy checkpoint at the composition joint: `cleaned` feeds the
-    // dedup pipeline (short/long branches), the survivor semi-join,
-    // AND the decontamination shingle stream — without it every
-    // consumer re-runs the full quality + line-dedup subtree (the
-    // ×10 probe measured 46.6s uncheckpointed vs 14.7s with it).
+    val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val gated = stage("quality") {
+      (cfg.quality match {
+        case Some(th) if !TextAnalysis.lmBandBinds(th) =>
+          TextAnalysis.qualityGate(docs, idCol, textCol, th)
+        case Some(th) =>
+          val kept = TextAnalysis.qualityClassifier(docs, idCol, textCol, th)
+            .filter(col("keep")).select("doc_id")
+          base.join(kept, Seq("doc_id"), "left_semi")
+        case None => base.filter(col("doc_id").isNotNull)
+      }).localCheckpoint(false)
+    }
     // A document whose cleaned text has no words is not training data.
-    // Dedup.pipeline passes short and empty docs around its exact-hash
-    // stage (keepList's contract), so without this filter every copy
-    // of a document that line dedup emptied would survive.
-    val cleaned =
+    // Dedup passes short and empty docs around its exact-hash stage
+    // (keepList's contract), so without this filter every copy of a
+    // document that line dedup emptied would survive.
+    val cleaned = stage("line dedup") {
       (if (cfg.lineDedup)
-        Dedup.lineDedup(afterQuality, "doc_id", "text",
-            cfg.lineMaxDf, cfg.lineMinChars)
+        Dedup.keptLines(gated, "doc_id", "text", cfg.lineMaxDf,
+            cfg.lineMinChars)
           .select(col("doc_id"), col("text_clean").as("text"))
-      else afterQuality)
+      else gated)
         .filter(col("text").rlike("\\S"))
         .localCheckpoint(false)
-    val kept = Dedup.pipeline(cleaned, "doc_id", "text",
-      cfg.dedupN, cfg.dedupThreshold)
-    val deduped = cleaned.join(kept, Seq("doc_id"), "left_semi")
+    }
+    val deduped = stage("near-dup") {
+      Dedup.pipelineRows(cleaned, cfg.dedupN, cfg.dedupThreshold)
+    }
     evalDocs match {
-      case Some(ev) =>
-        val contaminated = Dedup.decontaminate(deduped, "doc_id", "text",
-            ev, "doc_id", "text", cfg.decontamN, cfg.decontamMinOverlap)
-          .select("doc_id")
-        deduped.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
+      case Some(ev) => stage("decontaminate") {
+        val evalShingles = Dedup.freezeEvalShingles(ev, "text", cfg.decontamN)
+        Dedup.scrubFrozen(deduped, "text", evalShingles, cfg.decontamN,
+          cfg.decontamMinOverlap)
+      }
       case None => deduped
     }
   }

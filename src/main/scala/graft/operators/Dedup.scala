@@ -928,8 +928,26 @@ object Dedup {
     */
   def pipeline(docs: DataFrame, idCol: String, textCol: String,
                n: Int, threshold: Double, k: Int = 32,
-               bands: Int = 16): DataFrame = {
-    val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+               bands: Int = 16): DataFrame =
+    pipelineRows(docs.select(col(idCol).as("doc_id"),
+      col(textCol).as("text")), n, threshold, k, bands).select("doc_id")
+
+  /** [[pipeline]]'s survivors as (doc_id, text) rows of `base`, so a
+    * caller that needs the text (Curate) takes it from here instead of
+    * joining the keep list back to its corpus. Doc ids are assumed
+    * unique, as everywhere in the dedup family.
+    *
+    * Plan: the exact stage's survivors are the one corpus-sized joint,
+    * carrying each doc's distinct shingle hashes (`sh`); the band keys
+    * explode them, the candidates' exact verify joins the two docs'
+    * arrays and intersects them per pair, and a doc's shingle count is
+    * `size(sh)` — no per-doc count aggregate. The near-drop list is a
+    * lazy joint of its own: it is small (a minority of the corpus), and
+    * the joint lets its stages run once, before the survivors are read.
+    */
+  private[operators] def pipelineRows(base: DataFrame, n: Int,
+                                      threshold: Double, k: Int = 32,
+                                      bands: Int = 16): DataFrame = {
     // Docs shorter than n words (or with NULL text) produce no
     // shingles, so the exact path can never pair them — they bypass
     // EVERY stage (including the exact-hash dedup: dropping identical
@@ -944,31 +962,34 @@ object Dedup {
     val exactKeep = longDocs.groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    // Lazy localCheckpoints: survivors feeds the shingle index AND the
-    // final anti-join; the index feeds candidates, sizes, and both
-    // verify sides — materialized once at first action, reclaimed by
-    // the ContextCleaner (unlike cache(), which pins until unpersist).
+    // Lazy localCheckpoint: survivors feed the shingle index, both
+    // verify sides and the output — materialized once at first action,
+    // reclaimed by the ContextCleaner (unlike cache(), which pins until
+    // unpersist).
     val survivors = longDocs.join(exactKeep, Seq("doc_id"), "left_semi")
+      .withColumn("sh", graft.functions.ShingleHash.shingles(col("text"), n))
       .localCheckpoint(false)
-    val sh = shingleIndex(survivors, "doc_id", "text", n)
-      .localCheckpoint(false)
+    val shingles = survivors.select(col("doc_id"), col("sh"))
     // Stage 2: MinHash+LSH candidates over distinct content only.
-    val cand = minhashLshFromIndex(sh, k, bands).select("doc_a", "doc_b")
-    // Stage 3: exact Jaccard verify restricted to candidate pairs.
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val common = cand
-      .join(sh.toDF("doc_a", "s"), "doc_a")
-      .join(sh.toDF("doc_b", "s"), Seq("doc_b", "s"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
-    val nearDrops = common
-      .join(sizes.toDF("doc_a", "sz_a"), "doc_a")
-      .join(sizes.toDF("doc_b", "sz_b"), "doc_b")
-      .filter(round(col("common") /
+    val cand = minhashLshFromIndex(
+        shingles.select(col("doc_id"), explode(col("sh")).as("s")), k, bands)
+      .select("doc_a", "doc_b")
+    // Stage 3: exact Jaccard verify restricted to candidate pairs. The
+    // arrays hold distinct hashes, so their intersection's size is the
+    // shared-shingle count.
+    val nearDrops = cand
+      .join(shingles.toDF("doc_a", "sh_a"), "doc_a")
+      .join(shingles.toDF("doc_b", "sh_b"), "doc_b")
+      .select(col("doc_b").as("doc_id"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).as("common"),
+        size(col("sh_a")).as("sz_a"), size(col("sh_b")).as("sz_b"))
+      .filter(col("common") > 0 && round(col("common") /
         (col("sz_a") + col("sz_b") - col("common")), 6) >= threshold)
-      .select(col("doc_b").as("doc_id")).distinct()
-    survivors.select("doc_id")
+      .select("doc_id")
+      .localCheckpoint(false)
+    survivors.select("doc_id", "text")
       .join(broadcast(nearDrops), Seq("doc_id"), "left_anti")
-      .unionByName(shortDocs.select("doc_id"))
+      .unionByName(shortDocs)
   }
 
   // --- incremental dedup against persisted state ---------------------
@@ -1812,12 +1833,14 @@ object Dedup {
     * per-doc distinct, so count(*) IS the distinct-overlap count.
     *
     * Returns (doc_id, n_overlap) for contaminated training docs; anti-
-    * join the corpus against it to scrub.
+    * join the corpus against it to scrub. `minOverlap` must be >= 1: a
+    * doc sharing no shingle is never contaminated.
     */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
                     evalDocs: DataFrame, evalIdCol: String,
                     evalTextCol: String, n: Int,
                     minOverlap: Long = 1L): DataFrame = {
+    require(minOverlap >= 1, s"minOverlap must be >= 1, got $minOverlap")
     val evalShingles = evalDocs.select(
       explode(graft.functions.ShingleHash.shingles(col(evalTextCol), n))
         .as("s")).distinct()
@@ -1838,10 +1861,12 @@ object Dedup {
     */
   def freezeEvalShingles(evalDocs: DataFrame, evalTextCol: String,
                          n: Int): Array[Long] =
+    // one job: each doc's hashes are already distinct, the union of
+    // the eval set's is taken on the driver (no shuffle)
     evalDocs.select(
-        explode(graft.functions.ShingleHash.shingles(col(evalTextCol), n))
-          .as("s")).distinct()
-      .collect().map(_.getLong(0)).sorted
+        graft.functions.ShingleHash.shingles(col(evalTextCol), n).as("s"))
+      .collect().iterator.filterNot(_.isNullAt(0))
+      .flatMap(_.getSeq[Long](0)).toArray.distinct.sorted
 
   /** Streaming-safe decontamination twin: score each document against
     * a frozen eval shingle set ([[freezeEvalShingles]]) in ONE pass —
@@ -1852,14 +1877,32 @@ object Dedup {
     * output rows equal [[decontaminate]]'s exactly: both count
     * per-doc DISTINCT shingle hashes in the eval set. NULL text
     * yields no row, matching the batch explode semantics.
+    * `minOverlap` must be >= 1, as for [[decontaminate]]: a doc with no
+    * shared shingle has overlap 0 and no row there.
     */
   def decontaminateFrozen(docs: DataFrame, idCol: String, textCol: String,
                           frozenShingles: Array[Long], n: Int,
-                          minOverlap: Long = 1L): DataFrame =
+                          minOverlap: Long = 1L): DataFrame = {
+    require(minOverlap >= 1, s"minOverlap must be >= 1, got $minOverlap")
     docs.select(col(idCol).as("doc_id"),
         graft.functions.ShingleHash.overlapCount(col(textCol), n,
           frozenShingles.toSeq).as("n_overlap"))
       .filter(col("n_overlap") >= minOverlap)
+  }
+
+  /** The rows of `docs` that [[decontaminateFrozen]] does not flag,
+    * every column kept: one per-row probe of each doc's shingles
+    * against the frozen set (Curate and StreamingCurate). The set
+    * travels in the stage's task binary, which Spark broadcasts, as
+    * [[decontaminate]] broadcasts its eval shingles. NULL text is never
+    * contaminated. */
+  private[graft] def scrubFrozen(docs: DataFrame, textCol: String,
+                                     frozenShingles: Array[Long], n: Int,
+                                     minOverlap: Long): DataFrame = {
+    require(minOverlap >= 1, s"minOverlap must be >= 1, got $minOverlap")
+    docs.filter(coalesce(graft.functions.ShingleHash.overlapCount(
+      col(textCol), n, frozenShingles.toSeq), lit(0L)) < minOverlap)
+  }
 
   /** Repeated-line removal — the RefinedWeb/CCNet boilerplate pass:
     * a line occurring in >= `maxDf` DISTINCT documents (nav bars,
@@ -1876,37 +1919,60 @@ object Dedup {
     * the frequent-line set is bounded above by total_lines/maxDf, a
     * tiny fraction of the corpus, so AQE broadcasts the anti-join at
     * any realistic maxDf. Two real shuffles: the line-frequency agg
-    * (map-side combinable) and the per-document reassembly; per-doc
-    * state is one line array — bounded by document size, not corpus.
+    * (map-side combinable: a doc's lines are made distinct before they
+    * are counted, so the count is of distinct docs when doc ids are
+    * unique) and the per-document reassembly; per-doc state is one
+    * line array — bounded by document size, not corpus.
     */
   def lineDedup(docs: DataFrame, idCol: String, textCol: String,
                 maxDf: Int = 10, minChars: Int = 5): DataFrame = {
-    require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
-    val spine = docs.select(col(idCol).as("doc_id"),
-      split(coalesce(col(textCol), lit("")), "\n", -1).as("ls"))
-    val lines = spine
-      .select(col("doc_id"), posexplode(col("ls")).as(Seq("pos", "line")))
-      .withColumn("lk", md5(col("line")))
-    // two-level distinct-doc count (no count_distinct Expand): the
-    // (lk, doc) partial collapses a document's repeated lines
-    // map-side before anything shuffles
-    val frequent = lines.filter(length(col("line")) >= minChars)
-      .groupBy("lk", "doc_id").agg(count(lit(1)).as("occ"))
-      .groupBy("lk").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= maxDf).select("lk")
-    val rebuilt = lines.join(frequent, Seq("lk"), "left_anti")
-      .groupBy("doc_id").agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("line")))),
-          x => x.getField("line")), "\n").as("text_clean"),
-        count(lit(1)).as("n_kept"))
-    spine.select(col("doc_id"), size(col("ls")).cast("long").as("n_lines"))
-      .join(rebuilt, Seq("doc_id"), "left")
+    lineSpine(docs, idCol, textCol)
+      .select(col("doc_id"), size(col("ls")).cast("long").as("n_lines"))
+      .join(keptLines(docs, idCol, textCol, maxDf, minChars), Seq("doc_id"),
+        "left")
       .select(col("doc_id"),
         coalesce(col("text_clean"), lit("")).as("text_clean"),
         col("n_lines"),
         (col("n_lines") - coalesce(col("n_kept"), lit(0L)))
           .as("n_dropped"))
+  }
+
+  /** (doc_id, ls): each doc's lines, a NULL text as one empty line. */
+  private def lineSpine(docs: DataFrame, idCol: String, textCol: String)
+  : DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+      split(coalesce(col(textCol), lit("")), "\n", -1).as("ls"))
+
+  /** The md5 keys of the lines of at least `minChars` characters that
+    * occur in >= `maxDf` rows of a [[lineSpine]]. A row's lines are
+    * made distinct before they are exploded, so the count is one
+    * map-side-combinable aggregate; it counts distinct docs when doc
+    * ids are unique. */
+  private def frequentLineKeys(spine: DataFrame, maxDf: Int,
+                               minChars: Int): DataFrame = {
+    require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
+    spine.select(explode(array_distinct(
+        filter(col("ls"), l => length(l) >= minChars))).as("line"))
+      .groupBy(md5(col("line")).as("lk")).agg(count(lit(1)).as("df"))
+      .filter(col("df") >= maxDf).select("lk")
+  }
+
+  /** [[lineDedup]]'s cleaned text of the docs that keep at least one
+    * line: (doc_id, text_clean, n_kept). A doc whose every line is cut
+    * has no row — [[lineDedup]] left-joins its spine to report it with
+    * empty text; Curate drops it, as it drops every wordless text. */
+  private[operators] def keptLines(docs: DataFrame, idCol: String,
+                                   textCol: String, maxDf: Int,
+                                   minChars: Int): DataFrame = {
+    val spine = lineSpine(docs, idCol, textCol)
+    spine.select(col("doc_id"), posexplode(col("ls")).as(Seq("pos", "line")))
+      .withColumn("lk", md5(col("line")))
+      .join(frequentLineKeys(spine, maxDf, minChars), Seq("lk"), "left_anti")
+      .groupBy("doc_id").agg(
+        array_join(transform(
+          array_sort(collect_list(struct(col("pos"), col("line")))),
+          x => x.getField("line")), "\n").as("text_clean"),
+        count(lit(1)).as("n_kept"))
   }
 
   /** Per-document decontamination SCORES — the graded companion to
@@ -1953,16 +2019,8 @@ object Dedup {
   def freezeFrequentLines(docs: DataFrame, idCol: String,
                           textCol: String, maxDf: Int = 10,
                           minChars: Int = 5): Array[String] = {
-    require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(coalesce(col(textCol), lit("")), "\n", -1))
-          .as("line"))
-      .filter(length(col("line")) >= minChars)
-      .groupBy(md5(col("line")).as("lk"), col("doc_id"))
-      .agg(count(lit(1)).as("occ"))
-      .groupBy("lk").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= maxDf)
-      .select("lk").collect().map(_.getString(0)).sorted
+    frequentLineKeys(lineSpine(docs, idCol, textCol), maxDf, minChars)
+      .collect().map(_.getString(0)).sorted
   }
 
   /** The STREAMING-SAFE twin of [[lineDedup]]: cut lines whose md5 is

@@ -24,9 +24,11 @@ object TextAnalysis {
     * signal, so each signal has exactly one definition. */
   private def withTextStats(docs: DataFrame, idCol: String, textCol: String,
                             extra: Column*): DataFrame =
-    docs.select((Seq(col(idCol).as("doc_id"),
-      length(col(textCol)).cast("long").as("n_chars"),
-      TextStats.textStats(col(textCol)).as("ts")) ++ extra): _*)
+    docs.select((col(idCol).as("doc_id") +: statsCols(textCol)) ++ extra: _*)
+
+  private def statsCols(textCol: String): Seq[Column] = Seq(
+    length(col(textCol)).cast("long").as("n_chars"),
+    TextStats.textStats(col(textCol)).as("ts"))
 
   // The signal formulas over a withTextStats frame. Ratios are plain
   // double divisions of exact longs, rounded 6dp. NULL text gives a NULL
@@ -490,11 +492,12 @@ object TextAnalysis {
     topBigramRatio.as("top_bigram_ratio"))
 
   /** The shared keep/drop CASE over identically-named signal columns —
-    * one rule order for the batch and frozen classifiers, so the two
-    * can never drift. */
-  private def attachDecision(signals: DataFrame, th: QualityThresholds)
-  : DataFrame = {
-    val reason =
+    * one rule order for the batch and frozen classifiers and the
+    * [[qualityGate]], so the three can never drift. A rule whose
+    * condition is NULL (an empty text's alpha_ratio) is not failed.
+    * `withLm = false` leaves out the last rule, lm_score. */
+  private def dropReason(th: QualityThresholds, withLm: Boolean): Column = {
+    val rules =
       when(col("n_words").isNull ||
         col("n_words") < th.minWords || col("n_words") > th.maxWords,
         "word_count")
@@ -506,12 +509,48 @@ object TextAnalysis {
       .when(col("top_bigram_ratio") > th.maxTopBigramRatio, "top_bigram")
       .when(col("distinct_word_ratio") < th.minDistinctRatio,
         "distinct_words")
-      .when(col("lm_score").isNull ||
+    (if (withLm) rules.when(col("lm_score").isNull ||
         col("lm_score") < th.minLmScore || col("lm_score") > th.maxLmScore,
         "lm_score")
-      .otherwise(lit(null).cast("string"))
-    signals.withColumn("drop_reason", reason)
+     else rules).otherwise(lit(null).cast("string"))
+  }
+
+  private def attachDecision(signals: DataFrame, th: QualityThresholds)
+  : DataFrame =
+    signals.withColumn("drop_reason", dropReason(th, withLm = true))
       .withColumn("keep", col("drop_reason").isNull)
+
+  /** Whether the lm_score band can fail a document. A document reaches
+    * the lm_score rule only past word_count, so its text is non-NULL
+    * and has at least one token of `split(text, ' ')`; its lm_score is
+    * then a non-NULL mean of `-ln(cnt / total)` terms, each ≥ 0. With
+    * `minLmScore <= 0` and `maxLmScore` = +Inf (the defaults; NaN
+    * bounds compare false as well) the rule never fails a document. */
+  private[graft] def lmBandBinds(th: QualityThresholds): Boolean =
+    th.minLmScore > 0 || th.maxLmScore < Double.PositiveInfinity
+
+  /** The (doc_id, text) rows [[qualityClassifier]] keeps, when the lm
+    * band cannot bind ([[lmBandBinds]] false): the classifier's rules
+    * but lm_score, as one per-row [[TextStats]] projection and filter —
+    * no word explode, no vocabulary aggregate, no join. Rows with a
+    * NULL id are dropped, as the classifier's doc_id-keyed lm join
+    * drops them. Per row, so it equals a doc_id semi-join of the
+    * classifier's keep list when doc ids are unique. */
+  private[operators] def qualityGate(docs: DataFrame, idCol: String,
+                                     textCol: String, th: QualityThresholds)
+  : DataFrame = {
+    require(!lmBandBinds(th),
+      "qualityGate leaves out the lm_score rule: the band must not bind")
+    // The stats come out of a one-row inline, not a projection: Catalyst
+    // pushes a filter through a projection by inlining its expressions,
+    // which would copy the TextStats call into every rule that reads a
+    // signal, but it keeps a filter on a generator's output above it.
+    docs.select(col(idCol).as("doc_id"), col(textCol).as("_text"),
+        inline(array(struct(statsCols(textCol): _*))))
+      .select(signalCols :+ col("_text"): _*)
+      .filter(col("doc_id").isNotNull &&
+        dropReason(th, withLm = false).isNull)
+      .select(col("doc_id"), col("_text").as("text"))
   }
 
   /** Derive the frozen scoring artifact for

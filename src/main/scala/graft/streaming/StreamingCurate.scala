@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextAnalysis
+import graft.operators.{Dedup, TextAnalysis}
 
 /** The INGEST-TIME curation chain as one streaming pipeline — the
   * micro-batch twin of [[graft.operators.Curate]]'s batch stage
@@ -44,11 +44,8 @@ object StreamingCurate {
       .select(col("doc_id").as("doc_id"), col("text").as("text"))
     val deduped = StreamingDedup.firstArrivals(
       gated.as[StreamingDedup.Doc])
-    deduped.toDF()
-      .withColumn("n_overlap",
-        graft.functions.ShingleHash.overlapCount(col("text"), shingleN,
-          evalShingles.toSeq))
-      .filter(col("n_overlap") < minOverlap)
+    Dedup.scrubFrozen(deduped.toDF(), "text", evalShingles, shingleN,
+        minOverlap)
       .select("doc_id", "text")
   }
 }

@@ -248,8 +248,9 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"line dedup must stay equi-join shaped:\n$plan")
-    // line-frequency agg (2 for the distinct-doc count) + per-doc
-    // reassembly + the anti-join/spine alignment — bounded small; the
+    // line-frequency agg (one: a doc's lines are made distinct before
+    // they are counted) + per-doc reassembly + the anti-join/spine
+    // alignment — bounded small; the
     // point is no O(n²) stage and no single-partition funnel
     assert(!plan.contains("SinglePartition"),
       s"no single-partition funnel allowed:\n$plan")
