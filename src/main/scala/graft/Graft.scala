@@ -89,11 +89,13 @@ object Graft {
     OnlineStore.pointLookup(spark, root, keys)
 
   /** Keyed-MERGE refresh of a published serving snapshot (no
-    * republish); compact periodically to restore file pruning. */
+    * republish); it keeps the serving layout, so file pruning holds
+    * without a compaction in between. */
   def servingUpsert(updates: DataFrame, root: String): Long =
     OnlineStore.upsertSnapshot(updates, root)
 
-  /** Re-sort a published serving snapshot by bucket after upserts. */
+  /** Bring a published serving snapshot into the serving layout at its
+    * current size; commits nothing when it already is in it. */
   def servingCompact(spark: SparkSession, root: String,
                      numFiles: Int): Long =
     OnlineStore.compactSnapshot(spark, root, numFiles)

@@ -8,7 +8,42 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared manifest-file plumbing for the offline stores. */
-private[offline] object StorageUtil {
+private[graft] object StorageUtil {
+  /** `read` of each parquet file's footer, in the order of `files`,
+    * from a pool of at most `threads` threads: footer opens are storage
+    * round-trips, and serially a many-file commit or catalog scan would
+    * pay one per file on the driver. Every open shares one set of read
+    * options built from `conf`; parquet's own defaults would build a
+    * fresh Hadoop configuration, parsing its XML defaults, per file. */
+  def footers[T](conf: org.apache.hadoop.conf.Configuration, files: Seq[Path],
+                 threads: Int)
+                (read: org.apache.parquet.hadoop.metadata.ParquetMetadata => T)
+  : Seq[T] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    if (files.isEmpty) return Nil
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(threads, files.size)))
+    try {
+      val futures = files.map(f => pool.submit(
+        new java.util.concurrent.Callable[T] {
+          def call(): T = {
+            val reader = ParquetFileReader.open(
+              HadoopInputFile.fromPath(f, conf), options)
+            try read(reader.getFooter) finally reader.close()
+          }
+        }))
+      futures.map { f =>
+        // surface the worker's real failure, not the pool's wrapper
+        try f.get() catch {
+          case e: java.util.concurrent.ExecutionException
+            if e.getCause != null => throw e.getCause
+        }
+      }
+    } finally pool.shutdown()
+  }
+
   def readAllBytes(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)
     try {
@@ -104,8 +139,10 @@ private[offline] final class ManifestFileIndex(
   * {{{
   *   <root>/_graft_log/v00000042.json      one manifest per version
   *   <root>/data/<uuid>/part-*.parquet     immutable data files
-  *   <root>/data/<uuid>/slot=7/part-*.parquet   ... of a slotted write ([[Slots]])
   * }}}
+  * (Stores written before [[Slots]] layouts became one file per run
+  * also hold `data/<uuid>/slot=7/part-*.parquet` files; a manifest
+  * names each file by its path, so they read like any other.)
   *
   * Scale properties:
   *  - A manifest lists EVERY file in its snapshot, so reading version
@@ -134,19 +171,51 @@ object VersionedStore {
   case class VersionInfo(version: Long, op: String, nFiles: Int, rows: Long)
 
   /** A declared file layout over an integer bucket column: a row whose
-    * `column` holds bucket b in [0, buckets) belongs to file slot
+    * `column` holds bucket b in [0, buckets) belongs to slot
     * floor(b · count / buckets), so every slot is a contiguous bucket
-    * range and slot order is bucket order. [[overwrite]] and
-    * [[compact]] write it as one file per non-empty slot (see
-    * [[commit]]); reads prune it by the files' `column` ranges like any
-    * other layout, so nothing but the writer needs to know it. */
+    * range and slot order is bucket order. `count` is the finest the
+    * layout gets: it is written as one file per run of slots (see
+    * [[Layout]]), and a run is one slot once the data outgrows a read
+    * split per slot. [[overwrite]] and [[compact]] write it, and a
+    * [[merge]] or [[deleteKeys]] keyed on `column` keeps it; reads
+    * prune it by the files' `column` ranges like any other layout, so
+    * nothing but the writers needs to know it. */
   case class Slots(column: String, buckets: Int, count: Int) {
     require(buckets > 0 && count > 0, "buckets and count must be positive")
-    /** The slot of each row, in integer arithmetic. */
+  }
+
+  /** [[Slots]] as written: `runs` contiguous runs of slots, the slots s
+    * with (s · runs) div count = r making run r, each run one file
+    * sorted by `column` (see [[commit]]). `runs` is
+    * min(count, max(defaultParallelism, ⌈bytes / maxPartitionBytes⌉))
+    * for the bytes written ([[layoutOf]]): one run per core while the
+    * data is small, and no run much larger than a read split once it is
+    * larger, until each run is one slot. Recorded in the manifest of every commit that writes or
+    * keeps it, so merges, deletes and compactions read it from the
+    * snapshot itself. */
+  private case class Layout(slots: Slots, runs: Int) {
+    /** The run of each row, in integer arithmetic. */
     def expr: Column = {
       import org.apache.spark.sql.functions.{call_function, col, lit}
-      call_function("div", col(column) * count, lit(buckets))
+      val slot = call_function("div", col(slots.column) * slots.count,
+        lit(slots.buckets))
+      call_function("div", slot * runs, lit(slots.count)).cast("int")
     }
+    /** The run of a bucket given on the manifest's double scale, whose
+      * ranges are widened one ulp each way. */
+    def runOf(bucket: Double): Long = {
+      val slot = math.rint(bucket).toLong * slots.count / slots.buckets
+      slot * runs / slots.count
+    }
+  }
+
+  /** The [[Layout]] `slots` is written in for `bytes` of data. */
+  private def layoutOf(spark: SparkSession, slots: Slots, bytes: BigInt)
+  : Layout = {
+    val split = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    Layout(slots, ((bytes + split - 1) / split)
+      .max(spark.sparkContext.defaultParallelism).min(slots.count).toInt)
   }
 
   /** One data file of a snapshot: its path under the table root, row
@@ -162,8 +231,9 @@ object VersionedStore {
   /** One version's manifest, decoded. */
   private case class Snapshot(version: Long, op: String,
                               files: Seq[FileEntry], schema: StructType,
-                              commitTsMs: Long) {
+                              commitTsMs: Long, layout: Option[Layout]) {
     def rows: Long = files.map(_.rows).sum
+    def bytes: Long = files.map(_.length).sum
   }
 
   private val mapper = new ObjectMapper()
@@ -195,7 +265,8 @@ object VersionedStore {
     * such a manifest lists but storage lacks fails the decode with an
     * IllegalStateException, which [[readManifestOpt]] does not mistake
     * for a vacuumed version. Files without recorded ranges have none
-    * (manifests from before data skipping): they may match anything. */
+    * (manifests from before data skipping): they may match anything. A
+    * manifest without a `layout` records none. */
   private def readManifest(spark: SparkSession, root: String, v: Long)
   : Snapshot = {
     val p = manifestPath(root, v)
@@ -238,7 +309,11 @@ object VersionedStore {
       case "" => spark.read.parquet(new Path(root, paths.head).toString).schema
       case json => DataType.fromJson(json).asInstanceOf[StructType]
     }
-    Snapshot(v, m.get("op").asText, files, schema, m.path("ts").asLong(0L))
+    val layout = Option(m.get("layout")).map(l => Layout(
+      Slots(l.get("column").asText, l.get("buckets").asInt, l.get("count").asInt),
+      l.get("runs").asInt))
+    Snapshot(v, m.get("op").asText, files, schema, m.path("ts").asLong(0L),
+      layout)
   }
 
   /** Tolerant manifest read: None when the manifest has vanished —
@@ -313,130 +388,104 @@ object VersionedStore {
     * "may match". Results are in the order of `files`.
     */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-                          files: Seq[Path]): Seq[FooterStats] = {
-    if (files.isEmpty) return Nil // no pool for a manifest decode
-    // Footer opens are storage round-trips; serially they would make
-    // the commit O(nFiles × RTT) on the driver. A bounded pool keeps
-    // a 50k-file append's metadata pass in seconds, not minutes. (The
-    // production refinement is collecting these during the WRITE, via
-    // task-side commit messages — then this pass disappears.)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(32, files.size)))
-    try {
-      val futures = files.map(f => pool.submit(
-        new java.util.concurrent.Callable[FooterStats] {
-          def call() = fileFooterStats(conf, f)
-        }))
-      futures.map { f =>
-        // surface the worker's real failure, not the pool's wrapper
-        try f.get() catch {
-          case e: java.util.concurrent.ExecutionException
-            if e.getCause != null => throw e.getCause
-        }
-      }
-    } finally pool.shutdown()
-  }
+                          files: Seq[Path]): Seq[FooterStats] =
+    // (The production refinement is collecting these during the WRITE,
+    // via task-side commit messages — then this pass disappears.)
+    StorageUtil.footers(conf, files, threads = 32)(fileFooterStats)
 
-  private def fileFooterStats(conf: org.apache.hadoop.conf.Configuration,
-                              file: Path): FooterStats = {
+  private def fileFooterStats(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): FooterStats = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          file, conf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        val totalRows = blocks.map(_.getRowCount).sum
-        // col -> (min, max, usable-in-every-row-group-so-far)
-        val acc = scala.collection.mutable.Map
-          .empty[String, (Double, Double, Boolean)]
-        // string col -> (min bytes, max bytes, usable) — parquet
-        // orders STRING stats by UNSIGNED byte comparison (the same
-        // total order Spark's UTF8String uses), and a truncating
-        // writer keeps min a lower bound / max an upper bound, so
-        // these are always safe conservative ranges
-        val bacc = scala.collection.mutable.Map
-          .empty[String, (Array[Byte], Array[Byte], Boolean)]
-        def bCmp(a: Array[Byte], b: Array[Byte]): Int =
-          java.util.Arrays.compareUnsigned(a, b)
-        blocks.foreach { b =>
-          b.getColumns.asScala.foreach { cc =>
-            if (cc.getPath.size == 1) {
-              val name = cc.getPath.iterator.next()
-              val pt = cc.getPrimitiveType
-              val logical = pt.getLogicalTypeAnnotation
-              // value -> double on the cast(AS double) scale
-              val toD: Option[Any => Double] =
-                (pt.getPrimitiveTypeName, logical) match {
-                  // decimal ONLY on int32/int64 physicals: precision
-                  // > 18 is FIXED_LEN_BYTE_ARRAY whose stats are
-                  // Binary, not Number — those fall through to the
-                  // conservative no-stats path instead of crashing
-                  case (INT32 | INT64, d: LogicalTypeAnnotation
-                      .DecimalLogicalTypeAnnotation) =>
-                    val div = math.pow(10, d.getScale)
-                    Some(v => v.asInstanceOf[Number].doubleValue() / div)
-                  case (INT64, t: LogicalTypeAnnotation
-                      .TimestampLogicalTypeAnnotation) =>
-                    import LogicalTypeAnnotation.TimeUnit._
-                    val div = t.getUnit match {
-                      case MILLIS => 1e3
-                      case MICROS => 1e6
-                      case NANOS  => 1e9
-                    }
-                    Some(v => v.asInstanceOf[Number].doubleValue() / div)
-                  case (INT32 | INT64 | FLOAT | DOUBLE, null) =>
-                    Some(v => v.asInstanceOf[Number].doubleValue())
-                  case (INT32 | INT64,
-                        _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) =>
-                    Some(v => v.asInstanceOf[Number].doubleValue())
-                  case _ => None // strings, dates, int96, nested...
+    val blocks = footer.getBlocks.asScala
+    val totalRows = blocks.map(_.getRowCount).sum
+    // col -> (min, max, usable-in-every-row-group-so-far)
+    val acc = scala.collection.mutable.Map
+      .empty[String, (Double, Double, Boolean)]
+    // string col -> (min bytes, max bytes, usable) — parquet
+    // orders STRING stats by UNSIGNED byte comparison (the same
+    // total order Spark's UTF8String uses), and a truncating
+    // writer keeps min a lower bound / max an upper bound, so
+    // these are always safe conservative ranges
+    val bacc = scala.collection.mutable.Map
+      .empty[String, (Array[Byte], Array[Byte], Boolean)]
+    def bCmp(a: Array[Byte], b: Array[Byte]): Int =
+      java.util.Arrays.compareUnsigned(a, b)
+    blocks.foreach { b =>
+      b.getColumns.asScala.foreach { cc =>
+        if (cc.getPath.size == 1) {
+          val name = cc.getPath.iterator.next()
+          val pt = cc.getPrimitiveType
+          val logical = pt.getLogicalTypeAnnotation
+          // value -> double on the cast(AS double) scale
+          val toD: Option[Any => Double] =
+            (pt.getPrimitiveTypeName, logical) match {
+              // decimal ONLY on int32/int64 physicals: precision
+              // > 18 is FIXED_LEN_BYTE_ARRAY whose stats are
+              // Binary, not Number — those fall through to the
+              // conservative no-stats path instead of crashing
+              case (INT32 | INT64, d: LogicalTypeAnnotation
+                  .DecimalLogicalTypeAnnotation) =>
+                val div = math.pow(10, d.getScale)
+                Some(v => v.asInstanceOf[Number].doubleValue() / div)
+              case (INT64, t: LogicalTypeAnnotation
+                  .TimestampLogicalTypeAnnotation) =>
+                import LogicalTypeAnnotation.TimeUnit._
+                val div = t.getUnit match {
+                  case MILLIS => 1e3
+                  case MICROS => 1e6
+                  case NANOS  => 1e9
                 }
-              val st: org.apache.parquet.column.statistics.Statistics[_] =
-                cc.getStatistics
-              val usable = toD.isDefined && st != null &&
-                st.hasNonNullValue
-              val isString = pt.getPrimitiveTypeName == BINARY &&
-                logical.isInstanceOf[LogicalTypeAnnotation
-                  .StringLogicalTypeAnnotation]
-              if (isString) {
-                val bUsable = st != null && st.hasNonNullValue
-                val prev = bacc.get(name)
-                bacc(name) =
-                  if (!bUsable || prev.exists(!_._3))
-                    (Array.emptyByteArray, Array.emptyByteArray, false)
-                  else {
-                    val lo = st.getMinBytes
-                    val hi = st.getMaxBytes
-                    prev match {
-                      case None => (lo, hi, true)
-                      case Some((plo, phi, _)) =>
-                        (if (bCmp(lo, plo) < 0) lo else plo,
-                          if (bCmp(hi, phi) > 0) hi else phi, true)
-                    }
-                  }
-              }
-              val prev = acc.getOrElse(name,
-                (Double.PositiveInfinity, Double.NegativeInfinity, true))
-              acc(name) =
-                if (!usable || !prev._3) (0d, 0d, false)
-                else {
-                  val lo = toD.get(st.genericGetMin)
-                  val hi = toD.get(st.genericGetMax)
-                  if (lo.isNaN || hi.isNaN) (0d, 0d, false)
-                  else (math.min(prev._1, lo), math.max(prev._2, hi), true)
-                }
+                Some(v => v.asInstanceOf[Number].doubleValue() / div)
+              case (INT32 | INT64 | FLOAT | DOUBLE, null) =>
+                Some(v => v.asInstanceOf[Number].doubleValue())
+              case (INT32 | INT64,
+                    _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) =>
+                Some(v => v.asInstanceOf[Number].doubleValue())
+              case _ => None // strings, dates, int96, nested...
             }
+          val st: org.apache.parquet.column.statistics.Statistics[_] =
+            cc.getStatistics
+          val usable = toD.isDefined && st != null &&
+            st.hasNonNullValue
+          val isString = pt.getPrimitiveTypeName == BINARY &&
+            logical.isInstanceOf[LogicalTypeAnnotation
+              .StringLogicalTypeAnnotation]
+          if (isString) {
+            val bUsable = st != null && st.hasNonNullValue
+            val prev = bacc.get(name)
+            bacc(name) =
+              if (!bUsable || prev.exists(!_._3))
+                (Array.emptyByteArray, Array.emptyByteArray, false)
+              else {
+                val lo = st.getMinBytes
+                val hi = st.getMaxBytes
+                prev match {
+                  case None => (lo, hi, true)
+                  case Some((plo, phi, _)) =>
+                    (if (bCmp(lo, plo) < 0) lo else plo,
+                      if (bCmp(hi, phi) > 0) hi else phi, true)
+                }
+              }
           }
+          val prev = acc.getOrElse(name,
+            (Double.PositiveInfinity, Double.NegativeInfinity, true))
+          acc(name) =
+            if (!usable || !prev._3) (0d, 0d, false)
+            else {
+              val lo = toD.get(st.genericGetMin)
+              val hi = toD.get(st.genericGetMax)
+              if (lo.isNaN || hi.isNaN) (0d, 0d, false)
+              else (math.min(prev._1, lo), math.max(prev._2, hi), true)
+            }
         }
-        (totalRows, acc.collect { case (c, (lo, hi, true)) =>
-          c -> (Math.nextDown(lo), Math.nextUp(hi))
-        }.toMap, bacc.collect { case (c, (lo, hi, true)) =>
-          c -> (lo, hi)
-        }.toMap)
-      } finally reader.close()
+      }
     }
+    (totalRows, acc.collect { case (c, (lo, hi, true)) =>
+      c -> (Math.nextDown(lo), Math.nextUp(hi))
+    }.toMap, bacc.collect { case (c, (lo, hi, true)) =>
+      c -> (lo, hi)
+    }.toMap)
   }
 
   // --- reads ----------------------------------------------------------
@@ -697,84 +746,64 @@ object VersionedStore {
     * attempt), so those retry internally. The only writer of the
     * manifest format. Returns the committed version number.
     *
-    * Without `slots`, `df` is written as it is partitioned, one file
-    * per Spark task. With `slots`, it is shuffled once, straight to
-    * partition ids (no range-sampling job), into k tasks, each owning a
-    * contiguous run of slots; sorted by (slot, bucket) within the task,
-    * each task rolls one file per non-empty slot into a directory of
-    * its own (`data/<uuid>/slot=7/`). The slot is a hidden partition
-    * column: it names the directory and is stored in no data file, so
-    * the manifest lists `data/<uuid>/slot=7/part-…parquet` paths in its
-    * unchanged format. Each write task first decodes the session's
-    * Hadoop configuration (8.7 ms of CPU for 1,101 properties on a
-    * 4-vCPU machine), so fewer tasks than slot files is most of what a
-    * slotted write saves on a small snapshot. k is
-    * min(slot count, max(defaultParallelism, ⌈bytes / maxPartitionBytes⌉)),
-    * bytes being the plan's size estimate (a store scan's is its
-    * manifest file lengths): one task per core while the snapshot is
-    * small, and no task writes much more than a read split
-    * (`spark.sql.files.maxPartitionBytes`) once it is large. An
-    * overestimate only moves k toward one task per slot file.
-    *
-    * The data directory is listed recursively.
+    * Without `layout`, `df` is written as it is partitioned, one file
+    * per Spark task. With it, `df` is shuffled once, straight to
+    * partition ids (no range-sampling job), into one write task per
+    * run, sorted by bucket within the task, and each task writes its
+    * run as one file; a task whose run has no rows leaves no file in
+    * the snapshot. Per-file cost is what dominates a small snapshot:
+    * each write task first decodes the session's Hadoop configuration
+    * (8.7 ms of CPU for 1,101 properties on a 4-vCPU machine), and each
+    * file pays its writer's set-up and close and, on every later read
+    * that keeps it, its open. The manifest records the layout.
     */
   private def commit(df: DataFrame, root: String, op: String,
                      carryPrev: Boolean, expectedVersion: Long = -1L,
                      carried: Seq[FileEntry] = Nil,
-                     slots: Option[Slots] = None): Long = {
-    import org.apache.spark.sql.functions.{call_function, col, lit}
+                     layout: Option[Layout] = None): Long = {
     require(carried.isEmpty || expectedVersion >= 0,
       "a partial carry must be pinned to the head it was computed from")
     val spark = df.sparkSession
     val uuid = java.util.UUID.randomUUID().toString.take(12)
     val dataRel = s"data/$uuid"
     val dataDir = new Path(root, dataRel)
-    slots match {
+    layout match {
       case None => df.write.parquet(dataDir.toString)
-      case Some(s) =>
-        // a directory name must not start with '_' or '.' (Hadoop and
-        // Spark hide those paths) nor collide with a data column
-        val slot = Iterator.iterate("slot")(_ + "_")
-          .find(n => !df.columns.exists(_.equalsIgnoreCase(n))).get
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        val split = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        val k = ((bytes + split - 1) / split)
-          .max(spark.sparkContext.defaultParallelism).min(s.count).toInt
-        df.withColumn(slot, s.expr)
-          .repartitionById(k,
-            call_function("div", col(slot) * k, lit(s.count)).cast("int"))
-          .sortWithinPartitions(slot, s.column)
-          .write.partitionBy(slot).parquet(dataDir.toString)
+      case Some(l) =>
+        df.repartitionById(l.runs, l.expr)
+          .sortWithinPartitions(l.slots.column)
+          .write.parquet(dataDir.toString)
     }
     val fs = fileSystem(spark, dataDir)
-    def listed = {
-      val prefix = fs.makeQualified(dataDir).toString + "/"
-      val it = fs.listFiles(dataDir, true)
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith("part-") && n.endsWith(".parquet")
-        }.map(st => st.getPath.toString.stripPrefix(prefix) -> st)
-        .toSeq.sortBy(_._1)
-    }
-    // a partitioned write of no rows writes no file; an empty snapshot
-    // still needs one, schema-only, like an unpartitioned write's
-    val written = listed match {
-      case Nil if slots.isDefined =>
-        df.limit(0).write.mode("append").parquet(dataDir.toString); listed
-      case some => some
-    }
+    // one flat directory; listStatus, not listFiles: a located status
+    // loads the file's permissions, which on the local file system
+    // spawns a process per file
+    val written = fs.listStatus(dataDir).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }.sortBy(_.getPath.getName)
     // exact byte lengths and mtimes from the listing (the scan of this
     // snapshot is planned from them); rows AND per-file column ranges
     // straight from the parquet footers — one metadata pass, no Spark
     // job, no data pages
-    val newFiles = written.zip(footerStats(
-        spark.sparkContext.hadoopConfiguration, written.map(_._2.getPath)))
-      .map { case ((rel, st), (rows, ranges, strRanges)) =>
-        FileEntry(s"$dataRel/$rel", rows, st.getLen,
+    val entries = written.zip(footerStats(
+        spark.sparkContext.hadoopConfiguration, written.map(_.getPath)))
+      .map { case (st, (rows, ranges, strRanges)) =>
+        FileEntry(s"$dataRel/${st.getPath.getName}", rows, st.getLen,
           st.getModificationTime, ranges, strRanges)
       }
+    // Spark writes a schema-only file for an empty first task. A laid-out
+    // snapshot keeps no such file beside one with rows or a carried
+    // one (it lies in no run and every read would open it); a snapshot
+    // of no rows keeps it, as its only file.
+    val newFiles =
+      if (layout.isEmpty) entries
+      else entries.filter(_.rows > 0) match {
+        case Nil if carried.isEmpty => entries.take(1)
+        case kept => kept
+      }
+    entries.diff(newFiles).foreach(f => fs.delete(new Path(root, f.path), false))
     fs.mkdirs(logDir(root))
     var attempt = 0
     var lastConflict: Throwable = null
@@ -857,6 +886,14 @@ object VersionedStore {
       perFile("fileRows")(f => Some(java.lang.Long.valueOf(f.rows)))
       perFile("fileSizes")(f => Some(java.util.List.of(
         java.lang.Long.valueOf(f.length), java.lang.Long.valueOf(f.mtime))))
+      layout.foreach { l =>
+        val byKey = new java.util.LinkedHashMap[String, Object]()
+        byKey.put("column", l.slots.column)
+        byKey.put("buckets", Integer.valueOf(l.slots.buckets))
+        byKey.put("count", Integer.valueOf(l.slots.count))
+        byKey.put("runs", Integer.valueOf(l.runs))
+        manifest.put("layout", byKey)
+      }
       try {
         atomicCreate(fs, manifestPath(root, next),
           mapper.writeValueAsBytes(manifest))
@@ -900,11 +937,14 @@ object VersionedStore {
     commit(df, root, "append", carryPrev = true)
 
   /** Replace the snapshot (previous versions stay readable); with
-    * `slots`, written as that layout, one file per non-empty slot
-    * (see [[commit]]). */
+    * `slots`, written in that layout, one file per non-empty run of
+    * slots, the runs sized by the plan's size estimate of `df` (see
+    * [[Layout]]; an overestimate only moves them toward one per slot). */
   def overwrite(df: DataFrame, root: String,
                 slots: Option[Slots] = None): Long =
-    commit(df, root, "overwrite", carryPrev = false, slots = slots)
+    commit(df, root, "overwrite", carryPrev = false,
+      layout = slots.map(layoutOf(df.sparkSession, _,
+        df.queryExecution.optimizedPlan.stats.sizeInBytes)))
 
   /** Total row count of the latest snapshot — pure manifest metadata
     * (the per-commit footer-stats sum), no Spark job, no data read. */
@@ -935,11 +975,20 @@ object VersionedStore {
     * Each key prunes by its exact set of distinct values when it has
     * at most 1,024, else by its [min, max]. A batch whose plan
     * optimizes to a local relation of at most 1,024 rows is collected
-    * (no job) and resolved on the driver, its distinct key tuples
-    * broadcast as a local relation for the anti-join; any other batch
-    * runs a capped distinct per key (and one bounds aggregate over the
-    * keys past the cap), and is never collected first. Both give the
-    * same file split.
+    * (no job) and resolved on the driver, its distinct key tuples an
+    * IN-set the rewrite filters the matched rows out by (no broadcast
+    * job); any other batch runs a capped distinct per key (and one
+    * bounds aggregate over the keys past the cap) and an anti-join
+    * against its distinct keys, and is never collected first. Both give
+    * the same file split.
+    *
+    * A head laid out in [[Slots]] keeps its layout when the layout
+    * column is a merge key: every file in a run an update's bucket
+    * falls in is rewritten, with the run's new rows, as that run's one
+    * file, and every other file is carried. The rewrite of a small
+    * batch then costs two jobs, the shuffle's map stage and the write.
+    * Without such a key, the merge writes as above and the new
+    * snapshot records no layout.
     *
     * Optimistic concurrency done right: the merged content is bound to
     * the head it was computed from (commit claims exactly head+1); if
@@ -959,7 +1008,9 @@ object VersionedStore {
     * [[vacuum]] to retire the pre-deletion versions' files.
     * `delKeys` carries just the key columns (extra columns ignored);
     * keys that match nothing are harmless. Refuses to empty the
-    * table (a store invariant — use overwrite for that).
+    * table (a store invariant — use overwrite for that). A laid-out
+    * head keeps its layout, as in [[merge]]: each rewritten file stays
+    * its run's one file.
     */
   def deleteKeys(delKeys: DataFrame, root: String, keys: Seq[String])
   : Long = {
@@ -971,8 +1022,8 @@ object VersionedStore {
   private def copyOnWrite(updates: DataFrame, root: String,
                           keys: Seq[String], insertUpdates: Boolean)
   : Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, min, max}
-    import org.apache.spark.sql.types.{NumericType, StringType, TimestampType}
+    import org.apache.spark.sql.functions.{col, min, max, struct}
+    import org.apache.spark.sql.types.{NumericType, StringType, StructType, TimestampType}
     val spark = updates.sparkSession
     // The merge keys that prune, each as the column the manifest
     // ranges are on: numeric/timestamp keys cast to double (timestamps
@@ -1055,16 +1106,24 @@ object VersionedStore {
       case (k, vs) => sought[Array[Byte]](k, vs,
         v => utf8(v.asInstanceOf[String]), identity)
     }
-    // The anti-join side: distinct key tuples. A small batch's are a
-    // broadcast local relation (a NULL key never equality-matches, so
-    // tuples holding one are dropped); a large batch's stay distributed.
-    val updateKeys =
-      if (small) broadcast(spark.createDataFrame(
-        batch.filterNot(r => keys.indices.exists(r.isNullAt))
+    // The rewrite drops the rows whose key tuple the batch holds. A
+    // small batch's distinct tuples are an IN-set of struct literals (a
+    // NULL key never equality-matches, so tuples holding one are
+    // dropped, and a stored row with a NULL key is never in the set); a
+    // large batch's stay distributed, for an anti-join.
+    val dropMatched: DataFrame => DataFrame =
+      if (small) {
+        val tupleType = StructType(keyCols.schema.fields.map(_.copy(nullable = true)))
+        val tuples = batch.filterNot(r => keys.indices.exists(r.isNullAt))
           .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.take(keys.size)))
-          .distinct.toSeq.asJava,
-        keyCols.schema))
-      else keyCols.distinct()
+          .distinct.map(t => org.apache.spark.sql.GraftColumnBridge.column(
+            org.apache.spark.sql.catalyst.expressions.Literal.create(t, tupleType)))
+        if (tuples.isEmpty) identity
+        else _.where(!struct(keys.map(col): _*).isin(tuples.toSeq: _*))
+      } else {
+        val updateKeys = keyCols.distinct()
+        _.join(updateKeys, keys, "left_anti")
+      }
     // a small batch's rows are written as one file, not one per slice
     // of the local relation (a narrow coalesce: no job)
     val inserted = if (small) updates.coalesce(1) else updates
@@ -1073,13 +1132,33 @@ object VersionedStore {
       val head = latestVersion(spark, root)
       require(head >= 0, s"no committed version under $root")
       val snap = readManifest(spark, root, head)
-      val (touched, untouched) = snap.files.partition(mayHold(_, num, str))
+      // The head's layout is kept when the layout column is a merge key:
+      // a matched row then has its update's bucket, so it lies in that
+      // bucket's run. A merge also rewrites every file in the runs its
+      // rows go to, so no run ends up with two files, and keeps the
+      // layout only when it knows those runs. Each kept layout comes
+      // with the files it adds to the rewrite.
+      val layoutKept: Option[(Layout, FileEntry => Boolean)] = snap.layout
+        .filter(l => keys.contains(l.slots.column))
+        .flatMap { l =>
+          if (!insertUpdates) Some(l -> ((_: FileEntry) => false))
+          else num.find(_.column == l.slots.column).map { s =>
+            val runs: Long => Boolean = s.within match {
+              case Right(bs) => bs.map(l.runOf).toSet
+              case Left((lo, hi)) =>
+                val (a, b) = (l.runOf(lo), l.runOf(hi)); r => r >= a && r <= b
+            }
+            l -> ((f: FileEntry) => f.ranges.get(l.slots.column)
+              .forall(r => runs(l.runOf(r._1))))
+          }
+        }
+      val (touched, untouched) = snap.files.partition(f =>
+        mayHold(f, num, str) || layoutKept.exists(_._2(f)))
       // pruning proved no file can hold a deleted key → the delete is
       // a NO-OP; don't burn a version on an empty rewrite
       if (!insertUpdates && touched.isEmpty) return head
       def rewrite(files: Seq[FileEntry]) = {
-        val kept = readFiles(spark, root, snap, files)
-          .join(updateKeys, keys, "left_anti")
+        val kept = dropMatched(readFiles(spark, root, snap, files))
         if (insertUpdates) kept.unionByName(inserted) else kept
       }
       // nothing intersects a merge: a pure insert
@@ -1110,7 +1189,8 @@ object VersionedStore {
       try {
         return commit(merged, root,
           if (insertUpdates) "merge" else "delete", carryPrev = false,
-          expectedVersion = head + 1, carried = carried)
+          expectedVersion = head + 1, carried = carried,
+          layout = layoutKept.map(_._1))
       } catch {
         case _: CommitConflict => attempt += 1 // recompute vs new head
       }
@@ -1120,21 +1200,22 @@ object VersionedStore {
   }
 
   /** Rewrite the head snapshot whole as `op`, committed as exactly
-    * head+1 (in `slots`' layout, if given) from the rows `arrange`
-    * lays out. Earlier versions remain readable
+    * head+1 (in the [[Layout]] `layout` gives for the head, if any)
+    * from the rows `arrange` lays out. Earlier versions remain readable
     * (copy-on-write); a racing writer wins the version race and the
     * rewrite recomputes against the new head. */
   private def rewriteHead(spark: SparkSession, root: String, op: String,
-                          slots: Option[Slots] = None)
+                          layout: Snapshot => Option[Layout] = _ => None)
                          (arrange: Snapshot => DataFrame): Long = {
     var attempt = 0
     while (attempt < 10) {
       val head = latestVersion(spark, root)
       require(head >= 0, s"no committed version under $root")
-      val arranged = arrange(readManifest(spark, root, head))
+      val snap = readManifest(spark, root, head)
+      val arranged = arrange(snap)
       try {
         return commit(arranged, root, op, carryPrev = false,
-          expectedVersion = head + 1, slots = slots)
+          expectedVersion = head + 1, layout = layout(snap))
       } catch {
         case _: CommitConflict => attempt += 1 // recompute vs new head
       }
@@ -1171,14 +1252,37 @@ object VersionedStore {
   }
 
   /** Rewrite the current snapshot into the `slots` layout: one file per
-    * non-empty slot, each covering its slot's contiguous bucket range
-    * sorted by bucket, in two Spark jobs (the shuffle's map stage and
-    * a write of one task per core on a small snapshot; see [[commit]]
-    * for the task count). */
-  def compact(spark: SparkSession, root: String, slots: Slots): Long =
-    rewriteHead(spark, root, "compact", Some(slots)) { snap =>
+    * non-empty run of slots, each covering its run's contiguous bucket
+    * range sorted by bucket, in two Spark jobs (the shuffle's map stage
+    * and a write of one task per run; see [[Layout]] for the run
+    * count). A head that already is that layout commits nothing and is
+    * returned as it is, decided from its manifest alone: it records the
+    * layout `slots` takes at its size, and every file's bucket range
+    * lies inside one run, no two files in one run. Upserts and deletes
+    * keep a layout ([[merge]]), so this rewrites only when the snapshot
+    * has outgrown or shrunk out of its run count, or was written
+    * otherwise. */
+  def compact(spark: SparkSession, root: String, slots: Slots): Long = {
+    val head = latestVersion(spark, root)
+    require(head >= 0, s"no committed version under $root")
+    if (laidOut(spark, readManifest(spark, root, head), slots)) head
+    else rewriteHead(spark, root, "compact",
+        snap => Some(layoutOf(spark, slots, snap.bytes))) { snap =>
       readFiles(spark, root, snap, snap.files)
     }
+  }
+
+  /** Whether `snap` already is what compacting it into `slots` would
+    * write (see [[compact]]). */
+  private def laidOut(spark: SparkSession, snap: Snapshot,
+                      slots: Slots): Boolean = {
+    val l = layoutOf(spark, slots, snap.bytes)
+    val runs = snap.files.map(_.ranges.get(slots.column)
+      .map { case (lo, hi) => (l.runOf(lo), l.runOf(hi)) })
+    snap.layout.contains(l) &&
+      runs.forall(_.exists { case (a, b) => a == b }) &&
+      runs.distinct.size == runs.size
+  }
 
   /** Z-order (Morton) compaction: rewrite the snapshot so every file
     * covers a small TILE of the multi-column value space instead of a

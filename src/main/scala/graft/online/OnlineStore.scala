@@ -53,16 +53,18 @@ object OnlineStore {
 
   /** PERSIST a materialized snapshot for point-read serving: rows gain
     * a stable hash bucket of the key column and are written in the
-    * serving layout — file slot floor(bucket · numFiles / nBuckets),
-    * one file per non-empty slot, sorted by bucket — so a later
-    * [[pointLookup]] prunes the read to the files whose bucket range
-    * contains a requested key — the reference's RocksDB multi-get
+    * serving layout (VersionedStore.Slots): slot
+    * floor(bucket · numFiles / nBuckets), the slots grouped into
+    * contiguous runs, one file per non-empty run sorted by bucket — so
+    * a later [[pointLookup]] prunes the read to the files whose bucket
+    * range contains a requested key — the reference's RocksDB multi-get
     * shape (OnlineServingService.java batch lookup) re-expressed as
     * manifest-stat point reads: files opened ∝ key batch, not table
-    * size. The write is one shuffle (no sampling job) into one task per
-    * core while the snapshot is small (more once it outgrows a read
-    * split per core), each rolling the files of a contiguous run of
-    * slots (VersionedStore.Slots). Repeated
+    * size, and each file at most about one read split. The write is one
+    * shuffle (no sampling job) into one task per run: one run per core
+    * while the snapshot is small, more once it outgrows a read split
+    * per core, up to one per slot, so `numFiles` is the finest the
+    * layout gets. Upserts and deletes keep the layout. Repeated
     * publishes overwrite atomically (old versions stay
     * time-travelable); the key/bucket config is encoded in the bucket
     * column's name, so serving needs no out-of-band config and config
@@ -84,22 +86,22 @@ object OnlineStore {
     * MERGE (partial copy-on-write — only files containing updated
     * buckets rewrite), not a republish. Updates are bucketed with the
     * snapshot's OWN hash config (read from its schema) so lookups stay
-    * correct; like the IVF inverted file, merge-written files can span
-    * buckets and degrade [[pointLookup]]'s file pruning until
-    * [[compactSnapshot]]. Rows whose key is NULL are dropped: no
-    * lookup could serve them and no later upsert or delete could match
-    * them.
+    * correct. A snapshot in the serving layout keeps it: each run of
+    * slots an updated bucket falls in is rewritten as that run's one
+    * file, and every other file is carried, so [[pointLookup]]'s file
+    * pruning holds with no [[compactSnapshot]] in between. Rows whose
+    * key is NULL are dropped: no lookup could serve them and no later
+    * upsert or delete could match them.
     *
     * A batch that is a local relation of at most 1,024 rows (e.g.
     * `createDataFrame` over driver rows) is resolved on the driver
-    * (VersionedStore.merge): its bucket and key value sets and
-    * anti-join keys come from one collect that runs no job, and the
-    * touched files are read from the manifest with no listing. Such an
-    * upsert costs two Spark jobs: the broadcast of its keys and the
-    * write, and its rows are written as one file. Any other batch (a
-    * larger one, or one computed by a distributed plan) runs the
-    * value-set and bounds aggregates and a distributed distinct of its
-    * keys instead.
+    * (VersionedStore.merge): its bucket and key value sets and the
+    * key set the rewrite drops come from one collect that runs no job,
+    * and the touched files are read from the manifest with no listing.
+    * Such an upsert costs two Spark jobs: the shuffle's map stage and
+    * the write. Any other batch (a larger one, or one computed by a
+    * distributed plan) runs the value-set and bounds aggregates and
+    * an anti-join against a distributed distinct of its keys instead.
     */
   def upsertSnapshot(updates: DataFrame, root: String): Long = {
     import graft.offline.VersionedStore
@@ -125,9 +127,10 @@ object OnlineStore {
     * right-to-be-forgotten): a pruned copy-on-write DELETE on
     * (bucket, key) with the snapshot's own hash config — the same
     * file-pruning shape as [[upsertSnapshot]], so a small key batch
-    * rewrites only its buckets' files. Deleted keys simply stop
-    * resolving in [[pointLookup]]; pair with VersionedStore.vacuum to
-    * retire pre-deletion snapshots. */
+    * rewrites only its buckets' files, each as the same run's one file
+    * (the serving layout holds). Deleted keys simply stop resolving in
+    * [[pointLookup]]; pair with VersionedStore.vacuum to retire
+    * pre-deletion snapshots. */
   def deleteSnapshotKeys(keys: DataFrame, root: String): Long = {
     import graft.offline.VersionedStore
     val spark = keys.sparkSession
@@ -138,10 +141,14 @@ object OnlineStore {
       root, Seq(kb, keyCol))
   }
 
-  /** Rewrite a published snapshot back into the serving layout (see
-    * [[publishSnapshot]]) to restore per-slot file pruning after
-    * accumulated upserts: two Spark jobs, the shuffle's map stage and
-    * a write of one task per core while the snapshot is small. */
+  /** Bring a published snapshot into the serving layout of `numFiles`
+    * slots (see [[publishSnapshot]]) at its current size. A snapshot
+    * already in it, as upserts and deletes leave one, commits nothing:
+    * the head version is returned, decided from its manifest alone.
+    * Otherwise (the snapshot outgrew its run count, was published with
+    * another `numFiles`, or was written before upserts kept the layout)
+    * it is rewritten in two Spark jobs, the shuffle's map stage and a
+    * write of one task per run. */
   def compactSnapshot(spark: SparkSession, root: String,
                       numFiles: Int): Long = {
     import graft.offline.VersionedStore

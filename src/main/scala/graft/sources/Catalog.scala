@@ -114,27 +114,9 @@ object Catalog {
     * only, no Spark job. Bounded pool: footer opens are storage
     * round-trips and a big partitioned table has thousands of leaves. */
   def parquetFooterRows(conf: org.apache.hadoop.conf.Configuration,
-                        files: Seq[Path]): Long = {
-    if (files.isEmpty) return 0L
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, files.size)))
-    try {
-      val futures = files.map(f => pool.submit(
-        new java.util.concurrent.Callable[Long] {
-          def call(): Long = {
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(f, conf))
-            try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-            finally r.close()
-          }
-        }))
-      futures.map(f => try f.get() catch {
-        case e: java.util.concurrent.ExecutionException
-          if e.getCause != null => throw e.getCause
-      }).sum
-    } finally pool.shutdown()
-  }
+                        files: Seq[Path]): Long =
+    graft.offline.StorageUtil.footers(conf, files, threads = 16)(
+      _.getBlocks.asScala.map(_.getRowCount).sum).sum
 
   private def describeTree(spark: SparkSession, fs: FileSystem,
                            dir: Path, countRows: Boolean,

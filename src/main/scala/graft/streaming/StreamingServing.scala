@@ -18,9 +18,11 @@ import graft.online.OnlineStore
   * name), so there is no separate config to keep in sync. The keyed
   * MERGE makes foreachBatch's
   * at-least-once replay idempotent (same batch re-merged → same
-  * state), the same argument as StreamingVersionedSink's merge mode;
-  * run [[graft.online.OnlineStore.compactSnapshot]] periodically to
-  * restore file pruning as merge commits accumulate.
+  * state), the same argument as StreamingVersionedSink's merge mode.
+  * Each upsert keeps the snapshot's serving layout, so file pruning
+  * holds without compaction; [[graft.online.OnlineStore.compactSnapshot]]
+  * is needed only once the snapshot outgrows its file count (it
+  * commits nothing while the layout still fits).
   */
 object StreamingServing {
 

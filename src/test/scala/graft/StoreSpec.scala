@@ -278,6 +278,25 @@ class StoreSpec extends AnyFunSuite {
     assertValueSetPruned(updates, "vmdist")
   }
 
+  test("VersionedStore: a small merge drops the rows its key tuples match, across key types and NULLs") {
+    val root = tmp("vmkeys")
+    val table = Seq((Some(1L), "a", 1.0), (Some(2L), "b", 2.0),
+      (None, "c", 3.0), (Some(3L), null, 4.0)).toDF("id", "tag", "v")
+    VersionedStore.create(table, root)
+    // int ids over a long column; NULL ids and tags never match, on
+    // either side
+    val updates = Seq((Some(2), "b", 20.0), (Some(3), null, 40.0),
+      (None, "c", 30.0), (Some(5), "e", 50.0)).toDF("id", "tag", "v")
+    VersionedStore.merge(updates, root, Seq("id", "tag"))
+    val want = table.join(updates, Seq("id", "tag"), "left_anti")
+      .unionByName(updates)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id").cast("long"), col("tag"), col("v"))
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(VersionedStore.read(spark, root)) == rows(want))
+    assert(VersionedStore.read(spark, root).count() == 7)
+  }
+
   test("VersionedStore: a manifest without sizes, rows or schema reads, merges, compacts") {
     import com.fasterxml.jackson.databind.ObjectMapper
     val root = tmp("vnosize")

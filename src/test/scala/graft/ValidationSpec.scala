@@ -69,7 +69,7 @@ class ValidationSpec extends AnyFunSuite {
   }
 
   // one published snapshot shared by the pointLookup tests: 512
-  // entities over 32 buckets / 16 files
+  // entities over 32 buckets / 16 slots, one file per run of slots
   private lazy val shapeSnapshot = {
     import graft.online.OnlineStore
     val vectors = (0 until 512)
@@ -86,22 +86,25 @@ class ValidationSpec extends AnyFunSuite {
     import graft.online.OnlineStore
     import graft.offline.VersionedStore
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    // a 3-key batch must open a strict subset of files — on a fresh
-    // publish no more than the buckets it touches — and return
-    // exactly batchLookup
+    // a 3-key batch must open exactly the files whose bucket range
+    // holds one of its buckets — no more than the buckets it touches —
+    // and return exactly batchLookup
     val (vectors, root) = shapeSnapshot
-    val allFiles = VersionedStore.read(spark, root).inputFiles.toSet
-    assert(allFiles.size >= 8, s"expected ~16 files, got ${allFiles.size}")
+    val kb = "_kb_entity_id_32"
+    val allFiles = dataFiles(VersionedStore.read(spark, root))
+    assert(allFiles.size == runsOf(16), s"one file per run, got ${allFiles.size}")
     val keys = Seq("u7", "u300", "u999").toDF("entity_id") // u999 missing
     val served = OnlineStore.pointLookup(spark, root, keys)
-    val opened = served.inputFiles.toSet
-    assert(opened.nonEmpty && opened.subsetOf(allFiles))
+    val opened = dataFiles(served)
     val buckets = keys.select(
         pmod(xxhash64(col("entity_id").cast("string")), lit(32L)))
-      .distinct().count()
-    assert(opened.size <= buckets,
+      .distinct().as[Long].collect().toSet
+    val holding = bucketRanges(root, kb).collect {
+      case (f, lo, hi) if buckets.exists(b => b >= lo && b <= hi) => f
+    }.toSet
+    assert(opened.nonEmpty && opened == holding && opened.size <= buckets.size,
       s"3-key batch must prune: opened ${opened.size}/${allFiles.size} " +
-        s"files for $buckets buckets")
+        s"files for ${buckets.size} buckets held by ${holding.size}")
     val expected = OnlineStore.batchLookup(vectors, keys)
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
       .toSet
@@ -153,14 +156,16 @@ class ValidationSpec extends AnyFunSuite {
   test("pointLookup: a read keeping more than 32 files runs two jobs, no listing") {
     import graft.online.OnlineStore
     import graft.offline.VersionedStore
-    // 64 single-bucket files: a 100-key batch keeps about 50 of them,
-    // past the 32 paths at which a path read lists files in a job
+    // 64 single-bucket files (a snapshot past a read split per slot is
+    // written one file per slot): a 100-key batch keeps about 50 of
+    // them, past the 32 paths at which a path read lists files in a job
     val vectors = (0 until 1024)
       .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
     val root = java.nio.file.Files
       .createTempDirectory("pointwide").toString + "/snap"
-    OnlineStore.publishSnapshot(vectors, root, "entity_id",
-      nBuckets = 64, numFiles = 64)
+    withSplit("100b")(OnlineStore.publishSnapshot(vectors, root, "entity_id",
+      nBuckets = 64, numFiles = 64))
+    assert(VersionedStore.read(spark, root).inputFiles.length == 64)
     val keys = (0 until 1024 by 10).map(i => s"u$i").toDF("entity_id")
     // counted from the call on: a path-based file index lists its
     // files when the frame is built, not when it runs
@@ -209,13 +214,13 @@ class ValidationSpec extends AnyFunSuite {
       nBuckets = 32, numFiles = 8)
     val filesBefore = VersionedStore.read(spark, root).inputFiles.toSet
     // update one entity, insert a new one
-    OnlineStore.upsertSnapshot(
+    val v1 = OnlineStore.upsertSnapshot(
       Seq(("u7", -1.0), ("u9999", 42.0)).toDF("entity_id", "f_a"), root)
     // partial copy-on-write: merging on the numeric bucket prunes, so
-    // the files NOT containing the two touched buckets carry over
-    // untouched (a string-key-only merge would rewrite all 8)
+    // the files of the runs NOT holding the two touched buckets carry
+    // over untouched (a string-key-only merge would rewrite them all)
     val filesAfter = VersionedStore.read(spark, root).inputFiles.toSet
-    assert((filesBefore & filesAfter).size >= filesBefore.size - 3,
+    assert((filesBefore & filesAfter).size >= filesBefore.size - 2,
       s"merge must carry untouched files: kept " +
         s"${(filesBefore & filesAfter).size} of ${filesBefore.size}")
     val keys = Seq("u7", "u9999", "u3").toDF("entity_id")
@@ -223,12 +228,14 @@ class ValidationSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got == Map("u7" -> -1.0, "u9999" -> 42.0, "u3" -> 3.0),
       s"merge refresh must serve updated + inserted + untouched: $got")
-    // compaction restores layout and changes nothing observable
-    OnlineStore.compactSnapshot(spark, root, numFiles = 8)
+    // the upsert kept the layout, so pruning needs no compaction: the
+    // compaction commits nothing and changes nothing observable
+    assertLaidOut(root, "_kb_entity_id_32", 32, 8)
+    assert(OnlineStore.compactSnapshot(spark, root, numFiles = 8) == v1)
     val after = OnlineStore.pointLookup(spark, root, keys)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(after == got)
-    assert(VersionedStore.read(spark, root).inputFiles.length <= 8)
+    assert(VersionedStore.read(spark, root).inputFiles.toSet == filesAfter)
   }
 
   test("upsertSnapshot: a local batch of at most 1,024 keys runs at most two jobs") {
@@ -242,7 +249,7 @@ class ValidationSpec extends AnyFunSuite {
     val v0 = OnlineStore.publishSnapshot(vectors, root, "entity_id",
       nBuckets = 32, numFiles = 16)
     val before = VersionedStore.read(spark, root, v0)
-    val fileSet = before.inputFiles.toSet
+    val fileSet = dataFiles(before)
     // the entities of half the buckets, one of them twice, a NULL key
     // and a new key: a few hundred rows that leave some files untouched
     val kb = "_kb_entity_id_32"
@@ -265,28 +272,17 @@ class ValidationSpec extends AnyFunSuite {
       df.select("entity_id", "f_a", kb).collect().map(_.toSeq).toSeq
         .sortBy(_.mkString("|"))
     assert(rowsOf(VersionedStore.read(spark, root, v1)) == rowsOf(want))
-    // carried files: exactly those whose bucket range or entity range
-    // holds no update value
-    val bkts = keyed.select(kb).as[Long].collect().toSet
-    val ids = rows.flatMap(_._1).toSet
-    // a file's path below the table root: part-file names repeat across
-    // the slot directories of one write
-    def name(path: String) = path.substring(path.indexOf("/data/") + 1)
-    val ranges = before.groupBy(org.apache.spark.sql.functions.input_file_name())
-      .agg(org.apache.spark.sql.functions.min(kb),
-        org.apache.spark.sql.functions.max(kb),
-        org.apache.spark.sql.functions.min("entity_id"),
-        org.apache.spark.sql.functions.max("entity_id"))
-      .collect().map(r => name(r.getString(0)) ->
-        ((r.getLong(1), r.getLong(2), r.getString(3), r.getString(4)))).toMap
-    val expectCarried = fileSet.filter { f =>
-      val (bLo, bHi, sLo, sHi) = ranges(name(f))
-      !bkts.exists(b => b >= bLo && b <= bHi) ||
-        !ids.exists(s => s >= sLo && s <= sHi)
-    }
-    val carried = fileSet & VersionedStore.read(spark, root, v1).inputFiles.toSet
+    // carried files: exactly those of the runs no update bucket falls
+    // in; the layout holds
+    val runs = keyed.select(kb).as[Long].collect()
+      .map(b => runOf(b, 32, 16)).toSet
+    val expectCarried = bucketRanges(root, kb, v0).collect {
+      case (f, lo, _) if !runs(runOf(lo, 32, 16)) => f
+    }.toSet
+    val carried = fileSet & dataFiles(VersionedStore.read(spark, root, v1))
     assert(expectCarried.nonEmpty && carried == expectCarried,
       s"carried ${carried.size}, expected ${expectCarried.size} of ${fileSet.size}")
+    assertLaidOut(root, kb, 32, 16)
     // upserting the same batch again stores no NULL-key row either
     val v2 = OnlineStore.upsertSnapshot(updates, root)
     assert(VersionedStore.read(spark, root, v2)
@@ -297,20 +293,32 @@ class ValidationSpec extends AnyFunSuite {
   test("deleteSnapshotKeys: retracted entities stop resolving; pruned rewrite; history intact") {
     import graft.online.OnlineStore
     import graft.offline.VersionedStore
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val vectors = (0 until 256)
       .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
     val root = java.nio.file.Files
       .createTempDirectory("snapdel").toString + "/snap"
     val v0 = OnlineStore.publishSnapshot(vectors, root, "entity_id",
       nBuckets = 32, numFiles = 8)
-    val filesBefore = VersionedStore.read(spark, root).inputFiles.toSet
-    OnlineStore.deleteSnapshotKeys(
-      Seq("u7", "u8", "u9999").toDF("entity_id"), root) // u9999 absent
-    // partial copy-on-write on the numeric bucket, like upserts
-    val filesAfter = VersionedStore.read(spark, root).inputFiles.toSet
-    assert((filesBefore & filesAfter).size >= filesBefore.size - 3,
+    val filesBefore = dataFiles(VersionedStore.read(spark, root))
+    val deleted = Seq("u7", "u8", "u9999").toDF("entity_id") // u9999 absent
+    OnlineStore.deleteSnapshotKeys(deleted, root)
+    // partial copy-on-write on the numeric bucket, like upserts: only
+    // the files whose bucket range holds a deleted key's bucket are
+    // rewritten, and the layout holds
+    val kb = "_kb_entity_id_32"
+    val buckets = deleted.select(pmod(xxhash64(col("entity_id")), lit(32L)))
+      .as[Long].collect().toSet
+    val ids = Set("u7", "u8", "u9999")
+    val expectCarried = fileRanges(root, kb, v0).collect {
+      case (f, lo, hi, sLo, sHi) if !buckets.exists(b => b >= lo && b <= hi) ||
+          !ids.exists(i => i >= sLo && i <= sHi) => f
+    }.toSet
+    val filesAfter = dataFiles(VersionedStore.read(spark, root))
+    assert(expectCarried.nonEmpty && (filesBefore & filesAfter) == expectCarried,
       s"delete must carry untouched files: kept " +
         s"${(filesBefore & filesAfter).size} of ${filesBefore.size}")
+    assertLaidOut(root, kb, 32, 8)
     val got = OnlineStore.pointLookup(spark, root,
         Seq("u7", "u8", "u3").toDF("entity_id"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -322,73 +330,143 @@ class ValidationSpec extends AnyFunSuite {
     assert(VersionedStore.read(spark, root).count() == 254)
   }
 
-  // --- the serving layout: one file per non-empty slot ---------------
+  // --- the serving layout: one file per non-empty run of slots ---------
 
-  /** The serving layout of `numFiles` slots over `nBuckets` buckets:
-    * every file's bucket range lies inside one slot, the ranges are
-    * pairwise disjoint, and no slot holds two files. */
-  private def assertSlotted(root: String, kb: String, nBuckets: Int,
-                            numFiles: Int): Unit = {
+  /** Runs of a small snapshot's layout of `numFiles` slots: one per
+    * core, at most one per slot. */
+  private def runsOf(numFiles: Int): Int =
+    math.min(numFiles, spark.sparkContext.defaultParallelism)
+
+  /** The run of bucket `b` in that layout. */
+  private def runOf(b: Long, nBuckets: Int, numFiles: Int): Long =
+    (b * numFiles / nBuckets) * runsOf(numFiles) / numFiles
+
+  /** A data file's path below its table root: `input_file_name` and
+    * `inputFiles` spell the same file's URI differently. */
+  private def rel(path: String): String = path.substring(path.indexOf("/data/") + 1)
+
+  private def dataFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(rel).toSet
+
+  /** Per file of a version: its path below the table root and the least
+    * and greatest bucket and entity it holds. */
+  private def fileRanges(root: String, kb: String, version: Long = -1L)
+  : Seq[(String, Long, Long, String, String)] = {
     import graft.offline.VersionedStore
     import org.apache.spark.sql.functions.{input_file_name, max, min}
-    // per file: its path and the least and greatest bucket it holds
-    val ranges = VersionedStore.read(spark, root)
-      .groupBy(input_file_name()).agg(min(kb), max(kb))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    VersionedStore.read(spark, root, version)
+      .groupBy(input_file_name()).agg(min(kb), max(kb), min("entity_id"),
+        max("entity_id"))
+      .collect().map(r => (rel(r.getString(0)), r.getLong(1), r.getLong(2),
+        r.getString(3), r.getString(4)))
       .toSeq.sortBy(_._2)
+  }
+
+  private def bucketRanges(root: String, kb: String, version: Long = -1L)
+  : Seq[(String, Long, Long)] =
+    fileRanges(root, kb, version).map(r => (r._1, r._2, r._3))
+
+  /** The serving layout of `numFiles` slots over `nBuckets` buckets in
+    * the runs of a small snapshot: the manifest records it, every
+    * file's bucket range lies inside one run, the ranges are pairwise
+    * disjoint, no run holds two files, and every file holds rows. */
+  private def assertLaidOut(root: String, kb: String, nBuckets: Int,
+                            numFiles: Int): Unit = {
+    import graft.offline.VersionedStore
+    val head = VersionedStore.latestVersion(spark, root)
+    val manifest = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      new java.io.File(f"$root/_graft_log/v$head%08d.json"))
+    val layout = manifest.get("layout")
+    assert(layout != null, s"version $head records no layout")
+    assert((layout.get("column").asText, layout.get("buckets").asInt,
+      layout.get("count").asInt, layout.get("runs").asInt) ==
+      ((kb, nBuckets, numFiles, runsOf(numFiles))), s"layout $layout")
+    val ranges = bucketRanges(root, kb)
     assert(ranges.size == VersionedStore.read(spark, root).inputFiles.length,
       "every file holds rows")
-    def slot(b: Long) = b * numFiles / nBuckets
+    def run(b: Long) = runOf(b, nBuckets, numFiles)
     ranges.foreach { case (f, lo, hi) =>
-      assert(slot(lo) == slot(hi), s"$f holds buckets $lo..$hi across slots")
+      assert(run(lo) == run(hi), s"$f holds buckets $lo..$hi across runs")
     }
     ranges.zip(ranges.drop(1)).foreach { case (a, b) =>
       assert(a._3 < b._2, s"overlapping bucket ranges: $a, $b")
     }
-    val slots = ranges.map(r => slot(r._2))
-    assert(slots.distinct.size == slots.size, s"a slot holds two files: $slots")
+    val runs = ranges.map(r => run(r._2))
+    assert(runs.distinct.size == runs.size, s"a run holds two files: $runs")
   }
+
+  /** `body` with a read split of `bytes`: a snapshot larger than a
+    * split per slot is written one file per slot. */
+  private def withSplit[T](bytes: String)(body: => T): T = {
+    val split = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(split, bytes)
+    try body finally spark.conf.unset(split)
+  }
+
+  /** Parquet files under `root`, by path. */
+  private def parquetOnDisk(root: String): Set[String] =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSet
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
 
-  test("serving layout: publish and upserts + compaction write one file per slot; rows equal batchLookup") {
+  test("serving layout: publish and upserts write one file per run, compaction writes nothing; rows equal batchLookup") {
     import graft.online.OnlineStore
     import graft.offline.VersionedStore
-    import org.apache.spark.sql.functions.{col, input_file_name}
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val vectors = (0 until 256)
       .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
     val root = java.nio.file.Files
       .createTempDirectory("slotpub").toString + "/snap"
     val kb = "_kb_entity_id_32"
-    OnlineStore.publishSnapshot(vectors, root, "entity_id",
+    val v0 = OnlineStore.publishSnapshot(vectors, root, "entity_id",
       nBuckets = 32, numFiles = 8)
-    assertSlotted(root, kb, 32, 8)
-    // the slot names a directory and is no column of the snapshot
+    assertLaidOut(root, kb, 32, 8)
+    assert(VersionedStore.read(spark, root).inputFiles.length == runsOf(8))
+    // the layout is no column of the snapshot and names no directory
     assert(VersionedStore.schemaOf(spark, root).fieldNames.toSeq ==
       Seq("entity_id", "f_a", kb))
-    assert(VersionedStore.read(spark, root).inputFiles.forall(_.contains("/slot=")))
-    // a local batch's rows land in one file
+    assert(!VersionedStore.read(spark, root).inputFiles.exists(_.contains("/slot=")))
+    // a narrow upsert rewrites only its run's file, as that run's one file
+    val before = dataFiles(VersionedStore.read(spark, root))
     val v1 = OnlineStore.upsertSnapshot(
-      Seq(("u7", -1.0), ("u9999", 42.0)).toDF("entity_id", "f_a"), root)
-    assert(VersionedStore.read(spark, root, v1)
-      .where(col("entity_id").isin("u7", "u9999"))
-      .select(input_file_name()).distinct().count() == 1)
-    OnlineStore.upsertSnapshot(Seq(("u8", -2.0)).toDF("entity_id", "f_a"), root)
-    OnlineStore.compactSnapshot(spark, root, numFiles = 8)
-    assertSlotted(root, kb, 32, 8)
-    val want = vectors.where(!col("entity_id").isin("u7", "u8"))
-      .unionByName(Seq(("u7", -1.0), ("u8", -2.0), ("u9999", 42.0))
+      Seq(("u7", -1.0)).toDF("entity_id", "f_a"), root)
+    val b7 = Seq("u7").toDF("entity_id")
+      .select(pmod(xxhash64(col("entity_id")), lit(32L))).as[Long].head()
+    val (run7, others) = bucketRanges(root, kb, v0)
+      .partition(r => runOf(r._2, 32, 8) == runOf(b7, 32, 8))
+    val after = dataFiles(VersionedStore.read(spark, root, v1))
+    assert(before -- after == run7.map(_._1).toSet && run7.size == 1)
+    assert((after -- before).size == 1 && others.map(_._1).toSet.subsetOf(after))
+    assertLaidOut(root, kb, 32, 8)
+    // a wider upsert, a new key included: the layout still holds, and a
+    // lookup opens at most min(keys, runs) files
+    OnlineStore.upsertSnapshot(Seq(("u8", -2.0), ("u9999", 42.0), ("u100", -3.0))
+      .toDF("entity_id", "f_a"), root)
+    assertLaidOut(root, kb, 32, 8)
+    val want = vectors.where(!col("entity_id").isin("u7", "u8", "u100"))
+      .unionByName(Seq(("u7", -1.0), ("u8", -2.0), ("u9999", 42.0), ("u100", -3.0))
         .toDF("entity_id", "f_a"))
+    val two = Seq("u8", "u9999").toDF("entity_id")
+    assert(OnlineStore.pointLookup(spark, root, two).inputFiles.length <=
+      math.min(2, runsOf(8)))
+    // compacting the laid-out head commits nothing and writes no file
+    val head = VersionedStore.latestVersion(spark, root)
+    val onDisk = parquetOnDisk(root)
+    val (v, jobs) = countJobs(OnlineStore.compactSnapshot(spark, root, numFiles = 8))
+    assert(v == head && jobs == 0 && parquetOnDisk(root) == onDisk)
+    assert(VersionedStore.latestVersion(spark, root) == head)
     val keys = want.select("entity_id").unionByName(Seq("u404").toDF("entity_id"))
     assert(rowsOf(OnlineStore.pointLookup(spark, root, keys)) ==
       rowsOf(OnlineStore.batchLookup(want, keys)))
     assert(rowsOf(VersionedStore.read(spark, root).drop(kb)) == rowsOf(want))
-    // a publish with no non-NULL key writes no slot file, yet stays a
-    // readable snapshot that serves nothing
+    // a publish with no non-NULL key writes one file of no rows, yet
+    // stays a readable snapshot that serves nothing
     val empty = root + "_empty"
     OnlineStore.publishSnapshot(Seq((None: Option[String], 1.0))
       .toDF("entity_id", "f_a"), empty, "entity_id", nBuckets = 32, numFiles = 8)
+    assert(VersionedStore.read(spark, empty).inputFiles.length == 1)
     assert(OnlineStore.pointLookup(spark, empty, keys).count() == 0)
   }
 
@@ -404,26 +482,29 @@ class ValidationSpec extends AnyFunSuite {
       nBuckets = 64, numFiles = 64)
     val v1 = OnlineStore.upsertSnapshot(
       (0 until 300 by 3).map(i => (s"u$i", -1.0)).toDF("entity_id", "f_a"), root)
+    // another slot count is another layout: the head is rewritten
     val (v2, jobs, stageTasks) =
-      countJobsAndStages(OnlineStore.compactSnapshot(spark, root, numFiles = 64))
+      countJobsAndStages(OnlineStore.compactSnapshot(spark, root, numFiles = 32))
     val cores = spark.sparkContext.defaultParallelism
     assert(v2 == v1 + 1)
     assert(jobs <= 2, s"compaction ran $jobs jobs")
     assert(stageTasks.nonEmpty && stageTasks.last <= cores,
       s"the write stage ran ${stageTasks.last} tasks on $cores cores")
-    assertSlotted(root, kb, 64, 64)
-    assert(VersionedStore.read(spark, root).inputFiles.length == 64)
-    // another slot count is another layout; a snapshot of more than a
-    // read split per core is written by one task per slot
-    val split = "spark.sql.files.maxPartitionBytes"
-    spark.conf.set(split, "1k")
-    val (v3, _, bigStages) = try
-      countJobsAndStages(OnlineStore.compactSnapshot(spark, root, numFiles = 16))
-    finally spark.conf.unset(split)
+    assertLaidOut(root, kb, 64, 32)
+    assert(VersionedStore.read(spark, root).inputFiles.length == runsOf(32))
+    // a snapshot of more than a read split per core is written by one
+    // task per slot, one file per slot
+    val (v3, _, bigStages) =
+      withSplit("256b")(countJobsAndStages(
+        OnlineStore.compactSnapshot(spark, root, numFiles = 16)))
     assert(v3 == v2 + 1)
     assert(bigStages.last == 16,
       s"the write stage ran ${bigStages.last} tasks for 16 slots")
-    assertSlotted(root, kb, 64, 16)
+    val ranges = bucketRanges(root, kb)
+    assert(ranges.size == 16 && ranges.forall(r => r._2 * 16 / 64 == r._3 * 16 / 64),
+      s"one file per slot: $ranges")
+    // and is kept so while it stays that large
+    assert(withSplit("256b")(OnlineStore.compactSnapshot(spark, root, numFiles = 16)) == v3)
     assert(rowsOf(VersionedStore.read(spark, root)) ==
       rowsOf(VersionedStore.read(spark, root, v1)))
   }
@@ -438,24 +519,25 @@ class ValidationSpec extends AnyFunSuite {
     val kb = "_kb_entity_id_32"
     val v0 = OnlineStore.publishSnapshot(vectors, root, "entity_id",
       nBuckets = 32, numFiles = 8)
-    OnlineStore.upsertSnapshot(Seq(("u7", -1.0)).toDF("entity_id", "f_a"), root)
+    val v1 = OnlineStore.upsertSnapshot(Seq(("u7", -1.0)).toDF("entity_id", "f_a"), root)
     val v2 = OnlineStore.compactSnapshot(spark, root, numFiles = 8)
+    assert(v2 == v1, "the upsert kept the layout: nothing to compact")
     val v3 = OnlineStore.deleteSnapshotKeys(Seq("u8").toDF("entity_id"), root)
+    assertLaidOut(root, kb, 32, 8)
     def served(keys: String*) = OnlineStore.pointLookup(spark, root,
         keys.toDF("entity_id"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(served("u7", "u8", "u3") == Map("u7" -> -1.0, "u3" -> 3.0))
-    // time travel to the publish and the compaction
+    // time travel to the publish and the upsert
     assert(rowsOf(VersionedStore.read(spark, root, v0).drop(kb)) == rowsOf(vectors))
-    assert(VersionedStore.read(spark, root, v2).count() == 256)
+    assert(VersionedStore.read(spark, root, v1).count() == 256)
     val diff = VersionedStore.diffVersions(spark, root, "entity_id", v0, v3)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(diff == Map("u7" -> "changed", "u8" -> "removed"))
     // vacuum keeps the head; every parquet file left on disk is the head's
-    assert(VersionedStore.vacuum(spark, root, keepVersions = 1) == Seq(0L, 1L, 2L))
-    val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "data"))
-      .iterator().asScala.count(_.toString.endsWith(".parquet"))
-    assert(onDisk == VersionedStore.read(spark, root).inputFiles.length)
+    assert(VersionedStore.vacuum(spark, root, keepVersions = 1) == Seq(0L, 1L))
+    assert(parquetOnDisk(root + "/data").size ==
+      VersionedStore.read(spark, root).inputFiles.length)
     assert(served("u7", "u8", "u3") == Map("u7" -> -1.0, "u3" -> 3.0))
   }
 
@@ -473,11 +555,67 @@ class ValidationSpec extends AnyFunSuite {
     VersionedStore.overwrite(vectors
       .withColumn(kb, pmod(xxhash64(col("entity_id").cast("string")), lit(32L)))
       .repartitionByRange(8, col(kb)).sortWithinPartitions(kb), root)
-    assert(!VersionedStore.read(spark, root).inputFiles.exists(_.contains("/slot=")))
     OnlineStore.upsertSnapshot(Seq(("u7", -1.0)).toDF("entity_id", "f_a"), root)
-    OnlineStore.compactSnapshot(spark, root, numFiles = 8)
-    assert(VersionedStore.read(spark, root).inputFiles.forall(_.contains("/slot=")))
-    assertSlotted(root, kb, 32, 8)
+    val merged = VersionedStore.latestVersion(spark, root)
+    assert(OnlineStore.compactSnapshot(spark, root, numFiles = 8) == merged + 1)
+    assertLaidOut(root, kb, 32, 8)
+    val want = vectors.where(col("entity_id") =!= "u7")
+      .unionByName(Seq(("u7", -1.0)).toDF("entity_id", "f_a"))
+    assert(rowsOf(OnlineStore.pointLookup(spark, root, want.select("entity_id"))) ==
+      rowsOf(want))
+  }
+
+  test("serving layout: a store of one file per slot directory reads, merges and compacts into runs") {
+    import graft.online.OnlineStore
+    import graft.offline.VersionedStore
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    // the layout publishes wrote before runs: one file per non-empty
+    // slot in a hidden slot=N/ directory, a manifest with per-file
+    // bucket ranges and no recorded layout
+    val vectors = (0 until 256)
+      .map(i => (s"u$i", i.toDouble)).toDF("entity_id", "f_a")
+    val root = java.nio.file.Files
+      .createTempDirectory("slotdirs").toString + "/snap"
+    val kb = "_kb_entity_id_32"
+    val bucketed = vectors
+      .withColumn(kb, pmod(xxhash64(col("entity_id").cast("string")), lit(32L)))
+    bucketed.withColumn("slot", (col(kb) * 8 / 32).cast("int"))
+      .repartition(col("slot")).sortWithinPartitions(kb)
+      .write.partitionBy("slot").parquet(s"$root/data/old")
+    val files = parquetOnDisk(s"$root/data").toSeq.sorted
+      .map(_.stripPrefix(s"$root/"))
+    assert(files.size == 8 && files.forall(_.contains("/slot=")))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifest = mapper.createObjectNode()
+    manifest.put("version", 0L).put("op", "overwrite")
+      .put("rows", 256L).put("schema", bucketed.schema.json).put("ts", 0L)
+    val names = manifest.putArray("files")
+    val stats = manifest.putObject("stats")
+    files.foreach { f =>
+      names.add(f)
+      val r = spark.read.parquet(s"$root/$f")
+        .agg(org.apache.spark.sql.functions.min(kb),
+          org.apache.spark.sql.functions.max(kb)).head()
+      stats.putObject(f).putArray(kb).add(r.getLong(0).toDouble)
+        .add(r.getLong(1).toDouble)
+    }
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "_graft_log"))
+    mapper.writeValue(new java.io.File(s"$root/_graft_log/v00000000.json"), manifest)
+    // reads
+    assert(rowsOf(VersionedStore.read(spark, root).drop(kb)) == rowsOf(vectors))
+    val some = Seq("u7", "u8", "u200").toDF("entity_id")
+    assert(rowsOf(OnlineStore.pointLookup(spark, root, some)) ==
+      rowsOf(OnlineStore.batchLookup(vectors, some)))
+    // merges: pruned by the recorded ranges, no layout recorded
+    val v1 = OnlineStore.upsertSnapshot(Seq(("u7", -1.0)).toDF("entity_id", "f_a"), root)
+    val kept = VersionedStore.read(spark, root, v1).inputFiles
+    assert(kept.count(_.contains("/slot=")) == 7)
+    // compacts into runs, then keeps them
+    val v2 = OnlineStore.compactSnapshot(spark, root, numFiles = 8)
+    assert(v2 == v1 + 1)
+    assertLaidOut(root, kb, 32, 8)
+    assert(!VersionedStore.read(spark, root).inputFiles.exists(_.contains("/slot=")))
+    assert(OnlineStore.compactSnapshot(spark, root, numFiles = 8) == v2)
     val want = vectors.where(col("entity_id") =!= "u7")
       .unionByName(Seq(("u7", -1.0)).toDF("entity_id", "f_a"))
     assert(rowsOf(OnlineStore.pointLookup(spark, root, want.select("entity_id"))) ==
